@@ -80,14 +80,6 @@ def scale_and_round_bbox(bbox, scale_factor: float, width: int, height: int):
     return scaled, (left, top, right, bottom)
 
 
-def crop_table(page_resized: np.ndarray, bbox, scale_factor: float = 1.0):
-    """P2: slice the resized page at the scaled/rounded/clipped bbox."""
-    _, (left, top, right, bottom) = scale_and_round_bbox(
-        bbox, scale_factor, page_resized.shape[1], page_resized.shape[0]
-    )
-    return page_resized[top:bottom, left:right]
-
-
 def tensorize(crop: np.ndarray, mean, std, resized_size: int = 448) -> np.ndarray:
     """P3: bilinear resize to NxN (float path), clip, /255, per-channel
     normalize, (c, w, h) transpose, batch of 1, float32."""

@@ -95,11 +95,6 @@ def pad_to_square(tags, pad_tag):
     return out
 
 
-def count_cells(tags):
-    """Number of cell-opening tags in an OTSL stream."""
-    return sum(1 for t in tags if t in CELL_TAGS)
-
-
 # Stop-lists for the span walkers (otsl.py:102,115).  The walkers stop
 # only on these tags — any OTHER token (lcel/xcel, but also non-OTSL
 # garbage in a malformed stream) is walked THROUGH and counted into the

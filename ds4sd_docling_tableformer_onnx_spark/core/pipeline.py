@@ -92,12 +92,7 @@ def extract_turn(payload, correct_overlapping_cells=False, sort_row_col_indexes=
     sync, bboxes = check_bbox_sync(prediction["html_seq"], prediction["bboxes"])
     prediction["bboxes"] = bboxes
 
-    tf_responses = []
-    details = {
-        "table_cells": [],
-        "matches": {},
-        "pdf_cells": pdf_cells,
-    }
+    tf_responses, table_cells, matches = [], [], {}
     if prediction["bboxes"]:
         bboxes_page = translate_bboxes(table_bbox, prediction["bboxes"])
         table_cells = build_table_cells(
@@ -108,25 +103,17 @@ def extract_turn(payload, correct_overlapping_cells=False, sort_row_col_indexes=
         )
         if do_matching:
             matches, _ = intersection_over_pdf_match(table_cells, pdf_cells)
-            details = {
-                "table_cells": table_cells,
-                "matches": matches,
-                "pdf_cells": pdf_cells,
-            }
-            if pdf_cells:
-                details = post_process(details, correct_overlapping_cells)
-            docling = matched_response(details["table_cells"], details["matches"])
+            details = post_process(
+                {"table_cells": table_cells, "matches": matches, "pdf_cells": pdf_cells},
+                correct_overlapping_cells,
+            )
+            table_cells, matches = details["table_cells"], details["matches"]
+            docling = matched_response(table_cells, matches)
             docling.sort(key=lambda c: c["cell_id"])
             tf_responses = merge_output(docling, details["pdf_cells"])
         else:
-            details = {
-                "table_cells": table_cells,
-                "matches": {},
-                "pdf_cells": pdf_cells,
-            }
-            docling = dummy_response(table_cells)
-            docling.sort(key=lambda c: c["cell_id"])
-            tf_responses = docling
+            tf_responses = dummy_response(table_cells)
+            tf_responses.sort(key=lambda c: c["cell_id"])
 
     if sort_row_col_indexes:
         # parity: with re-indexing on, counts derive from the response
@@ -143,8 +130,8 @@ def extract_turn(payload, correct_overlapping_cells=False, sort_row_col_indexes=
         "html_seq": prediction["html_seq"],
         "num_cols": num_cols,
         "num_rows": num_rows,
-        "n_cells": len(details["table_cells"]),
-        "n_matches": len(details["matches"]),
+        "n_cells": len(table_cells),
+        "n_matches": len(matches),
         "bbox_sync": sync,
         "square": square,
         "matched": do_matching,

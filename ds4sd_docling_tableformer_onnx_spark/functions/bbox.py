@@ -1,9 +1,9 @@
-"""Bounding-box column expressions (SURVEY §2.8 F6-F8).
+"""Bounding-box column expressions (SURVEY §2.8 F7-F8).
 
 Columnar re-expressions of the reference's bbox scalar math
-(tf_cell_matcher.py:56-81 intersection, utils.py:207-257 cxcywh/area/iou,
-tf_predictor.py:366-369 clip) for use when cell geometry is held in
-DataFrame columns rather than inside a batched UDF.  Boxes are 4-element
+(tf_cell_matcher.py:56-81 intersection, utils.py:207-257 cxcywh/area/iou)
+for use when cell geometry is held in DataFrame columns rather than
+inside a batched UDF.  Boxes are 4-element
 ``array<double>`` columns ``[x1, y1, x2, y2]``.
 """
 
@@ -53,39 +53,9 @@ def iopdf(a, probe):
     )
 
 
-def overlap_predicate(a, b):
-    """Strict open-interval overlap test — the J1/J5 join predicate."""
-    return (
-        (_c(a, 0) < _c(b, 2))
-        & (_c(b, 0) < _c(a, 2))
-        & (_c(a, 1) < _c(b, 3))
-        & (_c(b, 1) < _c(a, 3))
-    )
-
-
-def clip_unit(box):
-    """Clip every coordinate to [0, 1] (F6, tf_predictor.py:366-369)."""
-    from pyspark.sql import functions as F
-
-    return F.transform(box, lambda v: F.greatest(F.lit(0.0), F.least(F.lit(1.0), v)))
-
-
 def cxcywh_to_xyxy(box):
     """Center-format to corner-format (utils.py:207-210)."""
     from pyspark.sql import functions as F
 
     cx, cy, w, h = _c(box, 0), _c(box, 1), _c(box, 2), _c(box, 3)
     return F.array(cx - w / 2, cy - h / 2, cx + w / 2, cy + h / 2)
-
-
-def merge_boxes(a, b):
-    """Union (enclosing) box of two boxes (A7,
-    matching_post_processor.py:715-736)."""
-    from pyspark.sql import functions as F
-
-    return F.array(
-        F.least(_c(a, 0), _c(b, 0)),
-        F.least(_c(a, 1), _c(b, 1)),
-        F.greatest(_c(a, 2), _c(b, 2)),
-        F.greatest(_c(a, 3), _c(b, 3)),
-    )

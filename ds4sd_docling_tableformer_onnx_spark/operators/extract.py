@@ -3,7 +3,7 @@
 Scale design (the part that must survive 10^12 turns / 1000 executors):
 
 - **Narrow, shuffle-free map stage.** Per-turn extraction is
-  embarrassingly parallel, so it runs as ``mapInPandas`` directly over
+  embarrassingly parallel, so it runs as ``mapInArrow`` directly over
   the scan — no shuffle, no grouping.  Catalyst prunes the input to the
   four columns the UDF declares (conv_id, turn_idx, text, tool); filter
   pushdown on conv_id/ts reaches the parquet/Iceberg scan untouched.
@@ -27,24 +27,41 @@ import hashlib
 import json
 from typing import Iterator
 
+import pyarrow as pa
+
 from ..functions.keys import payload_key_col, payload_key_py
 
-OUTPUT_SCHEMA = (
-    "conv_id string, turn_idx int, payload_id int, ok boolean, err string, "
-    "num_rows int, num_cols int, n_cells int, n_matches int, "
-    "bbox_sync boolean, square boolean, matched boolean, "
-    "rs_seq array<string>, html_seq array<string>, "
-    "html_sha256 string, tf_responses_json string, "
-    "payload_sha256 string"
+# The worker's output contract, in column order: name, Arrow type, and
+# the value a malformed turn's error row carries.  conv_id/turn_idx pass
+# through from the input batch and payload_sha256 is computed for every
+# row, so their third entry is never used; an error row's ``err`` is the
+# exception text.
+OUTPUT_COLUMNS = (
+    ("conv_id", pa.string(), None),
+    ("turn_idx", pa.int32(), None),
+    ("payload_id", pa.int32(), -1),
+    ("ok", pa.bool_(), False),
+    ("err", pa.string(), None),
+    ("num_rows", pa.int32(), 0),
+    ("num_cols", pa.int32(), 0),
+    ("n_cells", pa.int32(), 0),
+    ("n_matches", pa.int32(), 0),
+    ("bbox_sync", pa.bool_(), False),
+    ("square", pa.bool_(), False),
+    ("matched", pa.bool_(), False),
+    ("rs_seq", pa.list_(pa.string()), []),
+    ("html_seq", pa.list_(pa.string()), []),
+    ("html_sha256", pa.string(), None),
+    ("tf_responses_json", pa.string(), "[]"),
+    ("payload_sha256", pa.string(), None),
 )
-
-# lean variant: hashes + metrics only (for throughput-critical passes
-# where the full grids live in the checkpoint table of a later stage)
-LEAN_SCHEMA = (
-    "conv_id string, turn_idx int, payload_id int, ok boolean, err string, "
-    "num_rows int, num_cols int, n_cells int, n_matches int, "
-    "bbox_sync boolean, square boolean, matched boolean, "
-    "html_sha256 string, tf_responses_sha256 string, payload_sha256 string"
+OUTPUT_ARROW_SCHEMA = pa.schema([(name, type_) for name, type_, _ in OUTPUT_COLUMNS])
+_PASS_THROUGH = ("conv_id", "turn_idx")
+# (name, error-row value) of the columns each turn's extraction fills
+_PER_TURN = tuple(
+    (name, error_value)
+    for name, _, error_value in OUTPUT_COLUMNS
+    if name not in (*_PASS_THROUGH, "payload_sha256")
 )
 
 
@@ -70,168 +87,100 @@ def _json_str_list(seq):
     return "[" + ", ".join(parts) + "]"
 
 
-def _extract_batches(batches: Iterator, correct_overlapping_cells: bool, lean: bool = False):
-    """Arrow-batch worker: consumes pyarrow RecordBatches, yields typed
-    RecordBatches (mapInArrow — measured ~30% faster than the pandas
-    bridge for this string-heavy output).
+def _extract_batches(batches: Iterator, correct_overlapping_cells: bool):
+    """Arrow-batch worker: consumes pyarrow RecordBatches, yields
+    RecordBatches of ``OUTPUT_ARROW_SCHEMA`` (mapInArrow — measured ~30%
+    faster than the pandas bridge for this string-heavy output).
 
     The cyclic GC is suspended for the duration of the task: the per-turn
     pipeline churns acyclic dicts/lists that refcounting frees instantly,
     so generational collection walks ever-growing survivor sets for
     nothing (pinned-core A/B: +11-13% turns/s; functions/gcctl.py)."""
-    import pyarrow as pa
-
     from ..core.pipeline import extract_turn
     from ..functions.gcctl import suspended_gc
 
     with suspended_gc():
-        yield from _extract_batches_inner(
-            batches, correct_overlapping_cells, lean, pa, extract_turn
-        )
+        for batch in batches:
+            keys = []
+            columns = [[] for _ in _PER_TURN]
+            for text, tool in zip(
+                batch.column("text").to_pylist(),
+                batch.column("tool").to_pylist(),
+            ):
+                # The shared injective payload key (functions/keys.py):
+                # byte-identical to resume_filter's JVM-side expression, so
+                # a null payload is isolated as an error row (never a task
+                # crash) and checkpoint resume matches it exactly.
+                keys.append(payload_key_py(text, tool))
+                # Per-turn isolation must be exception-safe mid-row: compute
+                # the whole row first, append to the column lists only once
+                # it is complete, so a failure at ANY point (payload parse,
+                # extraction, serialization) yields exactly one error row
+                # and never desyncs the Arrow column lengths.
+                try:
+                    payload = json.loads(text)
+                    context = json.loads(tool)
+                    payload.update(context)
+                    payload_id = context.get("payload_id", -1)
+                    result = extract_turn(
+                        payload, correct_overlapping_cells=correct_overlapping_cells
+                    )
+                    html_json = _json_str_list(result["html_seq"])
+                    values = {
+                        **result,
+                        "payload_id": payload_id,
+                        "ok": True,
+                        "err": None,
+                        "html_sha256": hashlib.sha256(
+                            html_json.encode("utf-8")
+                        ).hexdigest(),
+                        "tf_responses_json": json.dumps(result["tf_responses"]),
+                    }
+                    row = [values[name] for name, _ in _PER_TURN]
+                except Exception as exc:  # per-turn isolation: bad payloads
+                    err = f"{type(exc).__name__}: {exc}"[:500]
+                    row = [err if name == "err" else value for name, value in _PER_TURN]
+                for column, value in zip(columns, row):
+                    column.append(value)
+            per_turn = dict(zip((name for name, _ in _PER_TURN), columns))
+            per_turn["payload_sha256"] = keys
+            yield pa.RecordBatch.from_arrays(
+                [
+                    # identity columns pass through as Arrow arrays untouched
+                    # — no pylist round-trip for data the worker never inspects
+                    batch.column(name).cast(type_)
+                    if name in _PASS_THROUGH
+                    else pa.array(per_turn[name], type_)
+                    for name, type_, _ in OUTPUT_COLUMNS
+                ],
+                schema=OUTPUT_ARROW_SCHEMA,
+            )
 
 
-def _extract_batches_inner(batches, correct_overlapping_cells, lean, pa, extract_turn):
+def _map_extract(df, correct_overlapping_cells: bool):
+    """``df`` (with conv_id, turn_idx, text, tool) through the worker."""
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    payload_cols = (
-        ("html_sha256", "tf_responses_sha256")
-        if lean
-        else ("rs_seq", "html_seq", "html_sha256", "tf_responses_json")
+    return df.mapInArrow(
+        lambda it: _extract_batches(it, correct_overlapping_cells),
+        schema=from_arrow_schema(OUTPUT_ARROW_SCHEMA),
     )
-    for batch in batches:
-        out = {key: [] for key in (
-            "payload_id", "ok", "err", "num_rows",
-            "num_cols", "n_cells", "n_matches", "bbox_sync", "square",
-            "matched", *payload_cols, "payload_sha256",
-        )}
-        for text, tool in zip(
-            batch.column("text").to_pylist(),
-            batch.column("tool").to_pylist(),
-        ):
-            # The shared injective payload key (functions/keys.py):
-            # byte-identical to resume_filter's JVM-side expression, so a
-            # null payload is isolated as an error row (never a task
-            # crash) and checkpoint resume matches it exactly.
-            out["payload_sha256"].append(payload_key_py(text, tool))
-            # Per-turn isolation must be exception-safe mid-row: compute
-            # the whole row first, append to the column lists only once
-            # it is complete, so a failure at ANY point (payload parse,
-            # extraction, serialization) yields exactly one error row and
-            # never desyncs the Arrow column lengths.
-            row = None
-            try:
-                payload = json.loads(text)
-                context = json.loads(tool)
-                payload.update(context)
-                payload_id = context.get("payload_id", -1)
-                result = extract_turn(
-                    payload, correct_overlapping_cells=correct_overlapping_cells
-                )
-                html_json = _json_str_list(result["html_seq"])
-                tf_json = json.dumps(result["tf_responses"])
-                row = {
-                    "payload_id": payload_id,
-                    "ok": True,
-                    "err": None,
-                    "num_rows": result["num_rows"],
-                    "num_cols": result["num_cols"],
-                    "n_cells": result["n_cells"],
-                    "n_matches": result["n_matches"],
-                    "bbox_sync": result["bbox_sync"],
-                    "square": result["square"],
-                    "matched": result["matched"],
-                    "html_sha256": hashlib.sha256(
-                        html_json.encode("utf-8")
-                    ).hexdigest(),
-                }
-                if lean:
-                    row["tf_responses_sha256"] = hashlib.sha256(
-                        tf_json.encode("utf-8")
-                    ).hexdigest()
-                else:
-                    row["rs_seq"] = result["rs_seq"]
-                    row["html_seq"] = result["html_seq"]
-                    row["tf_responses_json"] = tf_json
-            except Exception as exc:  # per-turn isolation: bad payloads
-                row = {
-                    "payload_id": -1,
-                    "ok": False,
-                    "err": f"{type(exc).__name__}: {exc}"[:500],
-                    "num_rows": 0,
-                    "num_cols": 0,
-                    "n_cells": 0,
-                    "n_matches": 0,
-                    "bbox_sync": False,
-                    "square": False,
-                    "matched": False,
-                    "html_sha256": None,
-                }
-                if lean:
-                    row["tf_responses_sha256"] = None
-                else:
-                    row["rs_seq"] = []
-                    row["html_seq"] = []
-                    row["tf_responses_json"] = "[]"
-            for key, value in row.items():
-                out[key].append(value)
-        arrays = {
-            # identity columns pass through as Arrow arrays untouched —
-            # no pylist round-trip for data the worker never inspects
-            "conv_id": batch.column("conv_id").cast(pa.string()),
-            "turn_idx": batch.column("turn_idx").cast(pa.int32()),
-            "payload_id": pa.array(out["payload_id"], pa.int32()),
-            "ok": pa.array(out["ok"], pa.bool_()),
-            "err": pa.array(out["err"], pa.string()),
-            "num_rows": pa.array(out["num_rows"], pa.int32()),
-            "num_cols": pa.array(out["num_cols"], pa.int32()),
-            "n_cells": pa.array(out["n_cells"], pa.int32()),
-            "n_matches": pa.array(out["n_matches"], pa.int32()),
-            "bbox_sync": pa.array(out["bbox_sync"], pa.bool_()),
-            "square": pa.array(out["square"], pa.bool_()),
-            "matched": pa.array(out["matched"], pa.bool_()),
-            "payload_sha256": pa.array(out["payload_sha256"], pa.string()),
-        }
-        if lean:
-            arrays["html_sha256"] = pa.array(out["html_sha256"], pa.string())
-            arrays["tf_responses_sha256"] = pa.array(
-                out["tf_responses_sha256"], pa.string()
-            )
-        else:
-            arrays["rs_seq"] = pa.array(out["rs_seq"], pa.list_(pa.string()))
-            arrays["html_seq"] = pa.array(out["html_seq"], pa.list_(pa.string()))
-            arrays["html_sha256"] = pa.array(out["html_sha256"], pa.string())
-            arrays["tf_responses_json"] = pa.array(
-                out["tf_responses_json"], pa.string()
-            )
-        names = ["conv_id", "turn_idx", *out.keys()]
-        yield pa.RecordBatch.from_arrays([arrays[n] for n in names], names=names)
 
 
-def extract_transcripts(df, correct_overlapping_cells: bool = False, min_parallelism: int | None = None, lean: bool = False):
+def extract_transcripts(df, correct_overlapping_cells: bool = False):
     """transcripts (conv_id, turn_idx, role, text, tool, ts[, payload_id])
     -> per-turn extraction output.  Narrow transformation: column-pruned
-    scan feeding one mapInPandas stage.
+    scan feeding one mapInArrow stage, one output row per input turn.
 
-    The stage is CPU-bound per *row*, while Spark sizes input splits by
-    *bytes* — a highly-compressed scan can bundle into fewer splits than
-    cores and serialize the stage.  When the scan yields fewer partitions
-    than the cluster's parallelism, a cheap round-robin repartition
-    restores it (no-op on well-sized inputs; at petabyte scale the scan
-    naturally produces thousands of splits and no shuffle is added).
+    No repartition is added: input splits are sized by bytes, and on
+    well-laid-out inputs a round-robin shuffle costs more than the
+    imbalance it would fix.
     """
     pruned = df.select("conv_id", "turn_idx", "text", "tool")
-    if min_parallelism is None:
-        min_parallelism = 0  # measured: the repartition shuffle costs more
-        # than the imbalance it fixes on well-laid-out inputs; opt in for
-        # pathological single-file inputs only
-    if min_parallelism and pruned.rdd.getNumPartitions() < min_parallelism:
-        pruned = pruned.repartition(min_parallelism)
-    return pruned.mapInArrow(
-        lambda it: _extract_batches(it, correct_overlapping_cells, lean),
-        schema=LEAN_SCHEMA if lean else OUTPUT_SCHEMA,
-    )
+    return _map_extract(pruned, correct_overlapping_cells)
 
 
-def extract_transcripts_deduped(df, correct_overlapping_cells: bool = False, lean: bool = False, broadcast_threshold: int | None = 100_000):
+def extract_transcripts_deduped(df, correct_overlapping_cells: bool = False, broadcast_threshold: int | None = 100_000):
     """Dedup-aware extraction: run the (expensive) per-turn pipeline
     once per DISTINCT payload, then join results back to every turn.
 
@@ -292,10 +241,7 @@ def extract_transcripts_deduped(df, correct_overlapping_cells: bool = False, lea
         "tool",
     )
     extracted = (
-        carrier.mapInArrow(
-            lambda it: _extract_batches(it, correct_overlapping_cells, lean),
-            schema=LEAN_SCHEMA if lean else OUTPUT_SCHEMA,
-        )
+        _map_extract(carrier, correct_overlapping_cells)
         .withColumnRenamed("conv_id", "dedup_key")
         .drop("turn_idx")
     )

@@ -105,13 +105,21 @@ def write_checkpoint(df, path: str, run_id: str, stage: str):
 
 
 def read_checkpoint(spark, path: str):
+    """The checkpoint table, or ``None`` when it does not exist yet.
+    Any other read error (an unreadable part file, say) raises: read as
+    "no checkpoint", it would make resume re-extract and append every
+    turn."""
+    from pyspark.errors import AnalysisException
+
     if is_table_target(path, spark):
         _require_catalog(spark, path)
         return spark.table(path) if spark.catalog.tableExists(path) else None
     try:
         return spark.read.parquet(path)
-    except Exception:
-        return None
+    except AnalysisException as exc:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def resume_filter(input_df, spark, checkpoint_path: str, count_skipped: bool = True):
@@ -174,6 +182,8 @@ def run_with_checkpoint(
 ):
     """Extraction with resume: skip checkpointed turns, extract the rest,
     append to the checkpoint, return (new_rows_df, skipped_count)."""
+    from pyspark.sql import functions as F
+
     from ..operators.extract import extract_transcripts
 
     remaining, skipped = resume_filter(transcripts_df, spark, checkpoint_path)
@@ -182,4 +192,4 @@ def run_with_checkpoint(
     )
     write_checkpoint(extracted, checkpoint_path, run_id, stage="extract")
     done = read_checkpoint(spark, checkpoint_path)
-    return done.where(f"run_id = '{run_id}'"), skipped
+    return done.where(F.col("run_id") == run_id), skipped

@@ -16,7 +16,7 @@ Stages:
 
 from __future__ import annotations
 
-from .checkpoint import resume_filter, with_lineage
+from .checkpoint import read_checkpoint, resume_filter, with_lineage, write_checkpoint
 
 
 def run_staged_extraction(spark, transcripts_df, base_path: str, run_id: str):
@@ -40,10 +40,8 @@ def run_staged_extraction(spark, transcripts_df, base_path: str, run_id: str):
     # stage 1: extraction (resume: only un-checkpointed turns run)
     remaining, skipped = resume_filter(transcripts_df, spark, extract_path)
     extracted_new = extract_transcripts(remaining)
-    with_lineage(extracted_new, run_id, "extract").write.mode("append").parquet(
-        extract_path
-    )
-    extracted = spark.read.parquet(extract_path)
+    write_checkpoint(extracted_new, extract_path, run_id, "extract")
+    extracted = read_checkpoint(spark, extract_path)
 
     # stage 2: relational cell table (rebuilt from the stage-1 checkpoint,
     # exactly as the reference's cell_matching stage re-loads the

@@ -92,17 +92,3 @@ def generate_transcripts(
     if shuffle:
         out = out.repartition(64, F.xxhash64("conv_id", "turn_idx"))
     return out
-
-
-def write_transcripts(df, path: str, partitions: int | None = None):
-    """Persist transcripts as parquet (stands in for the Iceberg table;
-    on a cluster this would be ``writeTo(...).using("iceberg")`` with
-    bucket(conv_id) partitioning)."""
-    writer = df
-    if partitions:
-        writer = df.repartition(partitions)
-    writer.write.mode("overwrite").parquet(path)
-
-
-def read_transcripts(spark, path: str):
-    return spark.read.parquet(path)

@@ -45,6 +45,8 @@ def main(argv=None):
     )
     args = parser.parse_args(argv)
 
+    from pyspark.sql import functions as F
+
     from ds4sd_docling_tableformer_onnx_spark.plans.checkpoint import (
         partition_metrics,
         run_with_checkpoint,
@@ -71,7 +73,7 @@ def main(argv=None):
         stages = run_staged_extraction(
             spark, transcripts, args.staged_base, run_id=args.run_id
         )
-        new_rows = stages["extract"].where(f"run_id = '{args.run_id}'")
+        new_rows = stages["extract"].where(F.col("run_id") == args.run_id)
         skipped = stages["skipped"]
     else:
         new_rows, skipped = run_with_checkpoint(

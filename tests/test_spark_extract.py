@@ -75,6 +75,85 @@ def test_malformed_payload_is_isolated(spark):
     assert out[1]["ok"] is True and out[1]["num_rows"] == 1
 
 
+# The worker's output contract, written out literally so that a change
+# to the column table in operators/extract.py cannot pass unnoticed.
+OUTPUT_DDL = (
+    "conv_id string, turn_idx int, payload_id int, ok boolean, err string, "
+    "num_rows int, num_cols int, n_cells int, n_matches int, "
+    "bbox_sync boolean, square boolean, matched boolean, "
+    "rs_seq array<string>, html_seq array<string>, "
+    "html_sha256 string, tf_responses_json string, "
+    "payload_sha256 string"
+)
+
+
+def test_output_schema_and_error_row_contract(spark):
+    from pyspark.sql.types import StructType
+
+    from ds4sd_docling_tableformer_onnx_spark.functions.keys import payload_key_py
+
+    df = spark.createDataFrame(
+        [("c1", 3, "user", '{"broken', "{}", None)],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    out = extract_transcripts(df)
+    assert out.schema == StructType.fromDDL(OUTPUT_DDL)
+
+    (row,) = out.collect()
+    err = row["err"]
+    assert err.startswith("JSONDecodeError: ")
+    assert row.asDict() == {
+        "conv_id": "c1",
+        "turn_idx": 3,
+        "payload_id": -1,
+        "ok": False,
+        "err": err,
+        "num_rows": 0,
+        "num_cols": 0,
+        "n_cells": 0,
+        "n_matches": 0,
+        "bbox_sync": False,
+        "square": False,
+        "matched": False,
+        "rs_seq": [],
+        "html_seq": [],
+        "html_sha256": None,
+        "tf_responses_json": "[]",
+        "payload_sha256": payload_key_py('{"broken', "{}"),
+    }
+
+
+def test_unreadable_checkpoint_raises_before_appending(spark, tmp_path):
+    """Only a missing checkpoint means "nothing done yet": a checkpoint
+    whose part file cannot be read must fail the run before any turn is
+    re-extracted and appended."""
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    bad = ckpt / "part-00000-unreadable.snappy.parquet"
+    bad.write_bytes(b"not a parquet file")
+    df = generate_transcripts(spark, n_turns=20, n_convs=2, seed=4)
+
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run_with_checkpoint(spark, df, str(ckpt), run_id="r1")
+    assert list(ckpt.iterdir()) == [bad]
+
+
+def test_run_id_with_quote_returns_its_own_rows(spark, tmp_path):
+    path = str(tmp_path / "ckpt")
+    df = generate_transcripts(spark, n_turns=40, n_convs=4, seed=11)
+    first_half = df.where("turn_idx % 2 = 0")
+    n_first = first_half.count()
+
+    first, _ = run_with_checkpoint(spark, first_half, path, run_id="o'brien")
+    assert first.count() == n_first
+    second, skipped = run_with_checkpoint(spark, df, path, run_id="o'brien's rerun")
+    assert skipped == n_first
+    assert second.count() == 40 - n_first
+    assert [r["run_id"] for r in second.select("run_id").distinct().collect()] == [
+        "o'brien's rerun"
+    ]
+
+
 def test_checkpoint_resume_is_idempotent(spark, tmp_path):
     path = str(tmp_path / "ckpt")
     df = generate_transcripts(spark, n_turns=100, n_convs=5, seed=3)

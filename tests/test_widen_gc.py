@@ -3,6 +3,8 @@ scan widening rule (queries._widen) and the cyclic-GC suspension helper
 (functions/gcctl.suspended_gc)."""
 
 import gc
+import inspect
+import os
 
 from ds4sd_docling_tableformer_onnx_spark.functions.gcctl import suspended_gc
 from ds4sd_docling_tableformer_onnx_spark.queries import _read, _widen
@@ -14,9 +16,12 @@ def test_widen_is_byte_proportional_and_capped(spark):
     docs = _read(spark, SF, "documents")  # ~65 KB single-row-group file
     parallelism = spark.sparkContext.defaultParallelism
 
-    # default 56 KB/part: a 65 KB scan widens to exactly 2 partitions,
-    # not to full parallelism
-    assert _widen(docs).rdd.getNumPartitions() == 2
+    # default bytes_per_part: one partition per that many scan bytes
+    # (56 KB: a 65 KB scan widens to 2), capped at parallelism
+    per_part = inspect.signature(_widen).parameters["bytes_per_part"].default
+    scan_bytes = os.path.getsize(os.path.join(SF, "documents.parquet"))
+    expected = min(parallelism, -(-scan_bytes // per_part))
+    assert _widen(docs).rdd.getNumPartitions() == expected
 
     # a coarser bytes_per_part than the file leaves the scan untouched
     assert _widen(docs, bytes_per_part=1 << 20) is docs
