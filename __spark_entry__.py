@@ -17,21 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ds4sd_docling_tableformer_onnx_spark.queries import ORACLES, QUERIES
 
-_SF_TURNS = {  # deterministic transcript sizes per scale factor
-    "sf0.001": 500,
-    "sf0.01": 5_000,
-    "sf0.1": 50_000,
-}
+_ENTRY_TURNS = 500  # deterministic transcript size of the flagship smoke run
 
 
-def _turns_for(sf_dir: str) -> int:
-    for key, n in _SF_TURNS.items():
-        if key in sf_dir:
-            return n
-    return 2_000
-
-
-def _extraction_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _extraction_pipeline(spark: SparkSession) -> DataFrame:
     """Flagship: generate transcripts, extract every turn, verify each
     turn's HTML structure tokens against the reference fixtures."""
     from pyspark.sql import functions as F
@@ -45,7 +34,7 @@ def _extraction_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         payload_pool_df,
     )
 
-    transcripts = generate_transcripts(spark, n_turns=_turns_for(sf_dir), seed=42)
+    transcripts = generate_transcripts(spark, n_turns=_ENTRY_TURNS, seed=42)
     verified = verify_against_pool(
         extract_transcripts(transcripts), payload_pool_df(spark)
     )
@@ -64,8 +53,8 @@ def _extraction_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query at sf0.001 (driver smoke check: rows > 0)."""
-    return _extraction_pipeline(spark, "/root/testdata/sf0.001")
+    """Flagship query over _ENTRY_TURNS turns (driver smoke check: rows > 0)."""
+    return _extraction_pipeline(spark)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,12 +1,23 @@
-"""The ONE deterministic mixture-sampling predicate.
+"""The ONE definition of every curation stage that the curate job
+(jobs/curate_job.py) and the oracle queries (queries.py) share, so no
+stage can drift between the job and what its DuckDB oracle checks:
 
-Shared by the oracle query (queries.py: ``mixture_sample``) and the
-curation job (jobs/curate_job.py) so the sampler's determinism
-discipline — md5-hash uniform, INTEGER thresholds, RNG-free and
-therefore retry/engine-stable (CLAUDE.md invariant) — has a single
-definition that cannot drift.
+- :func:`u32_md5` — the md5-derived uniform every sampler hashes with;
+- :func:`mixture_keep` — the deterministic mixture sample
+  (``mixture_sample``);
+- :func:`quota_rank_per_group` — skew-safe keep-at-most-N per group
+  (``source_quota_sample``, ``stratified_sample``, curate's
+  ``source_quota``);
+- :func:`holdout_split` — the leakage-safe train/holdout split on the
+  near-dup group id (``cluster_split``);
+- :func:`pack_sequences` — two-phase greedy sequence packing
+  (``pack_sequences``).
 
-Rule: source ``srcK`` keeps a document at rate 1 / 2^(K mod 4),
+Every sampler keeps the same determinism discipline — md5-hash
+uniform, INTEGER thresholds, RNG-free and therefore
+retry/engine-stable (CLAUDE.md invariant).
+
+Mixture rule: source ``srcK`` keeps a document at rate 1 / 2^(K mod 4),
 decided by the first 32 bits of md5(doc_id) against an integer
 threshold (2^32 >> (K mod 4)).  The DuckDB oracle replicates the same
 arithmetic verbatim.
@@ -85,7 +96,10 @@ def ring_sql(count_sql: str, expect: int) -> str:
     )"""
 
 
-def quota_rank_per_group(df, group_col: str, *, n: int, salts: int, id_col: str = "doc_id"):
+_QUOTA_SALTS = 8
+
+
+def quota_rank_per_group(df, group_col: str, *, n: int, id_col: str = "doc_id"):
     """Skew-safe keep-at-most-``n``-rows-per-group: rows ranked by
     (u32_md5(id), id), smallest first, annotated with ``quota_rank``
     (1..n) and filtered to the survivors.
@@ -93,18 +107,18 @@ def quota_rank_per_group(df, group_col: str, *, n: int, salts: int, id_col: str 
     A single ``row_number() OVER (PARTITION BY group)`` funnels every
     row of a hot group through ONE task — a mega-domain straggler at
     corpus scale.  Two phases instead: rank within (group, salt) —
-    ``salts``-way parallel even for one group — keep <=n per bucket,
-    then re-rank the <=n*salts bounded survivors per group.  A row in
-    the true global top-n has at most n-1 bucket-mates ahead of it, so
-    it always survives phase 1 together with all its predecessors;
-    phase-2 rank therefore EQUALS the one-window global rank (asserted
-    against the naive window in tests, and what the one-window DuckDB
-    oracle computes)."""
+    ``_QUOTA_SALTS``-way parallel even for one group — keep <=n per
+    bucket, then re-rank the <=n*_QUOTA_SALTS bounded survivors per
+    group.  A row in the true global top-n has at most n-1 bucket-mates
+    ahead of it, so it always survives phase 1 together with all its
+    predecessors; phase-2 rank therefore EQUALS the one-window global
+    rank (asserted against the naive window in tests, and what the
+    one-window DuckDB oracle computes)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     h = u32_md5(id_col)
-    ranked = df.withColumn("_h", h).withColumn("_salt", h % salts)
+    ranked = df.withColumn("_h", h).withColumn("_salt", h % _QUOTA_SALTS)
     local = Window.partitionBy(group_col, "_salt").orderBy("_h", id_col)
     survivors = ranked.withColumn("_lr", F.row_number().over(local)).where(
         F.col("_lr") <= n
@@ -115,6 +129,88 @@ def quota_rank_per_group(df, group_col: str, *, n: int, salts: int, id_col: str 
         .where(F.col("quota_rank") <= n)
         .drop("_h", "_salt", "_lr")
     )
+
+
+def holdout_split(group_col: str):
+    """String Column: 'holdout' when u32_md5(group) % 10 == 0 (~10% of
+    groups), else 'train'.  Hashing the near-dup GROUP id, not the doc
+    id, lands a whole component on one side, so no holdout doc has a
+    near-dup in train."""
+    from pyspark.sql import functions as F
+
+    return F.when(u32_md5(group_col) % 10 == 0, F.lit("holdout")).otherwise(
+        F.lit("train")
+    )
+
+
+_PACK_RANGES = 16
+
+
+def pack_sequences(df, max_seq_len: int):
+    """Greedy packing of (doc_id, n_tokens, ...) rows, in doc_id order,
+    into sequences of ``max_seq_len`` tokens; documents may straddle a
+    sequence boundary.  Returns (packed, total_tokens): ``packed`` is
+    the input columns followed by ``start_seq``, ``offset_in_seq`` and
+    ``spans``.
+
+    Two-phase prefix sums, no global window: ``repartitionByRange``
+    (sampled splits of the ACTUAL id distribution, so ranges stay
+    balanced even when dedup and sampling carved holes in the id space)
+    -> per-range token totals collected to the driver (<= _PACK_RANGES
+    rows) -> exclusive offsets -> a running-sum window bounded by one
+    range.  The eager ``localCheckpoint`` FREEZES the range assignment:
+    the sampling pass is not guaranteed stable across jobs, and the
+    totals collect and the caller's action are separate jobs — without
+    it a boundary doc could change ranges between them and every offset
+    in its range would silently shift.  It also means ``packed`` reads
+    only the checkpoint, never ``df``, so a caller may release cached
+    inputs before acting on it.  On a cluster use checkpoint()/a
+    staging table, same call site."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    ranked = (
+        df.repartitionByRange(_PACK_RANGES, "doc_id")
+        .withColumn("rng", F.spark_partition_id().cast("long"))
+        .localCheckpoint()
+    )
+    totals = {
+        r["rng"]: r["tot"]
+        for r in ranked.groupBy("rng").agg(F.sum("n_tokens").alias("tot")).collect()
+    }
+    offsets, acc = {}, 0
+    for rng in sorted(totals):
+        offsets[rng] = acc
+        acc += totals[rng]
+    off_df = F.broadcast(
+        df.sparkSession.createDataFrame(
+            [(int(k), int(v)) for k, v in offsets.items()] or [(0, 0)],
+            "rng long, off long",
+        )
+    )
+    win = (
+        Window.partitionBy("rng")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    before = F.coalesce(F.sum("n_tokens").over(win), F.lit(0)) + F.col("off")
+    packed = (
+        ranked.join(off_df, "rng")
+        .withColumn("before", before)
+        .select(
+            *df.columns,
+            F.floor(F.col("before") / max_seq_len).cast("long").alias("start_seq"),
+            (F.col("before") % max_seq_len).cast("long").alias("offset_in_seq"),
+            (
+                F.floor((F.col("before") + F.col("n_tokens") - 1) / max_seq_len)
+                - F.floor(F.col("before") / max_seq_len)
+                + 1
+            )
+            .cast("long")
+            .alias("spans"),
+        )
+    )
+    return packed, acc
 
 
 def sqrt_rebalance_thresholds(counts: dict[str, int]) -> dict[str, int]:

@@ -122,7 +122,7 @@ def read_checkpoint(spark, path: str):
         raise
 
 
-def resume_filter(input_df, spark, checkpoint_path: str, count_skipped: bool = True):
+def resume_filter(input_df, spark, checkpoint_path: str):
     """Drop turns already present in the checkpoint (matched on conv_id,
     turn_idx and the payload hash, so changed payloads re-run).
 
@@ -132,8 +132,7 @@ def resume_filter(input_df, spark, checkpoint_path: str, count_skipped: bool = T
 
     ``skipped`` is the number of INPUT rows dropped as already done (a
     changed payload hashes differently, so it counts as not-done and
-    re-runs).  Counting it costs one extra pass over the input; pass
-    ``count_skipped=False`` at petabyte scale to skip the accounting.
+    re-runs).  Counting it costs one extra pass over the input.
 
     The key is the shared injective payload key (functions/keys.py) —
     the same expression the extraction worker stores, so the anti-join
@@ -149,9 +148,7 @@ def resume_filter(input_df, spark, checkpoint_path: str, count_skipped: bool = T
     done_keys = done.select("conv_id", "turn_idx", "payload_sha256").dropDuplicates()
     hashed = input_df.withColumn("payload_sha256", payload_key_col("text", "tool"))
     remaining = hashed.join(done_keys, list(CHECKPOINT_KEYS), "left_anti")
-    skipped = 0
-    if count_skipped:
-        skipped = hashed.join(done_keys, list(CHECKPOINT_KEYS), "left_semi").count()
+    skipped = hashed.join(done_keys, list(CHECKPOINT_KEYS), "left_semi").count()
     return remaining.drop("payload_sha256"), skipped
 
 

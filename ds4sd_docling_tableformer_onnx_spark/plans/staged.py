@@ -16,7 +16,7 @@ Stages:
 
 from __future__ import annotations
 
-from .checkpoint import read_checkpoint, resume_filter, with_lineage, write_checkpoint
+from .checkpoint import read_checkpoint, run_with_checkpoint, with_lineage
 
 
 def run_staged_extraction(spark, transcripts_df, base_path: str, run_id: str):
@@ -26,7 +26,6 @@ def run_staged_extraction(spark, transcripts_df, base_path: str, run_id: str):
     Idempotent: re-running with the same inputs extracts nothing new and
     rebuilds downstream stages from the checkpoint tables.
     """
-    from ..operators.extract import extract_transcripts
     from ..operators.relational import (
         conversation_documents,
         dense_reindex_cells,
@@ -37,10 +36,9 @@ def run_staged_extraction(spark, transcripts_df, base_path: str, run_id: str):
     cells_path = f"{base_path}/stage=cells"
     convdocs_path = f"{base_path}/stage=convdocs"
 
-    # stage 1: extraction (resume: only un-checkpointed turns run)
-    remaining, skipped = resume_filter(transcripts_df, spark, extract_path)
-    extracted_new = extract_transcripts(remaining)
-    write_checkpoint(extracted_new, extract_path, run_id, "extract")
+    # stage 1: extraction (resume: only un-checkpointed turns run);
+    # stages 2 and 3 read the whole checkpoint, earlier runs included
+    _, skipped = run_with_checkpoint(spark, transcripts_df, extract_path, run_id)
     extracted = read_checkpoint(spark, extract_path)
 
     # stage 2: relational cell table (rebuilt from the stage-1 checkpoint,

@@ -37,7 +37,7 @@ def _read(spark, sf_dir, table):
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
-def _widen(df, min_bytes: int = 0, bytes_per_part: int = 56 << 10):
+def _widen(df, bytes_per_part: int = 56 << 10):
     """Scale-adaptive scan widening for queries whose map side does
     heavy per-row expression work (gram hashing, fingerprinting, text
     shingling): when the scan produced fewer partitions than the
@@ -48,12 +48,6 @@ def _widen(df, min_bytes: int = 0, bytes_per_part: int = 56 << 10):
     guide's rule that partitioning must derive from input size, not a
     constant.  Only used by queries whose aggregates are exact-integer
     or per-row (partition order never reaches a float sum).
-
-    ``min_bytes``: additionally require at least this much underlying
-    file data before widening — for operators whose per-byte map cost
-    only beats the repartition overhead above a certain input size
-    (measured per call site), the gate derives from the scan's actual
-    bytes, never from a fixed scale factor.
 
     ``bytes_per_part``: widen PROPORTIONALLY to the scan's bytes (one
     partition per this many file bytes, capped at the session
@@ -75,25 +69,22 @@ def _widen(df, min_bytes: int = 0, bytes_per_part: int = 56 << 10):
     current = df.rdd.getNumPartitions()
     if current >= target:
         return df
-    if min_bytes or bytes_per_part:
-        import os
-        from urllib.parse import urlparse
+    import os
+    from urllib.parse import urlparse
 
-        total = None
-        for uri in df.inputFiles():
-            path = urlparse(uri).path or uri
-            try:
-                total = (total or 0) + os.path.getsize(path)
-            except OSError:
-                total = None  # non-local storage: assume big
-                break
-        if min_bytes and total is not None and total < min_bytes:
+    total = None
+    for uri in df.inputFiles():
+        path = urlparse(uri).path or uri
+        try:
+            total = (total or 0) + os.path.getsize(path)
+        except OSError:
+            total = None  # non-local storage: assume big
+            break
+    if total is not None:
+        # unknown size (total None) keeps full parallelism
+        target = min(target, max(1, -(-total // bytes_per_part)))
+        if current >= target:
             return df
-        if bytes_per_part and total is not None:
-            # unknown size (total None) keeps full parallelism
-            target = min(target, max(1, -(-total // bytes_per_part)))
-            if current >= target:
-                return df
     return df.repartition(target)
 
 
@@ -2698,74 +2689,22 @@ _register(
 # ---------------------------------------------------------------------------
 
 _PACK_LEN = 2048
-_PACK_RANGES = 16
 
 
 def q_pack_sequences(spark, sf_dir):
     """(doc_id, n_tokens, start_seq, offset_in_seq, spans) under greedy
-    packing into sequences of 2048 tokens, doc_id order."""
-    from pyspark.sql import Window
+    packing into sequences of 2048 tokens, doc_id order — the ONE
+    shared packer (functions/sampling.pack_sequences), also the curate
+    job's packing stage."""
     from pyspark.sql import functions as F
+
+    from .functions.sampling import pack_sequences
 
     docs = _read(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.size(F.split("text", " ", -1)).cast("long").alias("n_tokens")
     )
-    # Range assignment by approx-quantile boundaries of the ACTUAL id
-    # distribution (r3 verdict low #4: dividing doc_id by a count-derived
-    # width assumed dense ids; sparse/clustered id spaces would imbalance
-    # ranges).  Boundaries are computed once driver-side and embedded as
-    # literals, so the totals pass and the window pass can never disagree
-    # on a row's range; and ANY monotone bucketing yields the same final
-    # answer, so boundary placement only affects balance, not values.
-    probs = [i / _PACK_RANGES for i in range(1, _PACK_RANGES)]
-    bounds = sorted(set(toks.stat.approxQuantile("doc_id", probs, 0.001)))
-    rng = F.lit(0)
-    for b in bounds:
-        rng = rng + F.when(F.col("doc_id") >= F.lit(float(b)), 1).otherwise(0)
-    ranged = toks.withColumn("rng", rng.cast("long"))
-
-    # phase 1: per-range totals -> exclusive prefix offsets (driver-side
-    # cumsum over <= _PACK_RANGES rows)
-    totals = {
-        r["rng"]: r["tot"]
-        for r in ranged.groupBy("rng").agg(F.sum("n_tokens").alias("tot")).collect()
-    }
-    offsets, acc = {}, 0
-    for rng in sorted(totals):
-        offsets[rng] = acc
-        acc += totals[rng]
-    off_df = F.broadcast(
-        ranged.sparkSession.createDataFrame(
-            [(int(k), int(v)) for k, v in offsets.items()], "rng long, off long"
-        )
-    )
-
-    # phase 2: within-range running sum (window partitioned by range —
-    # bounded task size by construction)
-    win = (
-        Window.partitionBy("rng")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    before = F.coalesce(F.sum("n_tokens").over(win), F.lit(0)) + F.col("off")
-    return (
-        ranged.join(off_df, "rng")
-        .withColumn("before", before)
-        .select(
-            "doc_id",
-            "n_tokens",
-            F.floor(F.col("before") / _PACK_LEN).cast("long").alias("start_seq"),
-            (F.col("before") % _PACK_LEN).cast("long").alias("offset_in_seq"),
-            (
-                F.floor((F.col("before") + F.col("n_tokens") - 1) / _PACK_LEN)
-                - F.floor(F.col("before") / _PACK_LEN)
-                + 1
-            )
-            .cast("long")
-            .alias("spans"),
-        )
-    )
+    return pack_sequences(toks, _PACK_LEN)[0]
 
 
 _register(
@@ -4263,19 +4202,14 @@ def q_cluster_split(spark, sf_dir):
     from .operators.graph import dedup_groups
     from .plans.cache import adopt, cached_inputs
 
-    from .functions.sampling import u32_md5
+    from .functions.sampling import holdout_split
 
     docs = _read(spark, sf_dir, "documents")
     cand = simhash_candidates(simhash_column(docs))
     edges = cand.where(F.col("hamming") <= 3)
     groups = dedup_groups(docs, edges, id_col="doc_id")
-    u32 = u32_md5("group_id")
     result = groups.select(
-        "doc_id",
-        "group_id",
-        F.when(u32 % 10 == 0, F.lit("holdout"))
-        .otherwise(F.lit("train"))
-        .alias("split"),
+        "doc_id", "group_id", holdout_split("group_id").alias("split")
     )
     return adopt(result, *cached_inputs(cand), *cached_inputs(groups))
 
@@ -5242,10 +5176,10 @@ _register(
 # Scale shape: a naive row_number() over (PARTITION BY source) sends
 # every row of a hot domain to ONE task — at 100 TB a mega-domain with
 # 10^9 pages is a straggler/OOM. Two-phase instead: phase 1 ranks
-# within (source, salt-bucket) — _QUOTA_SALTS-way parallel even for a
-# single domain — and keeps ≤N per bucket; phase 2 re-ranks the ≤N×S
-# survivors per source (bounded by construction, so the second window
-# is over a tiny frame). A row in a source's true global top-N has at
+# within (source, salt-bucket) — 8-way (sampling._QUOTA_SALTS) parallel
+# even for a single domain — and keeps ≤N per bucket; phase 2
+# re-ranks the ≤N×S survivors per source (bounded by construction, so
+# the second window is over a tiny frame). A row in a source's true global top-N has at
 # most N-1 bucket-mates ahead of it, so it always survives phase 1,
 # and all its global predecessors survive with it — phase-2 rank
 # therefore EQUALS the single-window global rank, which is what the
@@ -5253,7 +5187,6 @@ _register(
 # ---------------------------------------------------------------------------
 
 _QUOTA_N = 10
-_QUOTA_SALTS = 8
 
 
 def q_source_quota_sample(spark, sf_dir):
@@ -5270,9 +5203,9 @@ def q_source_quota_sample(spark, sf_dir):
         .where(F.col("source").isNotNull())
         .select("doc_id", "source")
     )
-    return quota_rank_per_group(
-        docs, "source", n=_QUOTA_N, salts=_QUOTA_SALTS
-    ).select("doc_id", "source", "quota_rank")
+    return quota_rank_per_group(docs, "source", n=_QUOTA_N).select(
+        "doc_id", "source", "quota_rank"
+    )
 
 
 _register(
@@ -7186,10 +7119,7 @@ def q_stratified_sample(spark, sf_dir):
         *[F.lit(x) for kv in sorted(quotas.items()) for x in kv]
     )
     ranked = quota_rank_per_group(
-        docs.select("doc_id", "lang"),
-        "lang",
-        n=max(quotas.values()),
-        salts=8,
+        docs.select("doc_id", "lang"), "lang", n=max(quotas.values())
     )
     return ranked.where(
         F.col("quota_rank") <= qmap[F.col("lang")]

@@ -59,7 +59,6 @@ def curate(
     docs,
     max_seq_len: int = 2048,
     hamming: int = 3,
-    pack_ranges: int = 16,
     eval_docs=None,
     max_dup_frac: float | None = None,
     emb_docs=None,
@@ -131,7 +130,12 @@ def curate(
         simhash_candidates,
         simhash_column,
     )
-    from ds4sd_docling_tableformer_onnx_spark.functions.sampling import mixture_keep
+    from ds4sd_docling_tableformer_onnx_spark.functions.sampling import (
+        holdout_split,
+        mixture_keep,
+        pack_sequences,
+        quota_rank_per_group,
+    )
     from ds4sd_docling_tableformer_onnx_spark.operators.graph import dedup_groups
     from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
 
@@ -199,14 +203,10 @@ def curate(
     # cheap next to the near-dup joins)
     n_quota_dropped = 0
     if source_quota is not None:
-        from ds4sd_docling_tableformer_onnx_spark.functions.sampling import (
-            quota_rank_per_group,
-        )
-
         before = docs.count()
-        docs = quota_rank_per_group(
-            docs, "source", n=source_quota, salts=8
-        ).drop("quota_rank")
+        docs = quota_rank_per_group(docs, "source", n=source_quota).drop(
+            "quota_rank"
+        )
         n_quota_dropped = before - docs.count()
 
     # 1. near-dup groups -> canonical survivor per group.  survivors is
@@ -280,13 +280,7 @@ def curate(
 
     # 3b. leakage-safe split hashed on the GROUP id (cluster_split
     # oracle semantics): an entire near-dup component lands on one side
-    from ds4sd_docling_tableformer_onnx_spark.functions.sampling import u32_md5
-
-    grp_u32 = u32_md5("group_id")
-    survivors = survivors.withColumn(
-        "split",
-        F.when(grp_u32 % 10 == 0, F.lit("holdout")).otherwise(F.lit("train")),
-    )
+    survivors = survivors.withColumn("split", holdout_split("group_id"))
 
     # 4. deterministic mixture sample: srcK keeps 1/2^(K%4) — the ONE
     # shared predicate (functions/sampling.py, same as the oracle query)
@@ -294,67 +288,11 @@ def curate(
         "doc_id", "source", "lang", "n_tokens", "group_id", "group_size", "split"
     )
 
-    # 5. two-phase sequence packing (scale shape: range-partition ->
-    # per-range partials -> driver-side offsets over <= pack_ranges
-    # rows -> per-range window).  No global window anywhere: ordering
-    # comes from repartitionByRange (globally ordered, sampled splits
-    # that stay balanced even after dedup+sampling carved holes in the
-    # id space), so each window is bounded by one range partition.
-    # localCheckpoint (eager) FREEZES the range assignment: the range
-    # boundaries come from a sampling pass whose outcome is not
-    # guaranteed stable across jobs, and the totals collect and the
-    # final write are separate jobs — without the checkpoint a
-    # boundary doc could change partitions between them and every
-    # offset in its range would silently shift.  On a cluster use
-    # checkpoint()/a staging table, same call site.
+    # 5. two-phase sequence packing (functions/sampling.pack_sequences,
+    # the pack_sequences oracle semantics): its eager localCheckpoint is
+    # what lets the releases below run before the caller's write
     n_docs = sampled.count()
-    ranked = (
-        sampled.repartitionByRange(max(1, pack_ranges), "doc_id")
-        .withColumn("rng", F.spark_partition_id().cast("long"))
-        .localCheckpoint()
-    )
-    totals = {
-        r["rng"]: r["tot"]
-        for r in ranked.groupBy("rng").agg(F.sum("n_tokens").alias("tot")).collect()
-    }
-    offsets, acc = {}, 0
-    for rng in sorted(totals):
-        offsets[rng] = acc
-        acc += totals[rng]
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(k), int(v)) for k, v in offsets.items()] or [(0, 0)],
-            "rng long, off long",
-        )
-    )
-    win = (
-        Window.partitionBy("rng")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    before = F.coalesce(F.sum("n_tokens").over(win), F.lit(0)) + F.col("off")
-    packed = (
-        ranked.join(off_df, "rng")
-        .withColumn("before", before)
-        .select(
-            "doc_id",
-            "source",
-            "lang",
-            "n_tokens",
-            "group_id",
-            "group_size",
-            "split",
-            F.floor(F.col("before") / max_seq_len).cast("long").alias("start_seq"),
-            (F.col("before") % max_seq_len).cast("long").alias("offset_in_seq"),
-            (
-                F.floor((F.col("before") + F.col("n_tokens") - 1) / max_seq_len)
-                - F.floor(F.col("before") / max_seq_len)
-                + 1
-            )
-            .cast("long")
-            .alias("spans"),
-        )
-    )
+    packed, total_tokens = pack_sequences(sampled, max_seq_len)
     stats = {
         "input_docs": n_input,
         "rule_dropped": int(n_rule_dropped),
@@ -365,8 +303,8 @@ def curate(
         "repetitive_dropped": int(n_repetitive),
         "semantic_dropped": int(n_semantic),
         "survivors_sampled": n_docs,
-        "total_tokens": int(acc),
-        "sequences": int(-(-acc // max_seq_len)) if acc else 0,
+        "total_tokens": total_tokens,
+        "sequences": -(-total_tokens // max_seq_len),
     }
     release(cand)
     if stripped is not None:
@@ -378,7 +316,7 @@ def curate(
         release(sem)
     if span_stats is not None:
         release(span_stats)
-    # safe: `packed` reads from the eager localCheckpoint of `ranked`,
+    # safe: `packed` reads from pack_sequences' eager localCheckpoint,
     # so it no longer depends on the cached survivor table
     survivors_base.unpersist()
     return packed, stats

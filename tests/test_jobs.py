@@ -33,7 +33,7 @@ def docs(spark):
 def test_curate_packing_invariants(spark, docs):
     from curate_job import curate
 
-    packed, stats = curate(spark, docs, max_seq_len=64, hamming=3, pack_ranges=4)
+    packed, stats = curate(spark, docs, max_seq_len=64, hamming=3)
     pdf = packed.toPandas().sort_values(["start_seq", "offset_in_seq"]).reset_index(drop=True)
 
     assert stats["input_docs"] == 240
@@ -57,8 +57,8 @@ def test_curate_packing_invariants(spark, docs):
 def test_curate_deterministic(spark, docs):
     from curate_job import curate
 
-    a, sa = curate(spark, docs, max_seq_len=128, hamming=3, pack_ranges=3)
-    b, sb = curate(spark, docs, max_seq_len=128, hamming=3, pack_ranges=3)
+    a, sa = curate(spark, docs, max_seq_len=128, hamming=3)
+    b, sb = curate(spark, docs, max_seq_len=128, hamming=3)
     assert sa == sb
     pa = a.toPandas().sort_values("doc_id").reset_index(drop=True)
     pb = b.toPandas().sort_values("doc_id").reset_index(drop=True)
@@ -71,7 +71,7 @@ def test_curate_semantic_dedup_stage(spark, docs):
     survivors without embeddings are untouched."""
     from curate_job import curate
 
-    base, _ = curate(spark, docs, max_seq_len=64, hamming=3, pack_ranges=4)
+    base, _ = curate(spark, docs, max_seq_len=64, hamming=3)
     # doc_id is a STRING here: sort lexicographically, matching the
     # operator's a.id < b.id ordering, so keep_a really is the
     # canonical min of the planted near-dup pair
@@ -89,7 +89,7 @@ def test_curate_semantic_dedup_stage(spark, docs):
         "vec_id string, embedding array<float>",
     )
     cleaned, stats = curate(
-        spark, docs, max_seq_len=64, hamming=3, pack_ranges=4,
+        spark, docs, max_seq_len=64, hamming=3,
         emb_docs=emb, sem_threshold=0.9, sem_lists=1,
     )
     cleaned_ids = {r["doc_id"] for r in cleaned.select("doc_id").collect()}
@@ -109,9 +109,9 @@ def test_curate_quality_filter_stage(spark, docs):
 
     from curate_job import curate
 
-    _, base_stats = curate(spark, docs, max_seq_len=64, hamming=3, pack_ranges=4)
+    _, base_stats = curate(spark, docs, max_seq_len=64, hamming=3)
     cleaned, stats = curate(
-        spark, docs, max_seq_len=64, hamming=3, pack_ranges=4,
+        spark, docs, max_seq_len=64, hamming=3,
         quality_filter=True,
     )
     # the tokNN docs (every non-cluster doc) fail r_min_words, so the
@@ -121,7 +121,7 @@ def test_curate_quality_filter_stage(spark, docs):
     assert base_stats["quality_dropped"] == 0
     # deterministic: same corpus, same weights, same drops
     _, stats2 = curate(
-        spark, docs, max_seq_len=64, hamming=3, pack_ranges=4,
+        spark, docs, max_seq_len=64, hamming=3,
         quality_filter=True,
     )
     assert stats2 == stats
@@ -153,7 +153,7 @@ def test_curate_hygiene_stages(spark, docs):
     cluster survivors whose text is corpus-duplicated."""
     from curate_job import curate
 
-    base, _ = curate(spark, docs, max_seq_len=64, hamming=3, pack_ranges=4)
+    base, _ = curate(spark, docs, max_seq_len=64, hamming=3)
     base_ids = {r["doc_id"] for r in base.select("doc_id").collect()}
 
     # benchmark table = the verbatim text of doc 13 (a unique,
@@ -166,7 +166,7 @@ def test_curate_hygiene_stages(spark, docs):
         [("e0", doc13_text)], "doc_id string, text string"
     )
     cleaned, stats = curate(
-        spark, docs, max_seq_len=64, hamming=3, pack_ranges=4,
+        spark, docs, max_seq_len=64, hamming=3,
         eval_docs=eval_docs,
     )
     cleaned_ids = {r["doc_id"] for r in cleaned.select("doc_id").collect()}
@@ -179,7 +179,7 @@ def test_curate_hygiene_stages(spark, docs):
     # cyclic sequence tok((7i+j) % 97), so many 8-gram windows recur in
     # >= 4 docs — a strict threshold must drop some survivors
     filtered, fstats = curate(
-        spark, docs, max_seq_len=64, hamming=3, pack_ranges=4,
+        spark, docs, max_seq_len=64, hamming=3,
         max_dup_frac=0.9,
     )
     filtered_ids = {r["doc_id"] for r in filtered.select("doc_id").collect()}
@@ -232,7 +232,7 @@ def test_curate_source_quota_stage(spark, docs):
 
     quota = 12
     packed, stats = curate(
-        spark, docs, max_seq_len=64, hamming=3, pack_ranges=4,
+        spark, docs, max_seq_len=64, hamming=3,
         source_quota=quota,
     )
     # 240 docs over 6 sources (40 each) -> exactly 6*quota survive 0d
@@ -257,7 +257,7 @@ def test_curate_source_quota_stage(spark, docs):
     packed_ids = {r["doc_id"] for r in packed.select("doc_id").collect()}
     assert packed_ids <= kept
     _, stats2 = curate(
-        spark, docs, max_seq_len=64, hamming=3, pack_ranges=4,
+        spark, docs, max_seq_len=64, hamming=3,
         source_quota=quota,
     )
     assert stats2 == stats

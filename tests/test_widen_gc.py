@@ -31,9 +31,6 @@ def test_widen_is_byte_proportional_and_capped(spark):
         _widen(docs, bytes_per_part=1024).rdd.getNumPartitions() == parallelism
     )
 
-    # min_bytes gate still vetoes widening below the floor
-    assert _widen(docs, min_bytes=1 << 20, bytes_per_part=1024) is docs
-
 
 def test_widen_noop_when_scan_already_wide(spark):
     docs = _read(spark, SF, "documents").repartition(
