@@ -9,12 +9,24 @@ determinism, and the packing contiguity invariant — with zero global
 
 from __future__ import annotations
 
+import hashlib
+import random
 import sys
 from pathlib import Path
 
 import pytest
 
+from tests.test_widen_gc import SF as SF001
+
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "jobs"))
+
+SF001_DOCS = f"{SF001}/documents.parquet"
+
+
+def packed_sha256(packed) -> str:
+    """SHA-256 of the packed output as CSV, rows sorted by doc_id."""
+    pdf = packed.toPandas().sort_values("doc_id").reset_index(drop=True)
+    return hashlib.sha256(pdf.to_csv(index=False).encode()).hexdigest()
 
 
 @pytest.fixture(scope="module")
@@ -294,3 +306,172 @@ def test_curate_keep_best_retention_policy(spark, docs):
     # survivor is visible in the output either way
     assert "902" in best_ids and {"900", "901"}.isdisjoint(best_ids)
     assert "900" in first_ids and {"901", "902"}.isdisjoint(first_ids)
+
+
+# every stage that needs no extra input, with a quota that binds on the
+# 25-docs-per-source sf0.01 corpus
+NO_INPUT_STAGES = dict(
+    rule_filter=True,
+    strip_substrings=True,
+    quality_filter=True,
+    source_quota=10,
+    max_dup_frac=0.5,
+)
+
+
+@pytest.mark.parametrize(
+    "options, digest, expected",
+    [
+        (
+            {},
+            "fae5499cbef7e4546b9d515c2cf4fd5dd624271118182dd9c8e2863d6487ad5d",
+            {
+                "input_docs": 500,
+                "rule_dropped": 0,
+                "substring_tokens_removed": 0,
+                "quality_dropped": 0,
+                "quota_dropped": 0,
+                "contaminated_dropped": 0,
+                "repetitive_dropped": 0,
+                "semantic_dropped": 0,
+                "survivors_sampled": 151,
+                "total_tokens": 6149,
+                "sequences": 4,
+            },
+        ),
+        (
+            NO_INPUT_STAGES,
+            "a6da2f5a1bd2a4d5d185499839c03e93d125dd2cd3335720457dd6248eb4b2b5",
+            {
+                "input_docs": 500,
+                "rule_dropped": 262,
+                "substring_tokens_removed": 718,
+                "quality_dropped": 31,
+                "quota_dropped": 24,
+                "contaminated_dropped": 0,
+                "repetitive_dropped": 0,
+                "semantic_dropped": 0,
+                "survivors_sampled": 61,
+                "total_tokens": 2893,
+                "sequences": 2,
+            },
+        ),
+    ],
+    ids=["default", "no_input_stages"],
+)
+def test_curate_output_locked_on_sf001(spark, options, digest, expected):
+    """curate's packed rows and its stats dict on the sf0.01 documents
+    are pinned: any change to how stages are composed or counted must
+    leave both byte-identical."""
+    from curate_job import curate
+
+    packed, stats = curate(spark, spark.read.parquet(SF001_DOCS), **options)
+    assert stats == expected
+    assert packed_sha256(packed) == digest
+
+
+def _planted_corpus():
+    """Documents with known rejects for every curate stage, keyed by
+    doc_id range (every word is 5-6 chars, so the rule battery's word
+    length band always passes unless a doc is planted to fail):
+
+    - 0-15 good: 24 distinct words each, sources src0..src3 round-robin;
+    - 16-18 strip: a good doc behind the same 10-word shared span;
+    - 19-22 repetitive: ``rp000..rp003 T T rp004..rp007``, ``T`` 8 words
+      per doc; the strip removes both copies of ``T``, leaving four
+      identical 8-word texts (one near-dup group whose one 8-gram is in
+      4 docs, so the canonical doc's duplicated-span fraction is 1.0);
+    - 23-36 quota: 14 good docs in src4;
+    - 37-39 quality: 22 spam words each, passing every rule;
+    - 40-49 rule AND quality: 23 spam words plus a ``{br}`` token
+      (fails r_no_braces; these docs teach the scorer that spam
+      vocabulary is bad);
+    - 50-52 rule: too short.
+    """
+    rnd = random.Random(5)
+    spam = [f"spm{k:02d}" for k in range(30)]
+    shared = " ".join(f"sh{j:03d}" for j in range(10))
+    rows = []
+
+    def good(i):
+        return " ".join(f"g{i:02d}w{j:02d}" for j in range(24))
+
+    for i in range(16):
+        rows.append((i, good(i), f"src{i % 4}"))
+    for i in range(16, 19):
+        rows.append((i, shared + " " + good(i), "src0"))
+    for i in range(19, 23):
+        t = " ".join(f"t{i}x{j:02d}" for j in range(8))
+        rows.append((i, f"rp000 rp001 rp002 rp003 {t} {t} rp004 rp005 rp006 rp007", "src8"))
+    for i in range(23, 37):
+        rows.append((i, good(i), "src4"))
+    for i in range(37, 40):
+        rows.append((i, " ".join(rnd.sample(spam, 22)), "src0"))
+    for i in range(40, 50):
+        rows.append((i, " ".join(rnd.sample(spam, 23)) + " {br}", "src0"))
+    for i in range(50, 53):
+        rows.append((i, "tiny doc", "src0"))
+    return [(i, text, source, "en") for i, text, source in rows]
+
+
+def test_curate_every_stage_exact_counts(spark):
+    """All eight stages on at once over a corpus with planted rejects:
+    every stats value is exact, and a doc two stages reject is counted
+    once, under the earliest (docs 40-52 fail the rule battery AND
+    score <= 0; doc 8 is both a semantic near-dup and contaminated)."""
+    from curate_job import curate
+    from ds4sd_docling_tableformer_onnx_spark.functions.rules import (
+        heuristic_rules,
+        keep_all,
+    )
+    from ds4sd_docling_tableformer_onnx_spark.operators.classifier import (
+        quality_scores,
+        train_quality_weights,
+    )
+
+    rows = _planted_corpus()
+    docs = spark.createDataFrame(
+        rows, "doc_id long, text string, source string, lang string"
+    )
+    text = {r[0]: r[1] for r in rows}
+    eval_docs = spark.createDataFrame(
+        [(900, text[0]), (901, text[8])], "doc_id long, text string"
+    )
+    emb = spark.createDataFrame(
+        [(4, [1.0, 0.0]), (8, [0.999, 0.045]), (12, [0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+
+    # the precedence case is real: every rule reject (40-52) also scores
+    # <= 0 on the raw text, and no good doc does
+    weights = train_quality_weights(
+        docs.withColumn("label", keep_all(heuristic_rules("text")))
+    )
+    scored = quality_scores(docs, weights).where("q_score <= 0")
+    assert {r["doc_id"] for r in scored.collect()} == set(range(37, 53))
+
+    packed, stats = curate(
+        spark, docs, max_seq_len=64,
+        rule_filter=True, strip_substrings=True, quality_filter=True,
+        source_quota=10, eval_docs=eval_docs, max_dup_frac=0.5,
+        emb_docs=emb, sem_threshold=0.9, sem_lists=1,
+    )
+    # 53 docs = 13 rule + 3 quality + 4 quota + 3 non-canonical near-dups
+    # (uncounted) + 1 semantic + 1 contaminated + 1 repetitive + 10
+    # sampled out + 17 packed
+    assert stats == {
+        "input_docs": 53,
+        "rule_dropped": 13,
+        "substring_tokens_removed": 94,
+        "quality_dropped": 3,
+        "quota_dropped": 4,
+        "contaminated_dropped": 1,
+        "repetitive_dropped": 1,
+        "semantic_dropped": 1,
+        "survivors_sampled": 17,
+        "total_tokens": 408,
+        "sequences": 7,
+    }
+    assert sorted(r["doc_id"] for r in packed.select("doc_id").collect()) == [
+        4, 6, 9, 12, 16, 17, 18, 23, 24, 26, 27, 28, 30, 32, 33, 35, 36,
+    ]
