@@ -31,6 +31,7 @@ import json
 import os
 import sys
 import time
+from contextlib import contextmanager
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
@@ -51,6 +52,22 @@ ONE_FILE_PER_TASK = {
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.files.openCostInBytes": "134217728",
 }
+
+
+@contextmanager
+def one_file_per_task(spark):
+    """Apply ONE_FILE_PER_TASK inside the block and restore the previous
+    values on exit, also when the block raises."""
+    conf = spark.conf
+    old = {k: conf.get(k) for k in ONE_FILE_PER_TASK}
+    for k, v in ONE_FILE_PER_TASK.items():
+        conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            conf.set(k, v)
+
 
 # interleaved [N, 4N] scaling visits (min-wall per level; see the
 # scaling-evidence comment in main())
@@ -202,17 +219,12 @@ def run_extraction_only(spark, input_path):
         extract_transcripts,
     )
 
-    conf = spark.conf
-    old = {k: conf.get(k) for k in ONE_FILE_PER_TASK}
-    for k, v in ONE_FILE_PER_TASK.items():
-        conf.set(k, v)
-    transcripts = spark.read.parquet(input_path)
-    n = transcripts.count()
-    t0 = time.perf_counter()
-    extract_transcripts(transcripts).write.format("noop").mode("overwrite").save()
-    wall = time.perf_counter() - t0
-    for k, v in old.items():
-        conf.set(k, v)
+    with one_file_per_task(spark):
+        transcripts = spark.read.parquet(input_path)
+        n = transcripts.count()
+        t0 = time.perf_counter()
+        extract_transcripts(transcripts).write.format("noop").mode("overwrite").save()
+        wall = time.perf_counter() - t0
     return n, wall
 
 
@@ -228,22 +240,17 @@ def run_extraction(spark, input_path):
         payload_pool_df,
     )
 
-    conf = spark.conf
-    old = {k: conf.get(k) for k in ONE_FILE_PER_TASK}
-    for k, v in ONE_FILE_PER_TASK.items():
-        conf.set(k, v)
-    transcripts = spark.read.parquet(input_path)
-    t0 = time.perf_counter()
-    verified = verify_against_pool(
-        extract_transcripts(transcripts), payload_pool_df(spark)
-    )
-    row = verified.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("html_match"), 1).otherwise(0)).alias("matched"),
-    ).first()
-    wall = time.perf_counter() - t0
-    for k, v in old.items():
-        conf.set(k, v)
+    with one_file_per_task(spark):
+        transcripts = spark.read.parquet(input_path)
+        t0 = time.perf_counter()
+        verified = verify_against_pool(
+            extract_transcripts(transcripts), payload_pool_df(spark)
+        )
+        row = verified.agg(
+            F.count("*").alias("n"),
+            F.sum(F.when(F.col("html_match"), 1).otherwise(0)).alias("matched"),
+        ).first()
+        wall = time.perf_counter() - t0
     return row["n"], wall, row["matched"] / max(row["n"], 1)
 
 

@@ -105,10 +105,10 @@ def write_checkpoint(df, path: str, run_id: str, stage: str):
 
 
 def read_checkpoint(spark, path: str):
-    """The checkpoint table, or ``None`` when it does not exist yet.
-    Any other read error (an unreadable part file, say) raises: read as
-    "no checkpoint", it would make resume re-extract and append every
-    turn."""
+    """The checkpoint table, or ``None`` when nothing is done yet (no
+    path, or a directory with no data files).  Any other read error (an
+    unreadable part file, say) raises: read as "no checkpoint", it would
+    make resume re-extract and append every turn."""
     from pyspark.errors import AnalysisException
 
     if is_table_target(path, spark):
@@ -117,7 +117,7 @@ def read_checkpoint(spark, path: str):
     try:
         return spark.read.parquet(path)
     except AnalysisException as exc:
-        if exc.getCondition() == "PATH_NOT_FOUND":
+        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
             return None
         raise
 

@@ -10,25 +10,29 @@ documents table.
       [--max-seq-len 2048] [--hamming 3] [--cores N]
 
 Pipeline (each stage a documented scale shape, all oracle-checked in
-queries.py at small scale):
+queries.py at small scale; rejecting stages MARK rows on a drop ledger
+whose two aggregates are the stats line — see ``curate``):
 
 0. optional pre-stages: --rule-filter (C4/Gopher heuristic battery,
    pure codegen — the c4_filters oracle semantics),
    --strip-dup-substrings (exact substring dedup, Lee et al. 2021 —
-   the dedup_substrings oracle semantics, text replaced in place) and
+   the dedup_substrings oracle semantics, text replaced in place),
    --quality-filter (hashed linear quality scorer trained on the raw
    corpus with rule-battery weak labels — the quality_classifier
-   oracle semantics, docs scoring <= 0 drop);
-1. near-dup GROUPS: simhash signatures -> banded candidate pairs
-   (hamming <= --hamming) -> connected components (hash-min label
-   propagation) -> one canonical survivor per group (smallest doc_id);
-2. hygiene (optional): --eval-input drops survivors sharing any
-   word-8-gram with the benchmark table (broadcast-gram anti-join);
-   --max-dup-frac drops survivors above the duplicated-span-fraction
-   threshold;
+   oracle semantics, docs scoring <= 0 drop) and --source-quota;
+   the pre-dedup ledger is then materialized once;
+1. near-dup GROUPS over the live rows: simhash signatures -> banded
+   candidate pairs (hamming <= --hamming) -> connected components
+   (hash-min label propagation) -> one canonical survivor per group
+   (smallest doc_id);
+2. hygiene (optional): --emb-input drops SemDeDup near-dups;
+   --eval-input drops survivors sharing any word-8-gram with the
+   benchmark table (broadcast-gram anti-join); --max-dup-frac drops
+   survivors above the duplicated-span-fraction threshold;
 3. quality + language signals on survivors (narrow map stages);
 4. deterministic mixture sampling (md5-hash uniform per source —
-   RNG-free, retry-stable);
+   RNG-free, retry-stable); the post-dedup ledger is then
+   materialized once;
 5. sequence packing: greedy (seq, offset) slots into --max-seq-len
    token sequences via two-phase prefix sums (per-range partials +
    driver offsets — no global window task).
@@ -78,8 +82,8 @@ def curate(
       benchmark table (operators/contamination.decontaminate — anti-
       join against the broadcast eval gram set);
     - ``max_dup_frac``: drop survivors whose duplicated-span fraction
-      (corpus doc-frequency >= 4 at word-8-gram granularity) exceeds
-      the threshold;
+      (corpus doc-frequency >= 4 at word-8-gram granularity, over the
+      pre-dedup live corpus) exceeds the threshold;
     - ``emb_docs``: (vec_id, embedding) rows keyed by doc_id — drop
       survivors the SemDeDup pass marks as semantic near-dups
       (operators/similarity.semantic_dedup: IVF clusters, within-
@@ -118,6 +122,22 @@ def curate(
     Every output row also carries ``split`` ('train'/'holdout', ~10%),
     hashed on the near-dup GROUP id so no holdout doc has a near-dup
     in train (the ``cluster_split`` oracle semantics).
+
+    Accounting is a drop ledger: a rejecting stage sets ``drop_stage``
+    to ``coalesce(drop_stage, stage unless keep)``, so the EARLIEST
+    rejecting stage wins (rule, quality, quota | semantic,
+    contaminated, repetitive, sampled_out) and NULL means live.  The
+    strip, the quota rank, near-dup grouping and the span stats read
+    only live rows.  Two eager ``localCheckpoint``s, one aggregate
+    each, give every count: the pre-dedup ledger (every input row,
+    after quota; the near-dup stage reads its live rows) gives
+    ``input_docs``, ``rule_/quality_/quota_dropped`` and
+    ``substring_tokens_removed`` (summed ``n_sub_removed``); the
+    post-dedup ledger (canonical docs after the mixture sample; its
+    live rows are packed) gives ``semantic_/contaminated_/
+    repetitive_dropped`` and ``survivors_sampled``.  Non-canonical
+    near-dups and ``sampled_out`` rows have no key; ``total_tokens``
+    and ``sequences`` come from the packer.
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -125,6 +145,7 @@ def curate(
     from ds4sd_docling_tableformer_onnx_spark.operators.contamination import (
         decontaminate,
         duplicated_span_stats,
+        strip_duplicated_substrings,
     )
     from ds4sd_docling_tableformer_onnx_spark.operators.dedup import (
         simhash_candidates,
@@ -137,82 +158,85 @@ def curate(
         quota_rank_per_group,
     )
     from ds4sd_docling_tableformer_onnx_spark.operators.graph import dedup_groups
+    from ds4sd_docling_tableformer_onnx_spark.functions.rules import (
+        heuristic_rules,
+        keep_all,
+    )
+    from ds4sd_docling_tableformer_onnx_spark.operators.classifier import (
+        quality_scores,
+        train_quality_weights,
+    )
+    from ds4sd_docling_tableformer_onnx_spark.operators.similarity import (
+        semantic_dedup,
+    )
     from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
 
-    n_input = docs.count()
-    raw_docs = docs  # classifier training corpus (pre-filter: see 0c)
+    live = F.col("drop_stage").isNull()
+
+    def mark(ledger, stage, keep):
+        # a NULL keep rejects, exactly as where(keep) would drop the row
+        rejected = F.when(keep, None).otherwise(F.lit(stage))
+        return ledger.withColumn("drop_stage", F.coalesce("drop_stage", rejected))
+
+    def mark_listed(ledger, stage, ids, keep_listed=False):
+        # keep_listed: the frame lists the rows that stay, not the rejects;
+        # distinct, so an id listed twice (a repeated vec_id in the
+        # embeddings input) cannot duplicate its ledger row in the join
+        flag = ids.select("doc_id").distinct().withColumn("_listed", F.lit(True))
+        listed = F.col("_listed").isNotNull()
+        keep = listed if keep_listed else ~listed
+        return mark(ledger.join(flag, "doc_id", "left"), stage, keep).drop("_listed")
+
+    ledger = docs.withColumn("drop_stage", F.lit(None).cast("string"))
 
     # 0a. heuristic rule battery (cheapest stage runs first: pure
     # codegen predicates, no shuffle — every doc dropped here skips the
     # gram/simhash stages entirely)
-    n_rule_dropped = 0
     if rule_filter:
-        from ds4sd_docling_tableformer_onnx_spark.functions.rules import (
-            heuristic_rules,
-            keep_all,
-        )
+        ledger = mark(ledger, "rule", keep_all(heuristic_rules("text")))
 
-        docs = docs.where(keep_all(heuristic_rules("text")))
-        n_rule_dropped = n_input - docs.count()
-
-    # 0b. exact substring dedup: strip corpus-duplicated 8-gram spans
-    # from the text itself so the near-dup signatures and every token
-    # count downstream see the deduplicated corpus
+    # 0b. exact substring dedup over the live rows: strip corpus-
+    # duplicated 8-gram spans from the text itself so the near-dup
+    # signatures and every token count downstream see the deduplicated
+    # corpus; rejected rows rejoin unchanged
     stripped = None
-    n_sub_tokens_removed = 0
     if strip_substrings:
-        from ds4sd_docling_tableformer_onnx_spark.operators.contamination import (
-            strip_duplicated_substrings,
+        stripped = strip_duplicated_substrings(ledger.where(live))
+        ledger = stripped.drop("n_tokens_pre").unionByName(
+            ledger.where(~live), allowMissingColumns=True
         )
-
-        stripped = strip_duplicated_substrings(docs)
-        n_sub_tokens_removed = int(
-            stripped.agg(F.sum("n_sub_removed")).collect()[0][0] or 0
-        )
-        docs = stripped.drop("n_tokens_pre", "n_sub_removed")
 
     # 0c. learned quality filter: train integer log-odds weights on the
     # RAW corpus (rule-battery weak labels — training after rule_filter
-    # would see all-True labels), score the current stream shuffle-free
+    # would see all-True labels), score the stripped text shuffle-free
     # (2 bounded-collect training aggs + 1 codegen scoring pass)
-    n_quality_dropped = 0
     if quality_filter:
-        from ds4sd_docling_tableformer_onnx_spark.functions.rules import (
-            heuristic_rules,
-            keep_all,
-        )
-        from ds4sd_docling_tableformer_onnx_spark.operators.classifier import (
-            quality_scores,
-            train_quality_weights,
-        )
-
-        labeled = raw_docs.where(F.col("text").isNotNull()).withColumn(
+        labeled = docs.where(F.col("text").isNotNull()).withColumn(
             "label", keep_all(heuristic_rules("text"))
         )
         weights = train_quality_weights(labeled)
-        before = docs.count()
-        docs = (
-            quality_scores(docs, weights)
-            .where(F.col("q_score") > 0)
-            .drop("n_words", "q_score")
-        )
-        n_quality_dropped = before - docs.count()
+        ledger = mark(
+            quality_scores(ledger, weights), "quality", F.col("q_score") > 0
+        ).drop("n_words", "q_score")
 
-    # 0d. per-source quota: cap any one domain's share before the
-    # gram/simhash stages pay for its excess (two bounded windows —
-    # cheap next to the near-dup joins)
-    n_quota_dropped = 0
+    # 0d. per-source quota over the live rows: cap any one domain's
+    # share before the gram/simhash stages pay for its excess (two
+    # bounded windows — cheap next to the near-dup joins)
     if source_quota is not None:
-        before = docs.count()
-        docs = quota_rank_per_group(docs, "source", n=source_quota).drop(
-            "quota_rank"
-        )
-        n_quota_dropped = before - docs.count()
+        kept = quota_rank_per_group(ledger.where(live), "source", n=source_quota)
+        ledger = mark_listed(ledger, "quota", kept, keep_listed=True)
 
-    # 1. near-dup groups -> canonical survivor per group.  survivors is
-    # persisted: the hygiene counts, the sampling filter, and the
-    # packing phases below are ~5 downstream actions that would
-    # otherwise each re-run the gram joins and the group join.
+    # materialize the pre-dedup ledger once: its aggregate, the near-dup
+    # stage, the keep_best window and the span stats all read it instead
+    # of each re-running the rule/strip/quality/quota lineage
+    ledger = ledger.localCheckpoint()
+    sub_removed = F.sum("n_sub_removed") if strip_substrings else F.lit(0)
+    pre = ledger.groupBy("drop_stage").agg(
+        F.count("*").alias("n"), sub_removed.alias("sub")
+    ).collect()
+    docs = ledger.where(live).drop("drop_stage", "n_sub_removed")
+
+    # 1. near-dup groups -> canonical survivor per group
     cand = simhash_candidates(simhash_column(docs), id_col="doc_id")
     edges = cand.where(F.col("hamming") <= hamming)
     groups = dedup_groups(docs, edges, id_col="doc_id")
@@ -227,24 +251,13 @@ def curate(
         keep_pred = F.row_number().over(best_win) == 1
     else:
         keep_pred = F.col("doc_id") == F.col("group_id")  # canonical = min id
-    survivors_base = (
-        joined.withColumn("_keep", keep_pred)
-        .where("_keep")
-        .drop("_keep")
-        .persist()
-    )
-    survivors = survivors_base
+    survivors = joined.withColumn("_keep", keep_pred).where("_keep").drop("_keep")
+    ledger = survivors.withColumn("drop_stage", F.lit(None).cast("string"))
 
     # 2. hygiene: benchmark decontamination + duplicated-span filter +
     # optional embedding-level (SemDeDup) near-dup drop
-    n_contaminated = n_repetitive = n_semantic = 0
-    sem = None
-    span_stats = None
+    sem = span_stats = None
     if emb_docs is not None:
-        from ds4sd_docling_tableformer_onnx_spark.operators.similarity import (
-            semantic_dedup,
-        )
-
         # cluster count scales with the corpus unless pinned (the
         # SemDeDup many-small-clusters recipe, same as the oracle
         # query): the within-cluster join is quadratic per cluster, so
@@ -255,70 +268,55 @@ def curate(
         sem = semantic_dedup(
             emb_docs, threshold=sem_threshold, n_lists=sem_lists, seed=7
         )
-        sem_dropped = sem.where(~F.col("kept")).select(
-            F.col("id").alias("doc_id")
-        )
-        before = survivors.count()
-        survivors = survivors.join(sem_dropped, "doc_id", "left_anti")
-        n_semantic = before - survivors.count()
+        sem_dropped = sem.where(~F.col("kept")).withColumnRenamed("id", "doc_id")
+        ledger = mark_listed(ledger, "semantic", sem_dropped)
     if eval_docs is not None:
         hits = decontaminate(survivors, eval_docs)
-        n_contaminated = hits.count()
-        survivors = survivors.join(hits.select("doc_id"), "doc_id", "left_anti")
+        ledger = mark_listed(ledger, "contaminated", hits)
     if max_dup_frac is not None:
         span_stats = duplicated_span_stats(docs)  # owns a persisted frame
         repetitive = span_stats.where(F.col("dup_frac") > max_dup_frac)
-        before = survivors.count()
-        survivors = survivors.join(
-            repetitive.select("doc_id"), "doc_id", "left_anti"
-        )
-        n_repetitive = before - survivors.count()
+        ledger = mark_listed(ledger, "repetitive", repetitive)
 
-    # 3. signals (narrow, shuffle-free)
-    toks = F.size(F.split("text", " ", -1)).cast("long")
-    survivors = survivors.withColumn("n_tokens", toks)
-
-    # 3b. leakage-safe split hashed on the GROUP id (cluster_split
-    # oracle semantics): an entire near-dup component lands on one side
-    survivors = survivors.withColumn("split", holdout_split("group_id"))
-
+    # 3. signals (narrow, shuffle-free) and the leakage-safe split
+    # hashed on the GROUP id (cluster_split oracle semantics): an entire
+    # near-dup component lands on one side.
     # 4. deterministic mixture sample: srcK keeps 1/2^(K%4) — the ONE
-    # shared predicate (functions/sampling.py, same as the oracle query)
-    sampled = survivors.where(mixture_keep("doc_id", "source")).select(
-        "doc_id", "source", "lang", "n_tokens", "group_id", "group_size", "split"
+    # shared predicate (functions/sampling.py, same as the oracle
+    # query); then materialize the post-dedup ledger once
+    cols = ["doc_id", "source", "lang", "n_tokens", "group_id", "group_size", "split"]
+    ledger = (
+        ledger.withColumn("n_tokens", F.size(F.split("text", " ", -1)).cast("long"))
+        .withColumn("split", holdout_split("group_id"))
+        .transform(mark, "sampled_out", mixture_keep("doc_id", "source"))
+        .select(*cols, "drop_stage")
+        .localCheckpoint()
     )
+    post = ledger.groupBy("drop_stage").agg(F.count("*").alias("n")).collect()
 
     # 5. two-phase sequence packing (functions/sampling.pack_sequences,
-    # the pack_sequences oracle semantics): its eager localCheckpoint is
-    # what lets the releases below run before the caller's write
-    n_docs = sampled.count()
-    packed, total_tokens = pack_sequences(sampled, max_seq_len)
+    # the pack_sequences oracle semantics) over the sampled survivors
+    packed, total_tokens = pack_sequences(ledger.where(live).select(cols), max_seq_len)
+    dropped = {r["drop_stage"]: r["n"] for r in pre + post if r["drop_stage"]}
     stats = {
-        "input_docs": n_input,
-        "rule_dropped": int(n_rule_dropped),
-        "substring_tokens_removed": int(n_sub_tokens_removed),
-        "quality_dropped": int(n_quality_dropped),
-        "quota_dropped": int(n_quota_dropped),
-        "contaminated_dropped": int(n_contaminated),
-        "repetitive_dropped": int(n_repetitive),
-        "semantic_dropped": int(n_semantic),
-        "survivors_sampled": n_docs,
+        "input_docs": sum(r["n"] for r in pre),
+        "rule_dropped": dropped.get("rule", 0),
+        "substring_tokens_removed": sum(r["sub"] or 0 for r in pre),
+        "quality_dropped": dropped.get("quality", 0),
+        "quota_dropped": dropped.get("quota", 0),
+        "contaminated_dropped": dropped.get("contaminated", 0),
+        "repetitive_dropped": dropped.get("repetitive", 0),
+        "semantic_dropped": dropped.get("semantic", 0),
+        "survivors_sampled": sum(r["n"] for r in post if r["drop_stage"] is None),
         "total_tokens": total_tokens,
         "sequences": -(-total_tokens // max_seq_len),
     }
-    release(cand)
-    if stripped is not None:
-        # safe: packing reads from the eager localCheckpoint
-        release(stripped)
-    if sem is not None:
-        # safe here for the same reason as survivors_base below: the
-        # packing output reads from the eager localCheckpoint
-        release(sem)
-    if span_stats is not None:
-        release(span_stats)
-    # safe: `packed` reads from pack_sequences' eager localCheckpoint,
-    # so it no longer depends on the cached survivor table
-    survivors_base.unpersist()
+    # safe: every persisted frame below was last read by one of the
+    # two eager ledger checkpoints, and `packed` reads pack_sequences'
+    # own eager checkpoint
+    for owner in (cand, stripped, sem, span_stats):
+        if owner is not None:
+            release(owner)
     return packed, stats
 
 

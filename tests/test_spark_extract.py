@@ -138,6 +138,18 @@ def test_unreadable_checkpoint_raises_before_appending(spark, tmp_path):
     assert list(ckpt.iterdir()) == [bad]
 
 
+def test_empty_checkpoint_directory_reads_as_no_checkpoint(spark, tmp_path):
+    """An existing checkpoint directory with no data files holds nothing
+    done: resume extracts every turn and skips none."""
+    ckpt = tmp_path / "ckpt"
+    ckpt.mkdir()
+    df = generate_transcripts(spark, n_turns=20, n_convs=2, seed=4)
+
+    new_rows, skipped = run_with_checkpoint(spark, df, str(ckpt), run_id="r1")
+    assert skipped == 0
+    assert new_rows.count() == 20
+
+
 def test_run_id_with_quote_returns_its_own_rows(spark, tmp_path):
     path = str(tmp_path / "ckpt")
     df = generate_transcripts(spark, n_turns=40, n_convs=4, seed=11)
