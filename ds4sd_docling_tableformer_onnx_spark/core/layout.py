@@ -56,12 +56,18 @@ def reading_order(tokens):
     return ordered, line_ids
 
 
-def spans_text(tokens):
-    """Reading-order text: one string per line, lines joined by newline."""
+def spans(tokens):
+    """Reading-order spans: (text, n_tokens, n_lines), where the text is
+    one string per line, lines joined by newline."""
     ordered, line_ids = reading_order(tokens)
     lines: list[list[str]] = []
     for tok, li in zip(ordered, line_ids):
         while len(lines) <= li:
             lines.append([])
         lines[li].append(tok["text"])
-    return "\n".join(" ".join(words) for words in lines)
+    return "\n".join(" ".join(words) for words in lines), len(ordered), len(lines)
+
+
+def spans_text(tokens):
+    """Reading-order text: one string per line, lines joined by newline."""
+    return spans(tokens)[0]

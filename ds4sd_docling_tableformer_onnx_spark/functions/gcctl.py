@@ -1,9 +1,10 @@
 """Cyclic-GC suspension for Python-boundary task generators.
 
-The heavy Arrow workers (per-turn extraction, boilerplate strip,
-reading order) churn short-lived ACYCLIC dicts/lists that reference
-counting frees immediately; CPython's generational collector only adds
-overhead there, repeatedly walking a survivor set that grows for the
+The row worker (functions/rows.py), which runs per-turn extraction,
+boilerplate strip, reading order, tensor prep and table decode, churns
+short-lived ACYCLIC dicts/lists that reference counting frees
+immediately; CPython's generational collector only adds overhead
+there, repeatedly walking a survivor set that grows for the
 duration of the task (pinned-core A/B on the extraction core:
 +11-13% turns/s with collection suspended).
 

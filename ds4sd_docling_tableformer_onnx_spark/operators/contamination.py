@@ -150,10 +150,11 @@ def strip_duplicated_substrings(
     corpus (self-repetition included); ``text_col`` is REPLACED by the
     re-joined remainder.  Adds ``n_tokens_pre`` / ``n_sub_removed``.
 
-    Scale shape: gram (pos, xxhash64) structs are built pre-explode in
-    one array expression, so the only wide stages are the gram-count
-    aggregation and the dup-position semi-join — both shuffle 8-byte
-    hashes with map-side combine.  Reconstruction is shuffle-free:
+    Scale shape: gram hashes are built pre-explode in one array
+    expression (``_word_gram_hashes``, positions from ``posexplode``),
+    so the only wide stages are the gram-count aggregation and the
+    dup-position semi-join — both shuffle 8-byte hashes with map-side
+    combine.  Reconstruction is shuffle-free:
     per-doc duplicated starts collect into one bounded array, covered
     positions expand inside an array expression, and the kept text is
     a codegen filter over the token array.  The gram table is persisted
@@ -161,21 +162,13 @@ def strip_duplicated_substrings(
     """
     from ..plans.cache import adopt
 
-    toks = docs.select(id_col, F.split(text_col, " ", -1).alias("_ws"))
-    nw = F.size("_ws")
-    gram_structs = F.when(
-        nw >= n,
-        F.transform(
-            F.sequence(F.lit(1), nw - (n - 1)),
-            lambda i: F.struct(
-                i.alias("pos"),
-                F.xxhash64(F.array_join(F.slice("_ws", i, n), " ")).alias("g"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<pos:int,g:bigint>>"))
+    # gram start positions are 1-based word indices: posexplode's
+    # 0-based array index + 1
     grams = (
-        toks.select(id_col, F.explode(gram_structs).alias("pg"))
-        .select(id_col, F.col("pg.pos").alias("pos"), F.col("pg.g").alias("g"))
+        docs.select(
+            id_col, F.posexplode(_word_gram_hashes(F.col(text_col), n)).alias("i", "g")
+        )
+        .select(id_col, (F.col("i") + 1).alias("pos"), "g")
         .persist()
     )
     hot = grams.groupBy("g").agg(F.count("*").alias("cnt")).where("cnt >= 2")

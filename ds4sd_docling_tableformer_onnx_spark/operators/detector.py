@@ -132,7 +132,7 @@ def _detection_batches(batches: Iterator, predict_fn):
         # results[i]: (labels, scores, boxes) tuple on success, an error
         # STRING on failure — per-image isolation: a bad payload (wrong
         # byte count, model error) becomes one ok=False row, never a
-        # task crash (same discipline as neural.py's _decode_batches)
+        # task crash (same discipline as functions/rows.row_batches)
         results: list = [None] * n
         groups: dict = {}  # (h, w) -> ([row idx], [pixel tensor])
         for i, (payload, height, width) in enumerate(

@@ -30,12 +30,12 @@ from typing import Iterator
 import pyarrow as pa
 
 from ..functions.keys import payload_key_col, payload_key_py
+from ..functions.rows import row_batches, spark_schema
 
 # The worker's output contract, in column order: name, Arrow type, and
-# the value a malformed turn's error row carries.  conv_id/turn_idx pass
-# through from the input batch and payload_sha256 is computed for every
-# row, so their third entry is never used; an error row's ``err`` is the
-# exception text.
+# the value a malformed turn's error row carries (functions/rows.py).
+# conv_id/turn_idx pass through from the input batch and payload_sha256
+# is computed for every row, so their third entry is never used.
 OUTPUT_COLUMNS = (
     ("conv_id", pa.string(), None),
     ("turn_idx", pa.int32(), None),
@@ -55,14 +55,7 @@ OUTPUT_COLUMNS = (
     ("tf_responses_json", pa.string(), "[]"),
     ("payload_sha256", pa.string(), None),
 )
-OUTPUT_ARROW_SCHEMA = pa.schema([(name, type_) for name, type_, _ in OUTPUT_COLUMNS])
-_PASS_THROUGH = ("conv_id", "turn_idx")
-# (name, error-row value) of the columns each turn's extraction fills
-_PER_TURN = tuple(
-    (name, error_value)
-    for name, _, error_value in OUTPUT_COLUMNS
-    if name not in (*_PASS_THROUGH, "payload_sha256")
-)
+_KEEP = ("conv_id", "turn_idx", "payload_sha256")
 
 
 # per-worker memo of the JSON encoding of individual HTML tag strings:
@@ -87,83 +80,60 @@ def _json_str_list(seq):
     return "[" + ", ".join(parts) + "]"
 
 
+def _keyed(batches):
+    """Each batch plus its payload_sha256 column: the shared injective
+    payload key (functions/keys.py), byte-identical to resume_filter's
+    JVM-side expression, so a null payload's error row still carries
+    the key checkpoint resume matches."""
+    for batch in batches:
+        keys = [
+            payload_key_py(text, tool)
+            for text, tool in zip(
+                batch.column("text").to_pylist(), batch.column("tool").to_pylist()
+            )
+        ]
+        yield batch.append_column("payload_sha256", pa.array(keys, pa.string()))
+
+
 def _extract_batches(batches: Iterator, correct_overlapping_cells: bool):
     """Arrow-batch worker: consumes pyarrow RecordBatches, yields
-    RecordBatches of ``OUTPUT_ARROW_SCHEMA`` (mapInArrow — measured ~30%
-    faster than the pandas bridge for this string-heavy output).
-
-    The cyclic GC is suspended for the duration of the task: the per-turn
-    pipeline churns acyclic dicts/lists that refcounting frees instantly,
-    so generational collection walks ever-growing survivor sets for
-    nothing (pinned-core A/B: +11-13% turns/s; functions/gcctl.py)."""
+    RecordBatches of ``OUTPUT_COLUMNS`` through the row worker
+    (mapInArrow — measured ~30% faster than the pandas bridge for this
+    string-heavy output).  ``extract_turn`` is resolved once, when the
+    task starts."""
     from ..core.pipeline import extract_turn
-    from ..functions.gcctl import suspended_gc
 
-    with suspended_gc():
-        for batch in batches:
-            keys = []
-            columns = [[] for _ in _PER_TURN]
-            for text, tool in zip(
-                batch.column("text").to_pylist(),
-                batch.column("tool").to_pylist(),
-            ):
-                # The shared injective payload key (functions/keys.py):
-                # byte-identical to resume_filter's JVM-side expression, so
-                # a null payload is isolated as an error row (never a task
-                # crash) and checkpoint resume matches it exactly.
-                keys.append(payload_key_py(text, tool))
-                # Per-turn isolation must be exception-safe mid-row: compute
-                # the whole row first, append to the column lists only once
-                # it is complete, so a failure at ANY point (payload parse,
-                # extraction, serialization) yields exactly one error row
-                # and never desyncs the Arrow column lengths.
-                try:
-                    payload = json.loads(text)
-                    context = json.loads(tool)
-                    payload.update(context)
-                    payload_id = context.get("payload_id", -1)
-                    result = extract_turn(
-                        payload, correct_overlapping_cells=correct_overlapping_cells
-                    )
-                    html_json = _json_str_list(result["html_seq"])
-                    values = {
-                        **result,
-                        "payload_id": payload_id,
-                        "ok": True,
-                        "err": None,
-                        "html_sha256": hashlib.sha256(
-                            html_json.encode("utf-8")
-                        ).hexdigest(),
-                        "tf_responses_json": json.dumps(result["tf_responses"]),
-                    }
-                    row = [values[name] for name, _ in _PER_TURN]
-                except Exception as exc:  # per-turn isolation: bad payloads
-                    err = f"{type(exc).__name__}: {exc}"[:500]
-                    row = [err if name == "err" else value for name, value in _PER_TURN]
-                for column, value in zip(columns, row):
-                    column.append(value)
-            per_turn = dict(zip((name for name, _ in _PER_TURN), columns))
-            per_turn["payload_sha256"] = keys
-            yield pa.RecordBatch.from_arrays(
-                [
-                    # identity columns pass through as Arrow arrays untouched
-                    # — no pylist round-trip for data the worker never inspects
-                    batch.column(name).cast(type_)
-                    if name in _PASS_THROUGH
-                    else pa.array(per_turn[name], type_)
-                    for name, type_, _ in OUTPUT_COLUMNS
-                ],
-                schema=OUTPUT_ARROW_SCHEMA,
-            )
+    def turn(text, tool):
+        payload = json.loads(text)
+        context = json.loads(tool)
+        payload.update(context)
+        result = extract_turn(payload, correct_overlapping_cells=correct_overlapping_cells)
+        html_json = _json_str_list(result["html_seq"])
+        return (
+            context.get("payload_id", -1),
+            True,
+            None,
+            result["num_rows"],
+            result["num_cols"],
+            result["n_cells"],
+            result["n_matches"],
+            result["bbox_sync"],
+            result["square"],
+            result["matched"],
+            result["rs_seq"],
+            result["html_seq"],
+            hashlib.sha256(html_json.encode("utf-8")).hexdigest(),
+            json.dumps(result["tf_responses"]),
+        )
+
+    return row_batches(_keyed(batches), _KEEP, ("text", "tool"), OUTPUT_COLUMNS, turn)
 
 
 def _map_extract(df, correct_overlapping_cells: bool):
     """``df`` (with conv_id, turn_idx, text, tool) through the worker."""
-    from pyspark.sql.pandas.types import from_arrow_schema
-
     return df.mapInArrow(
         lambda it: _extract_batches(it, correct_overlapping_cells),
-        schema=from_arrow_schema(OUTPUT_ARROW_SCHEMA),
+        schema=spark_schema(OUTPUT_COLUMNS),
     )
 
 

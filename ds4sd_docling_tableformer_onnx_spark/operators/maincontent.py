@@ -11,7 +11,12 @@ scale (BASELINE.json north_star):
   the plan, no shuffle.
 - ``reading_order_spans``        page text tokens (the pdf-cell shape)
   -> ordered text spans with line ids (core/layout.py).  Same
-  mapInArrow shape over a JSON token column.
+  mapInArrow shape over a JSON token column; a malformed token list
+  yields one ``("", 0, 0)`` row.
+
+Each stage is a column declaration plus a row function run by the row
+worker (functions/rows.py), which owns the Arrow build, per-row
+isolation and GC suspension.
 
 Both compose with the table pipeline: a turn's ``tool`` payload carries
 pdf cells for the table matcher, and the same tokens feed the reading-
@@ -22,51 +27,44 @@ from __future__ import annotations
 
 import hashlib
 import json
-from typing import Iterator
 
-STRIP_SCHEMA = (
-    "doc_id long, main_text string, n_blocks int, n_content_blocks int, "
-    "main_sha256 string, parse_error boolean"
+import pyarrow as pa
+
+from ..core.boilerplate import strip_boilerplate
+from ..core.layout import spans
+from ..functions.rows import map_rows
+
+_STRIPPED = (
+    ("main_text", pa.string(), ""),
+    ("n_blocks", pa.int32(), 0),
+    ("n_content_blocks", pa.int32(), 0),
+    ("main_sha256", pa.string(), None),
+    ("parse_error", pa.bool_(), True),
+)
+STRIP_COLUMNS = (("doc_id", pa.int64(), None), *_STRIPPED)
+TURN_STRIP_COLUMNS = (
+    ("conv_id", pa.string(), None),
+    ("turn_idx", pa.int32(), None),
+    *_STRIPPED,
+)
+SPANS_COLUMNS = (
+    ("doc_id", pa.int64(), None),
+    ("ordered_text", pa.string(), ""),
+    ("n_tokens", pa.int32(), 0),
+    ("n_lines", pa.int32(), 0),
 )
 
-SPANS_SCHEMA = (
-    "doc_id long, ordered_text string, n_tokens int, n_lines int"
-)
+
+def _strip_row(html):
+    main, n_blocks, n_content, parse_error = strip_boilerplate(html)
+    main_sha256 = hashlib.sha256(main.encode("utf-8")).hexdigest()
+    return main, n_blocks, n_content, main_sha256, parse_error
 
 
-def _strip_batches(batches: Iterator):
-    import pyarrow as pa
-
-    from ..core.boilerplate import strip_boilerplate
-    from ..functions.gcctl import suspended_gc
-
-    with suspended_gc():
-        yield from _strip_batches_inner(batches, pa, strip_boilerplate)
-
-
-def _strip_batches_inner(batches, pa, strip_boilerplate):
-    for batch in batches:
-        ids = batch.column("doc_id")
-        texts, n_blocks, n_content, shas, errs = [], [], [], [], []
-        for html in batch.column("html").to_pylist():
-            main, nb, nc, perr = strip_boilerplate(html)
-            texts.append(main)
-            n_blocks.append(nb)
-            n_content.append(nc)
-            shas.append(hashlib.sha256(main.encode("utf-8")).hexdigest())
-            errs.append(perr)
-        yield pa.RecordBatch.from_arrays(
-            [
-                ids.cast(pa.int64()),
-                pa.array(texts, pa.string()),
-                pa.array(n_blocks, pa.int32()),
-                pa.array(n_content, pa.int32()),
-                pa.array(shas, pa.string()),
-                pa.array(errs, pa.bool_()),
-            ],
-            names=["doc_id", "main_text", "n_blocks", "n_content_blocks",
-                   "main_sha256", "parse_error"],
-        )
+def _spans_row(tokens_json):
+    # malformed JSON or a malformed token list raises here, and the row
+    # worker emits the declared error row ("", 0, 0)
+    return spans(json.loads(tokens_json) if tokens_json else [])
 
 
 def strip_boilerplate_column(df, id_col: str = "doc_id", html_col: str = "html"):
@@ -74,46 +72,7 @@ def strip_boilerplate_column(df, id_col: str = "doc_id", html_col: str = "html")
     from pyspark.sql import functions as F
 
     pruned = df.select(F.col(id_col).alias("doc_id"), F.col(html_col).alias("html"))
-    return pruned.mapInArrow(_strip_batches, schema=STRIP_SCHEMA)
-
-
-def _spans_batches(batches: Iterator):
-    import pyarrow as pa
-
-    from ..core.layout import reading_order
-    from ..functions.gcctl import suspended_gc
-
-    with suspended_gc():
-        yield from _spans_batches_inner(batches, pa, reading_order)
-
-
-def _spans_batches_inner(batches, pa, reading_order):
-    for batch in batches:
-        ids = batch.column("doc_id")
-        texts, n_tokens, n_lines = [], [], []
-        for tok_json in batch.column("tokens_json").to_pylist():
-            try:
-                tokens = json.loads(tok_json) if tok_json else []
-            except Exception:
-                tokens = []
-            ordered, line_ids = reading_order(tokens)
-            lines: list[list[str]] = []
-            for tok, li in zip(ordered, line_ids):
-                while len(lines) <= li:
-                    lines.append([])
-                lines[li].append(tok["text"])
-            texts.append("\n".join(" ".join(w) for w in lines))
-            n_tokens.append(len(ordered))
-            n_lines.append(len(lines))
-        yield pa.RecordBatch.from_arrays(
-            [
-                ids.cast(pa.int64()),
-                pa.array(texts, pa.string()),
-                pa.array(n_tokens, pa.int32()),
-                pa.array(n_lines, pa.int32()),
-            ],
-            names=["doc_id", "ordered_text", "n_tokens", "n_lines"],
-        )
+    return map_rows(pruned, ("doc_id",), ("html",), STRIP_COLUMNS, _strip_row)
 
 
 def reading_order_spans(df, id_col: str = "doc_id", tokens_col: str = "tokens_json"):
@@ -123,7 +82,7 @@ def reading_order_spans(df, id_col: str = "doc_id", tokens_col: str = "tokens_js
     pruned = df.select(
         F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("tokens_json")
     )
-    return pruned.mapInArrow(_spans_batches, schema=SPANS_SCHEMA)
+    return map_rows(pruned, ("doc_id",), ("tokens_json",), SPANS_COLUMNS, _spans_row)
 
 
 # ---------------------------------------------------------------------------
@@ -193,40 +152,7 @@ def strip_transcript_turns(df, text_col: str = "text"):
     narrow mapInArrow shape as extract_transcripts, so an HTML-payload
     corpus runs the main-content path with identical partitioning,
     checkpointing and skew behavior."""
-    import pyarrow as pa
     from pyspark.sql import functions as F
 
-    from ..core.boilerplate import strip_boilerplate
-
-    def batches(it):
-        for batch in it:
-            texts, n_blocks, n_content, shas, errs = [], [], [], [], []
-            for html in batch.column("text").to_pylist():
-                main, nb, nc, perr = strip_boilerplate(html)
-                texts.append(main)
-                n_blocks.append(nb)
-                n_content.append(nc)
-                shas.append(hashlib.sha256(main.encode("utf-8")).hexdigest())
-                errs.append(perr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("conv_id").cast(pa.string()),
-                    batch.column("turn_idx").cast(pa.int32()),
-                    pa.array(texts, pa.string()),
-                    pa.array(n_blocks, pa.int32()),
-                    pa.array(n_content, pa.int32()),
-                    pa.array(shas, pa.string()),
-                    pa.array(errs, pa.bool_()),
-                ],
-                names=["conv_id", "turn_idx", "main_text", "n_blocks",
-                       "n_content_blocks", "main_sha256", "parse_error"],
-            )
-
     pruned = df.select("conv_id", "turn_idx", F.col(text_col).alias("text"))
-    return pruned.mapInArrow(
-        batches,
-        schema=(
-            "conv_id string, turn_idx int, main_text string, n_blocks int, "
-            "n_content_blocks int, main_sha256 string, parse_error boolean"
-        ),
-    )
+    return map_rows(pruned, ("conv_id", "turn_idx"), ("text",), TURN_STRIP_COLUMNS, _strip_row)

@@ -9,17 +9,41 @@ worker, reused across all Arrow batches.  The actual TableFormer weights
 are not shipped in this environment, so the "model" here is the
 deterministic surrogate (``core.decoder``); a real ONNX session drops
 into ``_Artifacts.predictor`` without touching the Spark plumbing.
+
+Both stages are narrow mapInArrow stages on the row worker
+(functions/rows.py): a column declaration plus a row function, with a
+bad image isolated as one ``ok=False`` row.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-TENSOR_META_SCHEMA = (
-    "item_id long, ok boolean, err string, "
-    "scale_factor double, rounded_bbox array<int>, "
-    "crop_sha256 string, tensor_sha256 string, "
-    "tensor_mean double, tensor_std double, tensor_min double, tensor_max double"
+import pyarrow as pa
+
+from ..functions.rows import map_rows, row_batches, spark_schema
+
+_IMAGE_INPUTS = ("image", "height", "width", "table_bbox")
+TENSOR_COLUMNS = (
+    ("item_id", pa.int64(), None),
+    ("ok", pa.bool_(), False),
+    ("err", pa.string(), None),
+    ("scale_factor", pa.float64(), 0.0),
+    ("rounded_bbox", pa.list_(pa.int32()), []),
+    ("crop_sha256", pa.string(), None),
+    ("tensor_sha256", pa.string(), None),
+    ("tensor_mean", pa.float64(), 0.0),
+    ("tensor_std", pa.float64(), 0.0),
+    ("tensor_min", pa.float64(), 0.0),
+    ("tensor_max", pa.float64(), 0.0),
+)
+DECODE_COLUMNS = (
+    ("item_id", pa.int64(), None),
+    ("ok", pa.bool_(), False),
+    ("err", pa.string(), None),
+    ("tag_seq", pa.list_(pa.int32()), []),
+    ("n_boxes", pa.int32(), 0),
+    ("classes", pa.list_(pa.int32()), []),
 )
 
 
@@ -60,111 +84,62 @@ class _Artifacts:
         return cls._instance
 
 
-def _tensor_batches(batches: Iterator):
-    import hashlib
-
+def _prepared(payload, height, width, bbox):
+    """P1-P3 for one table: the image bytes as an HxWx3 page, cropped,
+    resized and normalized (core/imaging.py)."""
     import numpy as np
-    import pandas as pd
 
     from ..core.imaging import prepare_table_tensor
 
-    artifacts = _Artifacts.get()  # once per worker, reused per batch
-    for batch in batches:
-        rows = {
-            k: []
-            for k in (
-                "item_id", "ok", "err", "scale_factor", "rounded_bbox",
-                "crop_sha256", "tensor_sha256", "tensor_mean", "tensor_std",
-                "tensor_min", "tensor_max",
-            )
-        }
-        for item_id, payload, height, width, bbox in zip(
-            batch["item_id"], batch["image"], batch["height"], batch["width"],
-            batch["table_bbox"],
-        ):
-            rows["item_id"].append(int(item_id))
-            try:
-                img = np.frombuffer(bytes(payload), dtype=np.uint8).reshape(
-                    int(height), int(width), 3
-                )
-                out = prepare_table_tensor(img, list(bbox), artifacts.mean, artifacts.std)
-                tensor = out["tensor"]
-                rows["ok"].append(True)
-                rows["err"].append(None)
-                rows["scale_factor"].append(float(out["scale_factor"]))
-                rows["rounded_bbox"].append(list(out["rounded_bbox"]))
-                rows["crop_sha256"].append(
-                    hashlib.sha256(out["crop"].tobytes()).hexdigest()
-                )
-                rows["tensor_sha256"].append(
-                    hashlib.sha256(tensor.tobytes()).hexdigest()
-                )
-                rows["tensor_mean"].append(float(tensor.mean()))
-                rows["tensor_std"].append(float(tensor.std()))
-                rows["tensor_min"].append(float(tensor.min()))
-                rows["tensor_max"].append(float(tensor.max()))
-            except Exception as exc:
-                rows["ok"].append(False)
-                rows["err"].append(f"{type(exc).__name__}: {exc}"[:300])
-                rows["scale_factor"].append(0.0)
-                rows["rounded_bbox"].append([])
-                for key in ("crop_sha256", "tensor_sha256"):
-                    rows[key].append(None)
-                for key in ("tensor_mean", "tensor_std", "tensor_min", "tensor_max"):
-                    rows[key].append(0.0)
-        yield pd.DataFrame(rows)
+    artifacts = _Artifacts.get()  # once per worker, reused per row
+    img = np.frombuffer(bytes(payload), dtype=np.uint8).reshape(int(height), int(width), 3)
+    return prepare_table_tensor(img, list(bbox), artifacts.mean, artifacts.std)
+
+
+def _tensor_row(payload, height, width, bbox):
+    import hashlib
+
+    out = _prepared(payload, height, width, bbox)
+    tensor = out["tensor"]
+    return (
+        True,
+        None,
+        float(out["scale_factor"]),
+        list(out["rounded_bbox"]),
+        hashlib.sha256(out["crop"].tobytes()).hexdigest(),
+        hashlib.sha256(tensor.tobytes()).hexdigest(),
+        float(tensor.mean()),
+        float(tensor.std()),
+        float(tensor.min()),
+        float(tensor.max()),
+    )
 
 
 def prepare_tensors(df):
     """(item_id, image binary, height, width, table_bbox array<double>)
-    -> tensor metadata.  Narrow mapInPandas stage; on a cluster the image
+    -> tensor metadata.  Narrow mapInArrow stage; on a cluster the image
     bytes come from `spark.read.format("binaryFile")` or an Iceberg blob
     column (S1), and partition byte sizing keeps blobs in memory."""
-    pruned = df.select("item_id", "image", "height", "width", "table_bbox")
-    return pruned.mapInPandas(_tensor_batches, schema=TENSOR_META_SCHEMA)
-
-
-DECODE_SCHEMA = (
-    "item_id long, ok boolean, err string, "
-    "tag_seq array<int>, n_boxes int, classes array<int>"
-)
+    pruned = df.select("item_id", *_IMAGE_INPUTS)
+    return map_rows(pruned, ("item_id",), _IMAGE_INPUTS, TENSOR_COLUMNS, _tensor_row)
 
 
 def _decode_batches(batches: Iterator, predict_fn):
-    import numpy as np
-    import pandas as pd
+    """The predictor is resolved once per task, outside the per-row
+    isolation: a missing model fails the task, it is not a data error."""
+    predict = predict_fn or _Artifacts.get().get_predictor()
 
-    from ..core.imaging import prepare_table_tensor
+    def decode_row(payload, height, width, bbox):
+        decoded = predict(_prepared(payload, height, width, bbox)["tensor"])
+        return (
+            True,
+            None,
+            [int(t) for t in decoded["tag_seq"]],
+            len(decoded["bboxes"]),
+            [int(c) for c in decoded["classes"]],
+        )
 
-    artifacts = _Artifacts.get()
-    predict = predict_fn or artifacts.get_predictor()
-    for batch in batches:
-        rows = {k: [] for k in ("item_id", "ok", "err", "tag_seq", "n_boxes", "classes")}
-        for item_id, payload, height, width, bbox in zip(
-            batch["item_id"], batch["image"], batch["height"], batch["width"],
-            batch["table_bbox"],
-        ):
-            rows["item_id"].append(int(item_id))
-            try:
-                img = np.frombuffer(bytes(payload), dtype=np.uint8).reshape(
-                    int(height), int(width), 3
-                )
-                out = prepare_table_tensor(
-                    img, list(bbox), artifacts.mean, artifacts.std
-                )
-                decoded = predict(out["tensor"])
-                rows["ok"].append(True)
-                rows["err"].append(None)
-                rows["tag_seq"].append([int(t) for t in decoded["tag_seq"]])
-                rows["n_boxes"].append(len(decoded["bboxes"]))
-                rows["classes"].append([int(c) for c in decoded["classes"]])
-            except Exception as exc:
-                rows["ok"].append(False)
-                rows["err"].append(f"{type(exc).__name__}: {exc}"[:300])
-                rows["tag_seq"].append([])
-                rows["n_boxes"].append(0)
-                rows["classes"].append([])
-        yield pd.DataFrame(rows)
+    return row_batches(batches, ("item_id",), _IMAGE_INPUTS, DECODE_COLUMNS, decode_row)
 
 
 def decode_tables(df, predict_fn=None):
@@ -173,18 +148,18 @@ def decode_tables(df, predict_fn=None):
     — the config-gated onnxruntime greedy decoder by default
     (``_Artifacts.get_predictor``), or an injected ``predict_fn(tensor)
     -> {tag_seq, bboxes, classes}`` (the deterministic surrogate in
-    tests).  One narrow mapInPandas stage; model sessions initialize
+    tests).  One narrow mapInArrow stage; model sessions initialize
     once per python worker."""
-    pruned = df.select("item_id", "image", "height", "width", "table_bbox")
-    return pruned.mapInPandas(
-        lambda it: _decode_batches(it, predict_fn), schema=DECODE_SCHEMA
+    pruned = df.select("item_id", *_IMAGE_INPUTS)
+    return pruned.mapInArrow(
+        lambda it: _decode_batches(it, predict_fn), schema=spark_schema(DECODE_COLUMNS)
     )
 
 
 def read_image_directory(spark, path: str, glob: str = "*.png"):
     """S1: directory scan of images as binary payloads
     (run_tableformer_docling.py:42-48 re-expressed on the binaryFile
-    source; decode happens inside the pandas UDF)."""
+    source; decode happens inside the row worker)."""
     return (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", glob)

@@ -9,7 +9,7 @@ the last complete stage, and every stage row carries lineage
 (run_id, stage, partition_id, payload_sha256).
 
 Stages:
-    extract   per-turn extraction (mapInPandas, shuffle-free)
+    extract   per-turn extraction (mapInArrow, shuffle-free)
     cells     exploded response-cell table (relational boundary)
     convdocs  per-conversation ordered document hashes (one shuffle)
 """

@@ -37,6 +37,22 @@ def _read(spark, sf_dir, table):
     return spark.read.parquet(f"{sf_dir}/{table}.parquet")
 
 
+def _work_dir(prefix):
+    """A fresh scratch directory for a query that writes and reads back.
+
+    The returned frame reads it lazily, so removal must outlive the
+    caller's terminal action, which runs after the query returns:
+    atexit, not try/finally (ADVICE r3: repeated sweeps leaked these
+    dirs to /tmp)."""
+    import atexit
+    import shutil
+    import tempfile
+
+    work = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    return work
+
+
 def _widen(df, bytes_per_part: int = 56 << 10):
     """Scale-adaptive scan widening for queries whose map side does
     heavy per-row expression work (gram hashing, fingerprinting, text
@@ -3122,18 +3138,10 @@ _register(
 def q_stream_neardup(spark, sf_dir):
     """(id_a, id_b, hamming) simhash candidates computed by the
     streaming per-bucket state operator."""
-    import atexit
-    import shutil
-    import tempfile
-
     from .streaming.neardup import stream_neardup_candidates
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="stream_neardup_")
-    # The returned frame lazily reads out_dir, so removal must outlive
-    # the caller's terminal action — atexit, not try/finally (ADVICE r3:
-    # repeated sweeps leaked these dirs to /tmp).
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("stream_neardup_")
     in_dir, out_dir, ckpt = f"{work}/in", f"{work}/out", f"{work}/ckpt"
     docs.where("doc_id % 2 = 0").write.parquet(f"{in_dir}/b1")
     docs.where("doc_id % 2 = 1").write.parquet(f"{in_dir}/b2")
@@ -4535,17 +4543,12 @@ _register(
 def q_stream_exact_dedup(spark, sf_dir):
     """(text_md5, keeper_id): one keeper per distinct content key from
     the streaming state operator."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from .streaming.exactdedup import stream_exact_dedup
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="stream_exactdedup_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("stream_exactdedup_")
     in_dir, out_dir, ckpt = f"{work}/in", f"{work}/out", f"{work}/ckpt"
     # ONE file per batch dir (coalesce(1)): with maxFilesPerTrigger=1
     # every part FILE is its own micro-batch, and the oracle's keeper
@@ -5138,15 +5141,10 @@ _register(
 def q_jsonl_roundtrip(spark, sf_dir):
     """(doc_id, lang, source, n_chars, text_md5) read back from a JSONL
     copy of the documents table."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     docs = _read(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="jsonl_rt_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("jsonl_rt_")
     docs.coalesce(4).write.mode("overwrite").json(f"{work}/docs")
     out = spark.read.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
@@ -5348,13 +5346,8 @@ _CSV_READ_OPTS = {
 def q_csv_roundtrip(spark, sf_dir):
     """(doc_id, lang, source, n_chars, text_md5) read back from a
     quoted-CSV copy of the documents table."""
-    import atexit
-    import shutil
-    import tempfile
-
     docs = _read(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="csv_rt_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("csv_rt_")
     (
         docs.coalesce(8)
         .write.mode("overwrite")
@@ -5373,13 +5366,8 @@ _register("csv_roundtrip", q_csv_roundtrip, _ROUNDTRIP_ORACLE)
 def q_orc_roundtrip(spark, sf_dir):
     """(doc_id, lang, source, n_chars, text_md5) read back from an ORC
     copy of the documents table."""
-    import atexit
-    import shutil
-    import tempfile
-
     docs = _read(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="orc_rt_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("orc_rt_")
     docs.coalesce(4).write.mode("overwrite").orc(f"{work}/docs")
     out = spark.read.schema(
         "doc_id long, text string, lang string, source string, n_chars long"
@@ -6452,15 +6440,10 @@ _PRUNE_LANGS = ("de", "fr")
 def q_partitioned_write_prune(spark, sf_dir):
     """(doc_id, lang, source, n_chars, text_md5) for the pruned langs,
     read back through a lang-partitioned copy."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     docs = _read(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="part_prune_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("part_prune_")
     docs.write.mode("overwrite").partitionBy("lang").parquet(f"{work}/docs")
     out = spark.read.parquet(f"{work}/docs").where(
         F.col("lang").isin(*_PRUNE_LANGS)
@@ -6769,14 +6752,9 @@ _register(
 def q_bucketed_colocated_join(spark, sf_dir):
     """(segment, n_orders, revenue_cents) via a zero-shuffle join of
     two bucketed tables."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    work = tempfile.mkdtemp(prefix="bucketed_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("bucketed_")
     (
         # repartition by the bucket key with the bucket count: Spark's
         # bucket spec uses the same HashPartitioning, so each write task
@@ -7276,10 +7254,7 @@ _register(
 def q_stream_sessionize(spark, sf_dir):
     """(user_id, session_start, session_end, n_events) streamed with
     event-time timeouts; equals the batch session_window result."""
-    import atexit
     import datetime as dt
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
@@ -7291,8 +7266,7 @@ def q_stream_sessionize(spark, sf_dir):
     ).first()
     gap = dt.timedelta(minutes=10)
 
-    work = tempfile.mkdtemp(prefix="stream_sessionize_")
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    work = _work_dir("stream_sessionize_")
     in_dir, out_dir, ckpt = f"{work}/in", f"{work}/out", f"{work}/ckpt"
     # batches MUST be split on TIME (a watermark-ordered ingest), never
     # on a surrogate id: sf1's remix recycles timestamps under fresh

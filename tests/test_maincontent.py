@@ -110,6 +110,32 @@ def test_reading_order_spark_operator(spark):
         assert out[d]["ordered_text"].splitlines()[0] == f"w{d}_0 w{d}_1 w{d}_2 w{d}_3"
 
 
+def test_reading_order_spans_isolates_malformed_token_lists(spark):
+    """A malformed token list is one ("", 0, 0) row — the row malformed
+    JSON gets — and never fails the task or disturbs the good rows."""
+    good = {
+        d: json.dumps([_token(i, f"g{d}_{i}", i * 20.0, 50.0 - d) for i in range(3)])
+        for d in range(3)
+    }
+    malformed = {
+        10: json.dumps([{"id": 0, "text": "no bbox"}]),
+        11: json.dumps({"id": 0, "text": "object", "bbox": [0, 0, 1, 1]}),
+        12: json.dumps([1, 2]),
+        13: json.dumps([{"id": 0, "text": "short bbox", "bbox": [0, 0, 1]}]),
+    }
+    df = spark.createDataFrame(
+        sorted({**good, **malformed}.items()), "doc_id long, tokens_json string"
+    )
+    rows = reading_order_spans(df).collect()
+    assert len(rows) == len(good) + len(malformed)
+    out = {r["doc_id"]: tuple(r)[1:] for r in rows}
+    for d in malformed:
+        assert out[d] == ("", 0, 0)
+    for d, tokens_json in good.items():
+        assert out[d] == (f"g{d}_0 g{d}_1 g{d}_2", 3, 1)
+        assert out[d][0] == spans_text(json.loads(tokens_json))
+
+
 def test_boilerplate_spark_operator_shuffle_free(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     stripped = strip_boilerplate_column(synthesize_pages(docs))
