@@ -8,9 +8,22 @@ Scale notes (100 TB):
 - SimHash needs per-row bit arithmetic over token hashes; it runs as an
   Arrow-batched pandas UDF (vectorized numpy inside, no per-row Python
   in the plan).
+- Banded candidates have one definition here: ``band_layout``
+  posexplodes a signature's bands into ``(band, key)`` rows and
+  ``band_pairs`` is the single self-equi-join that emits each pair from
+  the lowest band it shares.  ``simhash_candidates``, the MinHash query
+  and the streaming near-dup operator (``streaming/neardup.py``) all
+  use this layout.
 """
 
 from __future__ import annotations
+
+# SimHash LSH layout: the 64-bit signature cut into N_BANDS bands of
+# BAND_BITS bits.  Two signatures within hamming distance
+# N_BANDS - 1 agree on at least one band.
+BAND_BITS = 16
+N_BANDS = 4
+BAND_MASK = (1 << BAND_BITS) - 1
 
 
 def simhash_column(df, text_col: str = "text", bits: int = 64):
@@ -18,8 +31,8 @@ def simhash_column(df, text_col: str = "text", bits: int = 64):
     hashes (md5-derived), Arrow-batched.
 
     Near-dup candidates are rows whose signatures differ in few bits;
-    pair them by banding the signature into 4 x 16-bit keys (same LSH
-    shape as MinHash banding).
+    ``simhash_candidates`` pairs them through the ``simhash_bands``
+    layout (same LSH shape as MinHash banding).
 
     Tokenization is EXPLICITLY the class ``[\\t\\n\\f\\r ]+`` — RE2's
     ``\\s`` spelled out — NOT Python ``\\s``: the signature is part of
@@ -113,65 +126,84 @@ def simhash_column(df, text_col: str = "text", bits: int = 64):
     return df.withColumn("simhash", _simhash(F.col(text_col)))
 
 
+def simhash_bands(sig):
+    """The ``N_BANDS`` x ``BAND_BITS`` band keys of a 64-bit signature
+    column, band 0 in the lowest bits, as an array column.
+
+    bitwiseAND, not %: a signed remainder would send negative
+    signatures' band 0 to a negative key, splitting buckets across the
+    sign boundary and breaking the hamming <= 3 pigeonhole guarantee."""
+    from pyspark.sql import functions as F
+
+    return F.array(
+        *[
+            F.shiftrightunsigned(sig, BAND_BITS * i).bitwiseAND(F.lit(BAND_MASK))
+            for i in range(N_BANDS)
+        ]
+    )
+
+
+def band_layout(df, bands, *cols):
+    """One row per band of each row of ``df``: ``(*cols, bands, band,
+    key)``, where ``bands`` is the array column of band keys and
+    ``band`` the 0-based position of ``key`` in it.  The batch band
+    join and the streaming bucket state both key on ``(band, key)``."""
+    from pyspark.sql import functions as F
+
+    return df.select(*cols, bands.alias("bands")).select(
+        "*", F.posexplode("bands").alias("band", "key")
+    )
+
+
+def band_pairs(layout, id_col: str):
+    """Candidate pairs of a ``band_layout`` table, aliased ``a``/``b``:
+    ONE self-equi-join on ``(band, key)`` with ``a.id < b.id``, keeping
+    a pair only on the LOWEST band the two share.  Each candidate pair
+    is therefore emitted exactly once, with no dedup shuffle over the
+    (quadratic) pair output; the join shuffles only the band table,
+    which AQE broadcast-converts when small."""
+    from pyspark.sql import functions as F
+
+    a, b = layout.alias("a"), layout.alias("b")
+    # 1-based position of the first band whose keys are equal
+    first_shared = F.array_position(
+        F.zip_with(F.col("a.bands"), F.col("b.bands"), lambda x, y: x == y), True
+    )
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.key") == F.col("b.key"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        & (first_shared == F.col("a.band") + 1),
+    )
+
+
 def simhash_candidates(df, id_col: str = "doc_id"):
-    """Candidate near-dup pairs: equi-join on any shared 16-bit band of
-    the simhash (finds all pairs within hamming distance 3 of a 64-bit
-    signature, by pigeonhole).
+    """Candidate near-dup pairs ``(id_a, id_b, hamming)``: docs sharing
+    any 16-bit band of the simhash (finds all pairs within hamming
+    distance 3 of a 64-bit signature, by pigeonhole), through
+    ``band_pairs``.
 
-    Band-exclusion plan (same trick as the MinHash query, commit
-    8a651a0): each pair is emitted from the FIRST band it shares —
-    band i's join requires bands 0..i-1 to differ — so the union is
-    exactly the distinct candidate set with NO dedup shuffle over the
-    (quadratic) pair output.  Each of the 4 joins shuffles only the
-    one-row-per-doc signature table, which AQE broadcast-converts when
-    small.
-
-    The signature table is persisted before the self-joins: without it
-    the 4 joins re-run the signature UDF on both sides (8 corpus
-    passes; measured 4x slower at sf0.1).  At 10^12-doc scale the same
+    The band table is persisted before the self-join: without it both
+    join sides re-run the signature UDF.  At 10^12-doc scale the same
     move is writing signatures to a (bucketed) table once — ~20 B/doc —
     and band-joining the materialized table; persist() is the in-plan
-    analog at bench scale.  The returned frame owns the persisted
-    signature table: release with ``plans.cache.release(result)`` after
-    the terminal action."""
+    analog at bench scale.  The returned frame owns the persisted band
+    table: release with ``plans.cache.release(result)`` after the
+    terminal action."""
     from pyspark.sql import functions as F
 
     from ..plans.cache import adopt
 
-    banded = df.select(
-        id_col,
-        "simhash",
-        *[
-            # bitwiseAND, not %: signed remainder would send negative
-            # signatures' band 0 to a negative key, splitting buckets
-            # across the sign boundary and breaking the hamming<=3
-            # pigeonhole guarantee
-            F.shiftrightunsigned("simhash", 16 * i)
-            .bitwiseAND(F.lit(65535))
-            .alias(f"b{i}")
-            for i in range(4)
-        ],
-    )
-    banded = banded.persist()
-    a, b = banded.alias("a"), banded.alias("b")
-    lt = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
-    out = (
+    layout = band_layout(df, simhash_bands("simhash"), id_col, "simhash").persist()
+    pairs = band_pairs(layout, id_col).select(
         F.col(f"a.{id_col}").alias("id_a"),
         F.col(f"b.{id_col}").alias("id_b"),
         F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
         .cast("long")
         .alias("hamming"),
     )
-    parts = []
-    for i in range(4):
-        cond = (F.col(f"a.b{i}") == F.col(f"b.b{i}")) & lt
-        for j in range(i):
-            cond = cond & (F.col(f"a.b{j}") != F.col(f"b.b{j}"))
-        parts.append(a.join(b, cond).select(*out))
-    result = parts[0]
-    for part in parts[1:]:
-        result = result.unionAll(part)
-    return adopt(result, banded)
+    return adopt(pairs, layout)
 
 
 def bloom_key_positions(key_col, m: int, n_hashes: int = 7):

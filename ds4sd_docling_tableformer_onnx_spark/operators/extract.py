@@ -58,28 +58,6 @@ OUTPUT_COLUMNS = (
 _KEEP = ("conv_id", "turn_idx", "payload_sha256")
 
 
-# per-worker memo of the JSON encoding of individual HTML tag strings:
-# html_seq draws from a fixed structural-tag vocabulary, so encoding a
-# 60-tag sequence is 60 dict hits instead of one iterencode walk.  This
-# caches ENCODINGS of vocabulary strings, never extraction results.
-_TAG_JSON: dict = {}
-
-
-def _json_str_list(seq):
-    """Byte-identical to ``json.dumps(seq)`` for a list of strings:
-    json.dumps uses ', ' separators, so the element-joined form is the
-    same bytes (and the SHA-256 over it is unchanged — pinned by the
-    pool-verification pass_rate and fixture tests)."""
-    cache = _TAG_JSON
-    parts = []
-    for s in seq:
-        j = cache.get(s)
-        if j is None:
-            j = cache[s] = json.dumps(s)
-        parts.append(j)
-    return "[" + ", ".join(parts) + "]"
-
-
 def _keyed(batches):
     """Each batch plus its payload_sha256 column: the shared injective
     payload key (functions/keys.py), byte-identical to resume_filter's
@@ -108,7 +86,6 @@ def _extract_batches(batches: Iterator, correct_overlapping_cells: bool):
         context = json.loads(tool)
         payload.update(context)
         result = extract_turn(payload, correct_overlapping_cells=correct_overlapping_cells)
-        html_json = _json_str_list(result["html_seq"])
         return (
             context.get("payload_id", -1),
             True,
@@ -122,7 +99,7 @@ def _extract_batches(batches: Iterator, correct_overlapping_cells: bool):
             result["matched"],
             result["rs_seq"],
             result["html_seq"],
-            hashlib.sha256(html_json.encode("utf-8")).hexdigest(),
+            hashlib.sha256(json.dumps(result["html_seq"]).encode("utf-8")).hexdigest(),
             json.dumps(result["tf_responses"]),
         )
 

@@ -1,10 +1,9 @@
 """Caller-owned lifecycle for operator-internal persisted frames.
 
 Several operators persist an intermediate so one materialization feeds
-multiple downstream consumers (the simhash signature table feeding 4
-band joins, the LSH bucket table feeding the pair self-join, the
-distinct-payload table feeding both the broadcast-decision count and
-the extraction pass).  ``persist()`` pins executor storage until
+multiple downstream consumers (the simhash and MinHash band tables
+feeding both sides of the band join, the distinct-payload table
+feeding both the broadcast-decision count and the extraction pass).  ``persist()`` pins executor storage until
 ``unpersist()`` — in a long-lived driver (oracle sweeps, bench visits,
 notebook sessions) operators that never release would accumulate cached
 blocks until session end.

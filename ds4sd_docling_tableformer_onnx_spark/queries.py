@@ -22,6 +22,8 @@ hash.
 from __future__ import annotations
 
 from .functions.sampling import ring_sql
+from .operators.dedup import BAND_BITS, BAND_MASK, N_BANDS
+from .operators.similarity import _dot
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -1070,6 +1072,7 @@ def q_minhash_lsh(spark, sf_dir):
     docs sharing a band bucket are near-dup candidates."""
     from pyspark.sql import functions as F
 
+    from .operators.dedup import band_layout, band_pairs
     from .plans.cache import adopt
 
     # widened: 8 md5 evaluations per distinct (doc, word) dominate the
@@ -1088,31 +1091,21 @@ def q_minhash_lsh(spark, sf_dir):
             for i in range(_MINHASH_PERMS)
         ]
     )
-    # persisted: the two band self-joins would otherwise re-run the
-    # signature aggregation once per join side (the simhash_candidates
-    # discipline); released by the caller via plans/cache.release
-    banded = sigs.select(
+    # persisted: both sides of the band join would otherwise re-run
+    # the signature aggregation; released by the caller via
+    # plans/cache.release
+    layout = band_layout(
+        sigs,
+        F.array(
+            F.concat_ws("|", "m0", "m1", "m2", "m3"),
+            F.concat_ws("|", "m4", "m5", "m6", "m7"),
+        ),
         "doc_id",
-        F.concat_ws("|", "m0", "m1", "m2", "m3").alias("band0"),
-        F.concat_ws("|", "m4", "m5", "m6", "m7").alias("band1"),
     ).persist()
-    # Band-exclusion dedup: emit each colliding pair from the FIRST band
-    # it shares — band1 collisions that also collide on band0 are
-    # filtered, so the union is exactly the distinct candidate set with
-    # no dedup shuffle over the (quadratic) pair output. Each equi-join
-    # shuffles only the doc-signature table (one row per doc), which AQE
-    # broadcast-converts when the build side is small.
-    a, b = banded.alias("a"), banded.alias("b")
-    lt = F.col("a.doc_id") < F.col("b.doc_id")
-    pairs0 = a.join(b, (F.col("a.band0") == F.col("b.band0")) & lt)
-    pairs1 = a.join(
-        b,
-        (F.col("a.band1") == F.col("b.band1"))
-        & (F.col("a.band0") != F.col("b.band0"))
-        & lt,
+    pairs = band_pairs(layout, "doc_id").select(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
-    out = F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-    return adopt(pairs0.select(*out).unionAll(pairs1.select(*out)), banded)
+    return adopt(pairs, layout)
 
 
 _MINHASH_SIG_SQL = ",".join(
@@ -1260,16 +1253,6 @@ _register(
 # ---------------------------------------------------------------------------
 # Similarity search (embeddings)
 # ---------------------------------------------------------------------------
-
-def _dot(a, b):
-    from pyspark.sql import functions as F
-
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
 
 def q_ann_topk(spark, sf_dir):
     """Brute-force cosine top-10 vs a fixed query vector (vec_id 0) —
@@ -1576,8 +1559,9 @@ def q_simhash_candidates(spark, sf_dir):
     return simhash_candidates(simhash_column(docs))
 
 
-# the full signature construction, shared by the dedup_groups oracle
-_SIMHASH_PAIRS_SQL = """
+# the full signature construction, shared by the dedup_groups oracle;
+# the band layout comes from operators/dedup.py
+_SIMHASH_PAIRS_SQL = f"""
     WITH words AS (
         -- regex whitespace split + empty drop == the operator's
         -- re.split(r'[\\t\\n\\f\\r ]+'): since r5 the Spark UDF pins
@@ -1610,8 +1594,8 @@ _SIMHASH_PAIRS_SQL = """
         SELECT d.doc_id, COALESCE(w.sig, 0::UBIGINT) AS sig
         FROM documents d LEFT JOIN word_sigs w ON w.doc_id = d.doc_id
     ), bands AS (
-        SELECT doc_id, sig, i, (sig >> (16 * i)) & 65535 AS band
-        FROM sigs, range(4) t(i)
+        SELECT doc_id, sig, i, (sig >> ({BAND_BITS} * i)) & {BAND_MASK} AS band
+        FROM sigs, range({N_BANDS}) t(i)
     )
     SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
            CAST(bit_count(xor(a.sig, b.sig)) AS BIGINT) AS hamming
@@ -2510,11 +2494,6 @@ def q_ann_batch(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v
-        )
-
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.where("vec_id < 5").select(
         F.col("vec_id").alias("query_id"),
@@ -3126,7 +3105,7 @@ _register(
 # Streaming near-dup candidates (§2.11) — the stateful streaming
 # operator value-checked against the SAME DuckDB oracle as the batch
 # path: streaming/neardup.py is constructed so its append-stream union
-# over band buckets equals the batch band-exclusion candidate set
+# over band buckets equals the batch band-join candidate set
 # exactly, so a stateful-streaming operator gets a full value oracle
 # instead of the weaker rows-only check.  The query lands the sf
 # documents as two parquet files, drains an availableNow stream over
@@ -3139,6 +3118,7 @@ def q_stream_neardup(spark, sf_dir):
     """(id_a, id_b, hamming) simhash candidates computed by the
     streaming per-bucket state operator."""
     from .streaming.neardup import stream_neardup_candidates
+    from .streaming.stream import run_to_completion
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
     work = _work_dir("stream_neardup_")
@@ -3151,16 +3131,7 @@ def q_stream_neardup(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{in_dir}/*")
     )
-    query = (
-        stream_neardup_candidates(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_to_completion(stream_neardup_candidates(stream), out_dir, ckpt)
     return spark.read.parquet(out_dir)
 
 
@@ -4546,6 +4517,7 @@ def q_stream_exact_dedup(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from .streaming.exactdedup import stream_exact_dedup
+    from .streaming.stream import run_to_completion
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "text")
     work = _work_dir("stream_exactdedup_")
@@ -4568,16 +4540,7 @@ def q_stream_exact_dedup(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{in_dir}/*")
     )
-    query = (
-        stream_exact_dedup(stream)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    run_to_completion(stream_exact_dedup(stream), out_dir, ckpt)
     return spark.read.parquet(out_dir)
 
 

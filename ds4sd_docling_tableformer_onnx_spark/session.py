@@ -20,7 +20,7 @@ def build_session(
     from pyspark.sql import SparkSession
 
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     if shuffle_partitions is None:
         # one shuffle partition per core by default; a real cluster would
         # size this to total executor cores (AQE coalesces the excess)

@@ -1,20 +1,21 @@
 """Streaming near-duplicate candidate detection.
 
 The batch near-dup path (operators/dedup.py: simhash signatures ->
-4 x 16-bit band-exclusion self-joins) re-expressed incrementally: as
-documents arrive on a stream, each lands in its 4 simhash band
-buckets, and a per-bucket ``applyInPandasWithState`` keeps the
-signatures seen so far in that bucket.  A new document emits one
-candidate row per stored bucket member — but only from the FIRST band
-the pair shares (the same band-exclusion rule as the batch joins,
-decidable from the two signatures alone), so the streamed union over
-all four band groups is exactly the batch candidate set, with no
-cross-bucket dedup.
+``band_layout`` -> the ``band_pairs`` self-join) re-expressed
+incrementally: as documents arrive on a stream, each lands in its
+simhash ``(band, key)`` buckets — the same ``band_layout`` rows and
+``BAND_BITS``/``N_BANDS`` constants the batch join uses — and a
+per-bucket ``applyInPandasWithState`` keeps the signatures seen so far
+in that bucket.  A new document emits one candidate row per stored
+bucket member — but only from the LOWEST band the pair shares (the
+batch join's band-pair rule, decidable from the two signatures alone),
+so the streamed union over all band groups is exactly the batch
+candidate set, with no cross-bucket dedup.
 
 State boundedness (the only shape that survives an unbounded stream):
 
 - state per bucket is (ids, sigs) arrays — ~16 B per document per
-  band, and bucket population is corpus_size / 2^16 per band in
+  band, and bucket population is corpus_size / 2^BAND_BITS per band in
   expectation;
 - ``max_state_rows`` caps a bucket's stored population: once full,
   new arrivals still COMPARE against the stored rows (and emit their
@@ -35,9 +36,7 @@ produce the identical row.
 
 from __future__ import annotations
 
-BAND_BITS = 16
-N_BANDS = 4
-_BAND_MASK = (1 << BAND_BITS) - 1
+from ..operators.dedup import BAND_BITS, BAND_MASK, N_BANDS
 
 OUTPUT_SCHEMA = "id_a bigint, id_b bigint, hamming bigint"
 STATE_SCHEMA = "ids array<bigint>, sigs array<bigint>, dropped bigint"
@@ -79,12 +78,12 @@ def _make_update(max_state_rows: int):
             sig_u = np.uint64(np.int64(sig).view(np.uint64))
             if size:
                 diff = buf_sigs[:size] ^ sig_u
-                # first shared 16-bit band (descending writes: lowest
-                # band index wins), mirroring the batch band-exclusion
+                # first shared band (descending writes: lowest band
+                # index wins), the batch band_pairs rule
                 first = np.full(size, -1, dtype=np.int64)
                 for i in range(N_BANDS - 1, -1, -1):
                     eq = (
-                        (diff >> np.uint64(BAND_BITS * i)) & np.uint64(_BAND_MASK)
+                        (diff >> np.uint64(BAND_BITS * i)) & np.uint64(BAND_MASK)
                     ) == 0
                     first[eq] = i
                 mask = (first == band_idx) & (buf_ids[:size] != doc_id)
@@ -141,25 +140,15 @@ def stream_neardup_candidates(
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..operators.dedup import simhash_column
+    from ..operators.dedup import band_layout, simhash_bands, simhash_column
 
-    sigs = simhash_column(docs_stream, text_col=text_col).select(
-        F.col(id_col).alias("doc_id"), "simhash"
-    )
-    banded = sigs.select(
-        "doc_id",
+    banded = band_layout(
+        simhash_column(docs_stream, text_col=text_col),
+        simhash_bands("simhash"),
+        F.col(id_col).alias("doc_id"),
         "simhash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned("simhash", BAND_BITS * i)
-                    .bitwiseAND(F.lit(_BAND_MASK))
-                    for i in range(N_BANDS)
-                ]
-            )
-        ).alias("band", "band_key"),
-    )
-    return banded.groupBy("band", "band_key").applyInPandasWithState(
+    ).drop("bands")
+    return banded.groupBy("band", "key").applyInPandasWithState(
         _make_update(max_state_rows),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,

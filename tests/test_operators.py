@@ -118,7 +118,7 @@ def test_simhash_banding_pigeonhole_property(spark):
     for id_a, id_b, hamming in planted:
         if hamming == 0 or hamming <= 3:
             assert got[(id_a, id_b)] == hamming
-    # no pair appears twice (band-exclusion union is already distinct)
+    # no pair appears twice (each pair joins only on its lowest shared band)
     pairs = [
         (r["id_a"], r["id_b"]) for r in simhash_candidates(df).collect()
     ]

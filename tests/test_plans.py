@@ -105,9 +105,9 @@ def test_scalar_queries_stay_in_wholestage_codegen(spark):
 
 
 def test_simhash_pair_output_never_shuffles(spark):
-    """Band-exclusion candidates: the four self-joins read ONE persisted
-    signature pass (InMemoryTableScan) and the (quadratic) pair output
-    flows to the sink with no distinct/exchange over it."""
+    """Banded candidates: both sides of the one band self-join read ONE
+    persisted band table (InMemoryTableScan) and the (quadratic) pair
+    output flows to the sink with no distinct/exchange over it."""
     from ds4sd_docling_tableformer_onnx_spark.queries import QUERIES
 
     df = QUERIES["simhash_candidates"](spark, "/root/testdata/sf0.001")

@@ -13,7 +13,7 @@ import __spark_entry__ as entry_mod
 SF = "/root/testdata/sf0.001"
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
-SPOT = ["dense_rank_reindex", "exact_median_per_group", "band_join", "minhash_lsh_pairs", "lang_id", "pack_sequences", "cluster_split"]
+SPOT = ["dense_rank_reindex", "exact_median_per_group", "band_join", "minhash_lsh_pairs", "simhash_candidates", "lang_id", "pack_sequences", "cluster_split"]
 
 
 @pytest.fixture(scope="module")

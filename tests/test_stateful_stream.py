@@ -246,7 +246,7 @@ def test_stream_dedup_matches_batch_dedup(spark, tmp_path):
 
 def test_stream_neardup_matches_batch_candidates(spark, tmp_path):
     """Streaming simhash near-dup candidates == the batch
-    band-exclusion self-join output, row for row, with the corpus
+    band self-join output, row for row, with the corpus
     split across micro-batches (cross-batch bucket state exercised)."""
     from ds4sd_docling_tableformer_onnx_spark.operators.dedup import (
         simhash_candidates,
