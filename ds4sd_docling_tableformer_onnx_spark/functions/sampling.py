@@ -169,6 +169,8 @@ def pack_sequences(df, max_seq_len: int):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from .local import local_frame
+
     ranked = (
         df.repartitionByRange(_PACK_RANGES, "doc_id")
         .withColumn("rng", F.spark_partition_id().cast("long"))
@@ -183,7 +185,8 @@ def pack_sequences(df, max_seq_len: int):
         offsets[rng] = acc
         acc += totals[rng]
     off_df = F.broadcast(
-        df.sparkSession.createDataFrame(
+        local_frame(
+            df.sparkSession,
             [(int(k), int(v)) for k, v in offsets.items()] or [(0, 0)],
             "rng long, off long",
         )

@@ -135,12 +135,14 @@ def connected_components(
                 parent[rb] = ra
         from pyspark.sql import types as T
 
-        spark = edges_df.sparkSession
+        from ..functions.local import local_frame
+
         # nodes that never acquired a parent are their own component
         # min; the map-back coalesce covers them via c0
         comp_rows = [(n, find(n)) for n in parent]
         dt = contracted.schema["a"].dataType
-        loop_labels = spark.createDataFrame(
+        loop_labels = local_frame(
+            edges_df.sparkSession,
             comp_rows,
             T.StructType([T.StructField("id", dt), T.StructField("comp", dt)]),
         )

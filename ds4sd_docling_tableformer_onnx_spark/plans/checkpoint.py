@@ -145,7 +145,9 @@ def resume_filter(input_df, spark, checkpoint_path: str):
     done = read_checkpoint(spark, checkpoint_path)
     if done is None:
         return input_df, 0
-    done_keys = done.select("conv_id", "turn_idx", "payload_sha256").dropDuplicates()
+    # no dedup: semi/anti joins ignore duplicate right-side keys, and a
+    # dropDuplicates would cost a shuffle stage per join
+    done_keys = done.select(*CHECKPOINT_KEYS)
     hashed = input_df.withColumn("payload_sha256", payload_key_col("text", "tool"))
     remaining = hashed.join(done_keys, list(CHECKPOINT_KEYS), "left_anti")
     skipped = hashed.join(done_keys, list(CHECKPOINT_KEYS), "left_semi").count()

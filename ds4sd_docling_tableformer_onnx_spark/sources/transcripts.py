@@ -21,13 +21,15 @@ def payload_pool_df(spark):
     """The payload pool as a broadcastable dimension DataFrame."""
     from pyspark.sql import functions as F
 
+    from ..functions.local import local_frame
     from .fixtures import payload_pool
 
     rows = [
         (e["payload_id"], e["kind"], e["text"], e["tool"], e["expected_html_json"], e["expected_tf_json"])
         for e in payload_pool()
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "payload_id int, kind string, text string, tool string, "
         "expected_html_json string, expected_tf_json string",

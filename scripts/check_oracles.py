@@ -25,7 +25,7 @@ def main(sf_dir="/root/testdata/sf0.01", *names):
     from ds4sd_docling_tableformer_onnx_spark.queries import ORACLES, QUERIES
     from ds4sd_docling_tableformer_onnx_spark.session import build_session
 
-    spark = build_session(app_name="oracle-check", cores=8, shuffle_partitions=8)
+    spark = build_session(app_name="oracle-check")
     con = duckdb.connect()
     for table in TABLES:
         con.execute(

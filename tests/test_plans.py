@@ -75,6 +75,25 @@ def test_verification_join_broadcasts_the_pool(spark, transcript_parquet):
     assert "ShuffledHashJoin" not in plan
 
 
+def test_driver_built_frames_are_local_relations(spark):
+    """Driver-built frames plan as LocalTableScan (no Python scan tasks)
+    with the schema and rows the list-built form had."""
+    from ds4sd_docling_tableformer_onnx_spark.functions.local import local_frame
+
+    plan = _executed_plan(payload_pool_df(spark))
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+    ddl = "id int, name string, score double, ids array<bigint>"
+    rows = [(1, "a", None, [1, 2]), (2, None, 3.5, None), (None, "c", -0.0, [])]
+    got = local_frame(spark, rows, ddl)
+    listed = spark.createDataFrame(rows, ddl)
+    assert got.schema == listed.schema
+    assert got.collect() == listed.collect()
+    assert "LocalTableScan" in _executed_plan(got)
+    assert local_frame(spark, [], ddl).schema == listed.schema
+    assert local_frame(spark, [], ddl).count() == 0
+
+
 def test_lang_id_is_a_single_map_stage(spark):
     """lang_id votes via per-row array expressions: no join, no
     aggregation, no exchange anywhere in the plan."""

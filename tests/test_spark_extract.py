@@ -345,6 +345,33 @@ def test_resume_filter_distinguishes_concat_colliding_payloads(spark, tmp_path):
     assert skipped2 == 1
 
 
+def test_resume_filter_ignores_duplicate_checkpoint_keys(spark, tmp_path):
+    """A checkpoint that holds each done key twice skips the same turns
+    and yields the same new rows as one that holds it once: the semi and
+    anti joins need no dedup of the checkpoint side."""
+    from ds4sd_docling_tableformer_onnx_spark.plans.checkpoint import write_checkpoint
+
+    df = generate_transcripts(spark, n_turns=120, n_convs=6, seed=11)
+    done = extract_transcripts(df.where(F.col("turn_idx") < 4))
+    once, twice = str(tmp_path / "once"), str(tmp_path / "twice")
+    write_checkpoint(done, once, run_id="r0", stage="extract")
+    for _ in range(2):
+        write_checkpoint(done, twice, run_id="r0", stage="extract")
+
+    results = []
+    for path in (once, twice):
+        new_rows, skipped = run_with_checkpoint(spark, df, path, run_id="r1")
+        rows = sorted(
+            (r["conv_id"], r["turn_idx"], r["html_sha256"])
+            for r in new_rows.collect()
+        )
+        results.append((skipped, rows))
+    assert results[0] == results[1]
+    skipped, rows = results[0]
+    assert skipped == done.count() > 0
+    assert len(rows) == 120 - skipped
+
+
 def test_deduped_extraction_distinguishes_concat_colliding_payloads(spark):
     """(text=T+'\\x00'+O, tool=NULL) and (text=T, tool=O) collide under a
     naive concat_ws key (it skips NULLs); the dedup key must keep them
