@@ -10,7 +10,8 @@ Usage:
     python bench_extra.py --explain TAG q1 ... # also dump plans
     python bench_extra.py --runs 3 q1
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the machine's core count, as in
+     session.build_session).
 """
 
 from __future__ import annotations
@@ -24,7 +25,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def main():
@@ -48,7 +48,7 @@ def main():
     from ds4sd_docling_tableformer_onnx_spark.queries import QUERIES
     from ds4sd_docling_tableformer_onnx_spark.session import build_session
 
-    spark = build_session(app_name="bench-extra", cores=CPUS)
+    spark = build_session(app_name="bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
     # warm the JVM + python worker pool (same as bench.py)
     warm = QUERIES["dense_rank_reindex"](spark, SF_DIR)

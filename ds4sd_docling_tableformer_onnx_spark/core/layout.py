@@ -66,8 +66,3 @@ def spans(tokens):
             lines.append([])
         lines[li].append(tok["text"])
     return "\n".join(" ".join(words) for words in lines), len(ordered), len(lines)
-
-
-def spans_text(tokens):
-    """Reading-order text: one string per line, lines joined by newline."""
-    return spans(tokens)[0]

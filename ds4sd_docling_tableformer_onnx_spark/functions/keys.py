@@ -1,22 +1,19 @@
 """The ONE payload key, shared by every consumer.
 
 A (text, tool) payload is identified by a single injective SHA-256 key
-used by all four places that must agree:
+used by all three places that must agree:
 
 - the extraction worker's lineage column (operators/extract.py,
   Python side inside the Arrow batch);
 - the checkpoint resume anti-join (plans/checkpoint.py, JVM side);
-- the dedup-aware extraction's distinct key (operators/extract.py,
-  JVM side);
 - the checkpoint table's stored ``payload_sha256``.
 
 Why not ``sha2(concat_ws("\\x00", text, tool))``: ``concat_ws`` SKIPS
 null parts, so ``(text='a\\x00b', tool=NULL)`` collides with
 ``(text='a', tool='b')`` and NULL is indistinguishable from ``''``.  On
-the resume path that collision mis-skips a changed payload; on the
-dedup path it silently assigns one payload's results to another's
-turns.  Hashing each part separately to a fixed width with an explicit
-null marker makes the key injective over (text, tool) pairs:
+the resume path that collision mis-skips a changed payload.  Hashing
+each part separately to a fixed width with an explicit null marker
+makes the key injective over (text, tool) pairs:
 
     key = sha256( part(text) || part(tool) )
     part(v) = "\\x01null" if v IS NULL else hex(sha256(utf8(v)))

@@ -29,7 +29,7 @@ from typing import Iterator
 
 import pyarrow as pa
 
-from ..functions.keys import payload_key_col, payload_key_py
+from ..functions.keys import payload_key_py
 from ..functions.rows import row_batches, spark_schema
 
 # The worker's output contract, in column order: name, Arrow type, and
@@ -125,80 +125,6 @@ def extract_transcripts(df, correct_overlapping_cells: bool = False):
     """
     pruned = df.select("conv_id", "turn_idx", "text", "tool")
     return _map_extract(pruned, correct_overlapping_cells)
-
-
-def extract_transcripts_deduped(df, correct_overlapping_cells: bool = False, broadcast_threshold: int | None = 100_000):
-    """Dedup-aware extraction: run the (expensive) per-turn pipeline
-    once per DISTINCT payload, then join results back to every turn.
-
-    Agent-transcript corpora repeat payloads heavily — the same tool
-    schema, boilerplate turn, or replayed context appears across
-    conversations.  With duplication factor d this converts O(N)
-    extraction work into O(N/d) extraction + one join:
-
-    - distinct pass: dropDuplicates on the payload hash (one shuffle of
-      (hash, text, tool) — at 10^12 turns this is the classic
-      "aggregate the heavy column early" move: the shuffle carries each
-      distinct payload once);
-    - join back: broadcast when the distinct side is small (bounded by
-      ``broadcast_threshold`` rows, counted on the distinct frame —
-      one cheap action), else a shuffle join on the hash, which Iceberg
-      bucketing on payload_sha256 makes storage-partitioned.
-
-    Row-for-row equal to ``extract_transcripts`` (tests pin it); use
-    the direct form when payloads are known to be near-unique — the
-    distinct shuffle then buys nothing.
-
-    The returned frame owns the persisted distinct-payload table:
-    release with ``plans.cache.release(result)`` after the terminal
-    action (harnesses do; see plans/cache.py for the lifecycle).
-    """
-    from pyspark.sql import functions as F
-
-    from ..plans.cache import adopt
-
-    # UNAMBIGUOUS dedup key — the shared injective payload key
-    # (functions/keys.py; a concat_ws key would collide on NULL parts,
-    # silently assigning one payload's results to another's turns).
-    # Same key as checkpoint resume / the worker's lineage column, so a
-    # materialized distinct-payload table serves both dedup and resume.
-    keyed = df.select(
-        "conv_id",
-        "turn_idx",
-        payload_key_col("text", "tool").alias("dedup_key"),
-        "text",
-        "tool",
-    )
-    # persisted so the broadcast-decision count and the extraction read
-    # ONE materialization of the dedup shuffle (at corpus scale this is
-    # a checkpoint table of distinct payloads, itself reusable across
-    # runs)
-    distinct = (
-        keyed.select("dedup_key", "text", "tool")
-        .dropDuplicates(["dedup_key"])
-        .persist()
-    )
-    # reuse the batch worker, riding the key through its conv_id
-    # pass-through column; the worker recomputes the same shared key as
-    # its payload_sha256 lineage column (tests pin the equality)
-    carrier = distinct.select(
-        F.col("dedup_key").alias("conv_id"),
-        F.lit(0).alias("turn_idx"),
-        "text",
-        "tool",
-    )
-    extracted = (
-        _map_extract(carrier, correct_overlapping_cells)
-        .withColumnRenamed("conv_id", "dedup_key")
-        .drop("turn_idx")
-    )
-
-    turns = keyed.select("conv_id", "turn_idx", "dedup_key")
-    if broadcast_threshold is not None and distinct.limit(
-        broadcast_threshold + 1
-    ).count() <= broadcast_threshold:
-        extracted = F.broadcast(extracted)
-    return adopt(turns.join(extracted, "dedup_key").drop("dedup_key"), distinct)
 
 
 def ordered_conversation_view(extracted):

@@ -5,8 +5,7 @@ operators); this wrapper exists because the *target* workload —
 transcripts accumulating in an Iceberg table — naturally runs as an
 incremental job.  The extraction operator is a narrow, stateless map, so
 it lifts onto ``readStream`` unchanged: exactly-once delivery comes from
-the sink checkpoint, and late/out-of-order turns are handled by the
-watermarked per-conversation aggregate.
+the sink checkpoint.
 
 Batch and streaming share the same ``extract_transcripts`` code path —
 one operator, two execution modes.
@@ -31,50 +30,6 @@ def stream_extract(spark, input_dir: str, schema: str = TRANSCRIPT_SCHEMA):
         .parquet(input_dir)
     )
     return extract_transcripts(stream)
-
-
-def stream_conversation_counts(spark, input_dir: str, schema: str = TRANSCRIPT_SCHEMA):
-    """Watermarked per-conversation windowed rollup: turns per
-    conversation per 10-minute event-time window, tolerating 30 minutes
-    of lateness (late turns beyond the watermark are dropped, on-time
-    out-of-order turns are merged)."""
-    from pyspark.sql import functions as F
-
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    return (
-        stream.withWatermark("ts", "30 minutes")
-        .groupBy("conv_id", F.window("ts", "10 minutes").alias("win"))
-        .agg(F.count("*").alias("turns"))
-    )
-
-
-def stream_dedup_turns(
-    spark,
-    input_dir: str,
-    schema: str = TRANSCRIPT_SCHEMA,
-    *,
-    lateness: str = "30 minutes",
-):
-    """Streaming exact dedup: keep the first arrival of each distinct
-    (text, tool) payload, keyed by the shared injective payload key
-    (functions/keys.py — the same key the batch dedup and checkpoint
-    resume use, so batch and streaming dedup agree row-for-row).
-
-    ``dropDuplicatesWithinWatermark`` bounds the dedup state: a key is
-    remembered only until the watermark passes its event time + the
-    lateness horizon, so state size tracks the duplicate-arrival window
-    rather than corpus size — the only shape that survives an unbounded
-    stream.  (Within one micro-batch Spark keeps the first row in
-    arrival order; across batches the state store guarantees it.)
-    """
-    from ..functions.keys import payload_key_col
-
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    return (
-        stream.withColumn("payload_key", payload_key_col("text", "tool"))
-        .withWatermark("ts", lateness)
-        .dropDuplicatesWithinWatermark(["payload_key"])
-    )
 
 
 def run_to_completion(stream_df, output_dir: str, checkpoint_dir: str, mode: str = "append"):

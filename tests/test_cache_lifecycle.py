@@ -80,12 +80,6 @@ def test_release_frees_all_operator_caches(spark):
         simhash_candidates,
         simhash_column,
     )
-    from ds4sd_docling_tableformer_onnx_spark.operators.extract import (
-        extract_transcripts_deduped,
-    )
-    from ds4sd_docling_tableformer_onnx_spark.sources.transcripts import (
-        generate_transcripts,
-    )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     sims = simhash_candidates(simhash_column(docs, text_col="text"), id_col="doc_id")
@@ -97,12 +91,6 @@ def test_release_frees_all_operator_caches(spark):
     pairs.count()
     assert cached_inputs(pairs)
 
-    dedup = extract_transcripts_deduped(
-        generate_transcripts(spark, n_turns=60, n_convs=4, seed=5)
-    )
-    dedup.count()
-    assert cached_inputs(dedup)
-
     # Track the exact frames each operator adopted rather than the global
     # persistent-RDD count: the session-scoped suite runs operators whose
     # per-iteration localCheckpoint blocks are freed ASYNCHRONOUSLY by the
@@ -113,10 +101,10 @@ def test_release_frees_all_operator_caches(spark):
         return lvl.useMemory or lvl.useDisk
 
     owned = {
-        id(c): c for f in (sims, pairs, dedup) for c in cached_inputs(f)
+        id(c): c for f in (sims, pairs) for c in cached_inputs(f)
     }
     assert owned and all(_pinned(c) for c in owned.values())  # really pinned
-    for frame in (sims, pairs, dedup):
+    for frame in (sims, pairs):
         release(frame, blocking=True)
     assert not any(_pinned(c) for c in owned.values())  # really freed
 

@@ -12,7 +12,7 @@ from ds4sd_docling_tableformer_onnx_spark.core.boilerplate import (
 )
 from ds4sd_docling_tableformer_onnx_spark.core.layout import (
     reading_order,
-    spans_text,
+    spans,
 )
 from ds4sd_docling_tableformer_onnx_spark.operators.maincontent import (
     reading_order_spans,
@@ -85,11 +85,11 @@ def test_reading_order_lines_and_jumble_invariance():
         _token(4, "third", 0, 60),
     ]
     expected = "first line\nsecond line2\nthird"
-    assert spans_text(list(toks)) == expected
+    assert spans(list(toks))[0] == expected
     rng = random.Random(9)
     for _ in range(10):
         rng.shuffle(toks)
-        assert spans_text(list(toks)) == expected
+        assert spans(list(toks))[0] == expected
     ordered, line_ids = reading_order(toks)
     assert line_ids == [0, 0, 1, 1, 2]
 
@@ -133,7 +133,7 @@ def test_reading_order_spans_isolates_malformed_token_lists(spark):
         assert out[d] == ("", 0, 0)
     for d, tokens_json in good.items():
         assert out[d] == (f"g{d}_0 g{d}_1 g{d}_2", 3, 1)
-        assert out[d][0] == spans_text(json.loads(tokens_json))
+        assert out[d][0] == spans(json.loads(tokens_json))[0]
 
 
 def test_boilerplate_spark_operator_shuffle_free(spark):
@@ -207,7 +207,7 @@ def test_reading_order_recovers_random_layouts():
                 x += rng.uniform(12.0, 30.0)
             y -= rng.uniform(20.0, 40.0)  # gap > tolerance: new line
         rng.shuffle(toks)
-        got = spans_text(toks).replace("\n", " ").split()
+        got = spans(toks)[0].replace("\n", " ").split()
         assert got == expect
 
 

@@ -441,3 +441,40 @@ def test_full_chain_differential_random_payloads():
         assert mine["rs_seq"] == ref_pred["rs_seq"], f"seed {seed}"
         checked += 1
     assert checked >= 300
+
+
+def test_merge_output_tuple_key_agrees_with_reference_string_key(monkeypatch):
+    """merge_output keys cells by the (col, row) int tuple where the
+    reference formats f"{col}_{row}".  The two group alike exactly when
+    both offsets are plain ints; pin that for every item reaching the
+    merge over the fixture pool and 2,000 random full-chain payloads."""
+    import json
+
+    from ds4sd_docling_tableformer_onnx_spark.core import pipeline
+    from ds4sd_docling_tableformer_onnx_spark.sources.fixtures import payload_pool
+
+    calls = []
+
+    def recording_merge(docling_output, pdf_cells):
+        calls.append(
+            [(c["start_col_offset_idx"], c["start_row_offset_idx"]) for c in docling_output]
+        )
+        return merge_output(docling_output, pdf_cells)
+
+    monkeypatch.setattr(pipeline, "merge_output", recording_merge)
+    payloads = []
+    for entry in payload_pool():
+        payload = json.loads(entry["text"])
+        payload.update(json.loads(entry["tool"]))
+        payloads.append(payload)
+    payloads += [_random_grid_payload(random.Random(seed)) for seed in range(2000)]
+    for correct_overlapping_cells in (False, True):
+        for payload in payloads:
+            pipeline.extract_turn(
+                copy.deepcopy(payload), correct_overlapping_cells=correct_overlapping_cells
+            )
+
+    assert sum(map(len, calls)) > 10_000  # the merged path really ran
+    for keys in calls:
+        assert all(type(col) is int and type(row) is int for col, row in keys)
+        assert len(set(keys)) == len({f"{col}_{row}" for col, row in keys})

@@ -272,43 +272,6 @@ def test_null_payloads_are_isolated_error_rows(spark):
         assert rows[i]["payload_sha256"] == jvm[i] == py[i]
 
 
-def test_deduped_extraction_equals_direct(spark):
-    """extract_transcripts_deduped: one extraction per distinct payload
-    joined back must equal the direct per-turn form row-for-row (the
-    transcript pool repeats 44 payloads, so the distinct pass is ~44
-    extractions for 400 turns)."""
-    from pyspark.sql import functions as F
-
-    from ds4sd_docling_tableformer_onnx_spark.operators.extract import (
-        extract_transcripts,
-        extract_transcripts_deduped,
-    )
-    from ds4sd_docling_tableformer_onnx_spark.sources.transcripts import (
-        generate_transcripts,
-    )
-
-    df = generate_transcripts(spark, n_turns=400, n_convs=8, seed=3)
-    direct = {
-        (r["conv_id"], r["turn_idx"]): (r["html_sha256"], r["n_cells"], r["ok"])
-        for r in extract_transcripts(df).collect()
-    }
-    dedup_rows = extract_transcripts_deduped(df).collect()
-    deduped = {
-        (r["conv_id"], r["turn_idx"]): (r["html_sha256"], r["n_cells"], r["ok"])
-        for r in dedup_rows
-    }
-    assert deduped == direct
-    # the join really was broadcast for this tiny distinct side
-    plan = extract_transcripts_deduped(df)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    # and the shuffle-join fallback stays row-equal too
-    fallback = {
-        (r["conv_id"], r["turn_idx"]): (r["html_sha256"], r["n_cells"], r["ok"])
-        for r in extract_transcripts_deduped(df, broadcast_threshold=None).collect()
-    }
-    assert fallback == direct
-
-
 def test_resume_filter_distinguishes_concat_colliding_payloads(spark, tmp_path):
     """Adversarial resume: a checkpoint holding (text=T+'\\x00'+O,
     tool=NULL) must NOT cause (text=T, tool=O) on the same turn to be
@@ -370,36 +333,3 @@ def test_resume_filter_ignores_duplicate_checkpoint_keys(spark, tmp_path):
     skipped, rows = results[0]
     assert skipped == done.count() > 0
     assert len(rows) == 120 - skipped
-
-
-def test_deduped_extraction_distinguishes_concat_colliding_payloads(spark):
-    """(text=T+'\\x00'+O, tool=NULL) and (text=T, tool=O) collide under a
-    naive concat_ws key (it skips NULLs); the dedup key must keep them
-    apart — one extracts fine, the other is an error row, exactly as in
-    the direct form."""
-    from ds4sd_docling_tableformer_onnx_spark.operators.extract import (
-        extract_transcripts,
-        extract_transcripts_deduped,
-    )
-    from ds4sd_docling_tableformer_onnx_spark.sources.fixtures import payload_pool
-
-    entry = next(e for e in payload_pool() if e["kind"] == "prediction")
-    text, tool = entry["text"], entry["tool"]
-    rows = [
-        ("c1", 0, "user", text, tool, None),
-        ("c1", 1, "user", text + "\x00" + tool, None, None),
-        ("c1", 2, "user", None, text + "\x00" + tool, None),  # null text
-        ("c1", 3, "user", text, tool, None),                  # true duplicate
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
-    direct = {r["turn_idx"]: (r["ok"], r["html_sha256"]) for r in extract_transcripts(df).collect()}
-    dedup = {
-        r["turn_idx"]: (r["ok"], r["html_sha256"])
-        for r in extract_transcripts_deduped(df).collect()
-    }
-    assert len(dedup) == 4
-    assert dedup == direct
-    assert direct[0][0] is True and direct[1][0] is False  # genuinely different outcomes
-    assert dedup[0] == dedup[3]  # the true duplicate deduped to one extraction

@@ -1,68 +1,11 @@
-"""Stateful streaming rollup: state persists across micro-batches."""
+"""Streaming operators: the extraction stream's exactly-once crash
+replay, and the stateful near-dup stream against its batch form."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from ds4sd_docling_tableformer_onnx_spark.operators.extract import extract_transcripts
 
 from ds4sd_docling_tableformer_onnx_spark.sources.transcripts import generate_transcripts
-from ds4sd_docling_tableformer_onnx_spark.streaming.stateful import (
-    stateful_conversation_rollup,
-)
-from ds4sd_docling_tableformer_onnx_spark.streaming.stream import stream_extract
-
-
-def _drain(stream_df, out_dir, ckpt):
-    # update-mode stateful output: land each micro-batch via foreachBatch
-    # (the parquet file sink is append-only)
-    def sink(batch_df, batch_id):
-        batch_df.write.mode("append").parquet(out_dir)
-
-    query = (
-        stream_df.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-
-def test_state_accumulates_across_batches(spark, tmp_path):
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    df = generate_transcripts(spark, n_turns=90, n_convs=3, seed=21)
-    df.cache()
-    first = df.where("turn_idx % 2 = 0")
-    second = df.where("turn_idx % 2 = 1")
-    first.write.parquet(str(in_dir / "batch1"))
-
-    rollup = stateful_conversation_rollup(
-        stream_extract(spark, str(in_dir) + "/*", schema=(
-            "conv_id string, turn_idx int, role string, text string, "
-            "tool string, ts timestamp, payload_id int"))
-    )
-    _drain(rollup, out_dir, ckpt)
-    second.write.parquet(str(in_dir / "batch2"))
-    _drain(rollup, out_dir, ckpt)
-
-    # the latest update row per conversation carries the full count
-    latest = (
-        spark.read.parquet(out_dir)
-        .groupBy("conv_id")
-        .agg(F.max("turns").alias("turns"))
-        .collect()
-    )
-    per_conv = {r["conv_id"]: r["turns"] for r in latest}
-    expected = {
-        r["conv_id"]: r["n"]
-        for r in df.groupBy("conv_id").agg(F.count("*").alias("n")).collect()
-    }
-    assert per_conv == expected
-    df.unpersist()
 
 
 def test_crash_midbatch_replay_is_exactly_once(spark, tmp_path):
@@ -139,109 +82,6 @@ def test_crash_midbatch_replay_is_exactly_once(spark, tmp_path):
     s = {(r["conv_id"], r["turn_idx"]): r["html_sha256"] for r in out.collect()}
     b = {(r["conv_id"], r["turn_idx"]): r["html_sha256"] for r in batch_out.collect()}
     assert s == b
-
-
-def test_watermarked_rollup_merges_ontime_drops_late(spark, tmp_path):
-    """stream_conversation_counts: out-of-order turns within the 30-min
-    watermark merge into their window; turns arriving after the
-    watermark passed their window are dropped (append mode only emits
-    finalized windows)."""
-    import pyspark.sql.functions as F
-
-    from ds4sd_docling_tableformer_onnx_spark.streaming.stream import (
-        run_to_completion,
-        stream_conversation_counts,
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    def write_file(name, rows):
-        df = spark.createDataFrame(
-            [(c, i, "assistant", "{}", "{}", ts, 0) for i, (c, ts) in enumerate(rows)],
-            "conv_id string, turn_idx int, role string, text string, tool string, "
-            "ts_s string, payload_id int",
-        ).withColumn("ts", F.col("ts_s").cast("timestamp")).drop("ts_s")
-        df.coalesce(1).write.mode("overwrite").parquet(str(in_dir / name))
-
-    # batch 1: three turns in window 10:00-10:10 (out of order), plus a
-    # much later turn that will advance the watermark past that window
-    write_file("f1", [
-        ("conv-a", "2026-01-01 10:03:00"),
-        ("conv-a", "2026-01-01 10:01:00"),
-        ("conv-a", "2026-01-01 10:07:00"),
-        ("conv-b", "2026-01-01 12:00:00"),
-    ])
-    counts = stream_conversation_counts(spark, str(in_dir) + "/*")
-    run_to_completion(counts, out_dir, ckpt)
-
-    # batch 2: a turn for the SAME 10:00 window, now behind the
-    # watermark (12:00 - 30 min = 11:30) -> must be dropped; plus a
-    # watermark-advancing flush row so remaining windows finalize
-    write_file("f2", [
-        ("conv-a", "2026-01-01 10:05:00"),
-        ("conv-b", "2026-01-01 15:00:00"),
-    ])
-    run_to_completion(stream_conversation_counts(spark, str(in_dir) + "/*"), out_dir, ckpt)
-
-    got = {
-        (r["conv_id"], str(r["win"]["start"])): r["turns"]
-        for r in spark.read.parquet(out_dir).collect()
-    }
-    # the 10:00 window finalized with the 3 on-time turns; the late 4th
-    # never appears (no second emission for that window either)
-    assert got[("conv-a", "2026-01-01 10:00:00")] == 3
-    assert ("conv-b", "2026-01-01 12:00:00") in got
-
-
-def test_stream_dedup_matches_batch_dedup(spark, tmp_path):
-    """Streaming exact dedup keeps one row per distinct payload key and
-    agrees with the batch distinct on the same input — the shared
-    injective key makes the two modes interchangeable."""
-    from ds4sd_docling_tableformer_onnx_spark.functions.keys import payload_key_col
-    from ds4sd_docling_tableformer_onnx_spark.streaming.stream import (
-        stream_dedup_turns,
-    )
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    df = generate_transcripts(spark, n_turns=300, n_convs=6, seed=33)
-    df.cache()
-    # split arrivals across two micro-batch files so cross-batch state
-    # (not just within-batch dropDuplicates) is exercised
-    df.where("turn_idx % 2 = 0").write.parquet(str(in_dir / "b1"))
-    df.where("turn_idx % 2 = 1").write.parquet(str(in_dir / "b2"))
-
-    deduped = stream_dedup_turns(spark, str(in_dir) + "/*")
-    query = (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-
-    streamed = spark.read.parquet(out_dir)
-    batch_keys = df.withColumn("payload_key", payload_key_col("text", "tool"))
-    n_distinct = batch_keys.select("payload_key").distinct().count()
-
-    assert streamed.count() == n_distinct
-    # every surviving key appears exactly once, and the key set matches
-    assert streamed.select("payload_key").distinct().count() == n_distinct
-    missing = (
-        batch_keys.select("payload_key")
-        .distinct()
-        .join(streamed.select("payload_key"), "payload_key", "left_anti")
-        .count()
-    )
-    assert missing == 0
-    df.unpersist()
 
 
 def test_stream_neardup_matches_batch_candidates(spark, tmp_path):
