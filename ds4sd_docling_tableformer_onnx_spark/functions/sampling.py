@@ -162,9 +162,7 @@ def pack_sequences(df, max_seq_len: int):
     the sampling pass is not guaranteed stable across jobs, and the
     totals collect and the caller's action are separate jobs — without
     it a boundary doc could change ranges between them and every offset
-    in its range would silently shift.  It also means ``packed`` reads
-    only the checkpoint, never ``df``, so a caller may release cached
-    inputs before acting on it.  On a cluster use checkpoint()/a
+    in its range would silently shift.  On a cluster use checkpoint()/a
     staging table, same call site."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F

@@ -101,18 +101,14 @@ def duplicated_span_stats(
     >= 1 gram position; dup_frac rounded to 6 dp on both engine and
     oracle sides.
 
-    The per-doc gram-hash ARRAY is constructed once and persisted (a
-    narrow materialization — no shuffle); both phases explode the
-    cached arrays.  The previous two-branch plan re-ran the gram
+    The per-doc gram-hash ARRAY is constructed once and checkpointed
+    (a narrow materialization — no shuffle); both phases explode the
+    checkpointed arrays.  The previous two-branch plan re-ran the gram
     construction (split + n-word joins + xxhash64 per position — the
-    operator's dominant map cost) for each phase.  The persisted gram
-    table is owned by the returned frame: release with
-    ``plans.cache.release(result)`` after the terminal action."""
-    from ..plans.cache import adopt
-
+    operator's dominant map cost) for each phase."""
     grams = docs.select(
         id_col, _word_gram_hashes(F.col(text_col), n).alias("grams")
-    ).persist()
+    ).localCheckpoint(eager=False)
 
     # phase 1: doc frequency over per-doc DISTINCT gram hashes -> hot set
     hot = (
@@ -129,14 +125,13 @@ def duplicated_span_stats(
         id_col, F.explode("grams").alias("gram_h")
     )
     flagged = positions.join(hot.withColumn("is_dup", F.lit(1)), "gram_h", "left")
-    result = flagged.groupBy(id_col).agg(
+    return flagged.groupBy(id_col).agg(
         F.count("*").cast("long").alias("n_positions"),
         F.coalesce(F.sum("is_dup"), F.lit(0)).cast("long").alias("n_dup_positions"),
         F.round(
             F.coalesce(F.sum("is_dup"), F.lit(0)).cast("double") / F.count("*"), 6
         ).alias("dup_frac"),
     )
-    return adopt(result, grams)
 
 
 def strip_duplicated_substrings(
@@ -157,11 +152,9 @@ def strip_duplicated_substrings(
     combine.  Reconstruction is shuffle-free:
     per-doc duplicated starts collect into one bounded array, covered
     positions expand inside an array expression, and the kept text is
-    a codegen filter over the token array.  The gram table is persisted
-    (two consumers) and handed to the caller via plans/cache.adopt.
+    a codegen filter over the token array.  The gram table is
+    checkpointed (two consumers).
     """
-    from ..plans.cache import adopt
-
     # gram start positions are 1-based word indices: posexplode's
     # 0-based array index + 1
     grams = (
@@ -169,7 +162,7 @@ def strip_duplicated_substrings(
             id_col, F.posexplode(_word_gram_hashes(F.col(text_col), n)).alias("i", "g")
         )
         .select(id_col, (F.col("i") + 1).alias("pos"), "g")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     hot = grams.groupBy("g").agg(F.count("*").alias("cnt")).where("cnt >= 2")
     starts = (
@@ -191,10 +184,9 @@ def strip_duplicated_substrings(
     kept = F.filter(
         "_ws", lambda w, i: ~F.array_contains(covered, (i + 1).cast("int"))
     )
-    result = (
+    return (
         joined.withColumn("n_tokens_pre", F.size("_ws").cast("long"))
         .withColumn("n_sub_removed", F.size(covered).cast("long"))
         .withColumn(text_col, F.array_join(kept, " "))
         .drop("_ws", "_starts")
     )
-    return adopt(result, grams)

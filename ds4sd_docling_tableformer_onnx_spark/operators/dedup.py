@@ -184,26 +184,23 @@ def simhash_candidates(df, id_col: str = "doc_id"):
     distance 3 of a 64-bit signature, by pigeonhole), through
     ``band_pairs``.
 
-    The band table is persisted before the self-join: without it both
+    The band table is checkpointed before the self-join: without it both
     join sides re-run the signature UDF.  At 10^12-doc scale the same
     move is writing signatures to a (bucketed) table once — ~20 B/doc —
-    and band-joining the materialized table; persist() is the in-plan
-    analog at bench scale.  The returned frame owns the persisted band
-    table: release with ``plans.cache.release(result)`` after the
-    terminal action."""
+    and band-joining the materialized table; a lazy local checkpoint is
+    the in-plan analog at bench scale."""
     from pyspark.sql import functions as F
 
-    from ..plans.cache import adopt
-
-    layout = band_layout(df, simhash_bands("simhash"), id_col, "simhash").persist()
-    pairs = band_pairs(layout, id_col).select(
+    layout = band_layout(
+        df, simhash_bands("simhash"), id_col, "simhash"
+    ).localCheckpoint(eager=False)
+    return band_pairs(layout, id_col).select(
         F.col(f"a.{id_col}").alias("id_a"),
         F.col(f"b.{id_col}").alias("id_b"),
         F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
         .cast("long")
         .alias("hamming"),
     )
-    return adopt(pairs, layout)
 
 
 def bloom_key_positions(key_col, m: int, n_hashes: int = 7):

@@ -106,14 +106,6 @@ def _extract_batches(batches: Iterator, correct_overlapping_cells: bool):
     return row_batches(_keyed(batches), _KEEP, ("text", "tool"), OUTPUT_COLUMNS, turn)
 
 
-def _map_extract(df, correct_overlapping_cells: bool):
-    """``df`` (with conv_id, turn_idx, text, tool) through the worker."""
-    return df.mapInArrow(
-        lambda it: _extract_batches(it, correct_overlapping_cells),
-        schema=spark_schema(OUTPUT_COLUMNS),
-    )
-
-
 def extract_transcripts(df, correct_overlapping_cells: bool = False):
     """transcripts (conv_id, turn_idx, role, text, tool, ts[, payload_id])
     -> per-turn extraction output.  Narrow transformation: column-pruned
@@ -123,8 +115,10 @@ def extract_transcripts(df, correct_overlapping_cells: bool = False):
     well-laid-out inputs a round-robin shuffle costs more than the
     imbalance it would fix.
     """
-    pruned = df.select("conv_id", "turn_idx", "text", "tool")
-    return _map_extract(pruned, correct_overlapping_cells)
+    return df.select("conv_id", "turn_idx", "text", "tool").mapInArrow(
+        lambda it: _extract_batches(it, correct_overlapping_cells),
+        schema=spark_schema(OUTPUT_COLUMNS),
+    )
 
 
 def ordered_conversation_view(extracted):

@@ -273,7 +273,9 @@ def pagerank(edges_df, src: str = "src", dst: str = "dst",
     deg = edges.groupBy("s").agg(F.count("*").alias("deg"))
     n = edges.select("s").distinct().count()
     if n == 0:  # no edges (or only self-loops): empty graph, empty ranks
-        return edges.sparkSession.createDataFrame([], "id long, r double")
+        from ..functions.local import local_frame
+
+        return local_frame(edges.sparkSession, [], "id long, r double")
     base = (1.0 - damping) / n
 
     ranks = (

@@ -163,7 +163,7 @@ def lsh_neardup_pairs(
 
     The all-pairs problem becomes one self-equi-join on the bucket key:
     with b buckets over n rows the scored pair count is ~n^2/b instead
-    of n^2, and the persisted (id, bucket, vector) table is the only
+    of n^2, and the checkpointed (id, bucket, vector) table is the only
     shuffled input — the label-blocked variant (queries.q_embedding_neardup)
     is the within-block analog, this is the scale path.  Hash-derived
     planes keep the whole operator replicable in the DuckDB oracle.
@@ -183,25 +183,19 @@ def lsh_neardup_pairs(
       are better handled by exact dedup upstream (identical vectors)
       or a recursive split; the log tells the operator which buckets
       to follow up.  ``None`` disables the guard.
-
-    The returned frame owns the persisted bucket table — release it
-    with ``plans.cache.release(result)`` after the terminal action.
     """
     from pyspark.sql import functions as F
-
-    from ..plans.cache import adopt
 
     if n_planes is None:
         n_planes = auto_n_planes(emb_df.count(), target_bucket_rows)
 
-    persisted = hyperplane_buckets(
+    bucketed = hyperplane_buckets(
         emb_df.select(id_col, vec_col), n_planes=n_planes, seed=seed, vec_col=vec_col
-    ).persist()
-    bucketed = persisted
+    ).localCheckpoint(eager=False)
 
     if max_bucket_rows is not None:
-        # bucket census: tiny frame (<= 2^n_planes rows), one pass over
-        # the (now materialized) persisted table
+        # bucket census: tiny frame (<= 2^n_planes rows); its pass
+        # materializes the checkpointed table the pair join then reads
         oversized = (
             bucketed.groupBy("bucket")
             .count()
@@ -228,7 +222,7 @@ def lsh_neardup_pairs(
     e_a = F.col(f"a.{vec_col}").cast("array<double>")
     e_b = F.col(f"b.{vec_col}").cast("array<double>")
     cos = _dot(e_a, e_b) / (F.sqrt(_dot(e_a, e_a)) * F.sqrt(_dot(e_b, e_b)))
-    result = (
+    return (
         a.join(
             b,
             (F.col("a.bucket") == F.col("b.bucket"))
@@ -241,7 +235,6 @@ def lsh_neardup_pairs(
         )
         .where(F.col("cosine") > threshold)
     )
-    return adopt(result, persisted)
 
 
 def batch_topk(
@@ -510,20 +503,15 @@ def semantic_dedup(
     - ``max_cluster_rows`` hard-caps degenerate clusters the same way
       ``lsh_neardup_pairs`` caps buckets: oversized clusters are
       excluded from pair scoring (their rows stay kept=true) and the
-      drop is logged — no silent quadratic cliff;
-    - the persisted cluster table is owned by the returned frame:
-      release with ``plans.cache.release(result)`` after the terminal
-      action.
+      drop is logged — no silent quadratic cliff.
     """
     from pyspark.sql import functions as F
-
-    from ..plans.cache import adopt
 
     if centroids is None:
         centroids = train_ivf_centroids(
             emb_df, n_lists=n_lists, seed=seed, vec_col=vec_col, id_col=id_col
         )
-    # pre-normalize ONCE into the persisted cluster table (vectorized
+    # pre-normalize ONCE into the checkpointed cluster table (vectorized
     # pandas UDF — an expression-tree norm would be re-inlined per
     # array element by CollapseProject): the pair score becomes a
     # single dot product instead of dot + two norm aggregates per
@@ -535,7 +523,7 @@ def semantic_dedup(
             out_col="_nvec",
         )
         .withColumnRenamed("ivf_list", "cluster")
-        .persist()
+        .localCheckpoint(eager=False)
     )
 
     scored = assigned
@@ -597,7 +585,7 @@ def semantic_dedup(
                 F.lit(True).alias("capped"),
             )
         )
-    return adopt(result, assigned)
+    return result
 
 
 def write_ivf_store(emb_df, centroids, path: str, vec_col: str = "embedding"):

@@ -1073,7 +1073,6 @@ def q_minhash_lsh(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from .operators.dedup import band_layout, band_pairs
-    from .plans.cache import adopt
 
     # widened: 8 md5 evaluations per distinct (doc, word) dominate the
     # map side; mins and string keys are partition-order-free.  The
@@ -1091,9 +1090,8 @@ def q_minhash_lsh(spark, sf_dir):
             for i in range(_MINHASH_PERMS)
         ]
     )
-    # persisted: both sides of the band join would otherwise re-run
-    # the signature aggregation; released by the caller via
-    # plans/cache.release
+    # checkpointed: both sides of the band join would otherwise re-run
+    # the signature aggregation
     layout = band_layout(
         sigs,
         F.array(
@@ -1101,11 +1099,10 @@ def q_minhash_lsh(spark, sf_dir):
             F.concat_ws("|", "m4", "m5", "m6", "m7"),
         ),
         "doc_id",
-    ).persist()
-    pairs = band_pairs(layout, "doc_id").select(
+    ).localCheckpoint(eager=False)
+    return band_pairs(layout, "doc_id").select(
         F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
-    return adopt(pairs, layout)
 
 
 _MINHASH_SIG_SQL = ",".join(
@@ -2059,6 +2056,8 @@ def q_curation_pipeline(spark, sf_dir):
     operator above, composed into one plan."""
     from pyspark.sql import functions as F
 
+    from .functions.local import local_frame
+
     docs = _read(spark, sf_dir, "documents")
     keep = (
         docs.withColumn("h", F.md5("text"))
@@ -2079,7 +2078,7 @@ def q_curation_pipeline(spark, sf_dir):
         (F.col("n_words") >= 10) & (F.col("stop_ratio") <= 0.5)
     )
 
-    markers = spark.createDataFrame(_LANG_MARKERS, "word string, lang string")
+    markers = local_frame(spark, _LANG_MARKERS, "word string, lang string")
     votes = (
         qualified.select(
             "doc_id", F.explode(F.split(F.lower(F.col("text")), " ")).alias("word")
@@ -2165,13 +2164,11 @@ def q_dedup_groups(spark, sf_dir):
 
     from .operators.dedup import simhash_candidates, simhash_column
     from .operators.graph import dedup_groups
-    from .plans.cache import adopt, cached_inputs
 
     docs = _read(spark, sf_dir, "documents")
     cand = simhash_candidates(simhash_column(docs))
     edges = cand.where(F.col("hamming") <= 3)
-    result = dedup_groups(docs, edges, id_col="doc_id")
-    return adopt(result, *cached_inputs(cand))
+    return dedup_groups(docs, edges, id_col="doc_id")
 
 
 _CC_ORACLE_ITERS = 25  # == operators/graph.py connected_components max_iter
@@ -2558,11 +2555,9 @@ def q_bm25_topk(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from .plans.cache import adopt
-
     docs = _read(spark, sf_dir, "documents")
     words = docs.select("doc_id", F.explode(F.split("text", " ", -1)).alias("word"))
-    # persisted: the corpus-stats reduction and the scoring projection
+    # checkpointed: the corpus-stats reduction and the scoring projection
     # both consume the per-doc aggregate; without it each re-ran the
     # explode+groupBy
     per_doc = words.groupBy("doc_id").agg(
@@ -2571,7 +2566,7 @@ def q_bm25_topk(spark, sf_dir):
             F.sum(F.when(F.col("word") == t, 1).otherwise(0)).alias(f"tf{i}")
             for i, t in enumerate(_BM25_TERMS)
         ],
-    ).persist()
+    ).localCheckpoint(eager=False)
     stats = per_doc.agg(
         F.count("*").alias("n"),
         F.sum("dl").alias("tot"),
@@ -2592,12 +2587,11 @@ def q_bm25_topk(spark, sf_dir):
             / (tf + F.lit(1.2) * (F.lit(1.0) - F.lit(0.75) + F.lit(0.75) * F.col("dl") / F.lit(avgdl)))
         )
         score = score + F.when(tf > 0, term).otherwise(F.lit(0.0))
-    return adopt(
+    return (
         per_doc.select("doc_id", F.round(score, 6).alias("bm25"))
         .where(F.col("bm25") > 0)
         .orderBy(F.desc("bm25"), F.asc("doc_id"))
-        .limit(10),
-        per_doc,
+        .limit(10)
     )
 
 
@@ -2829,18 +2823,22 @@ def q_unigram_logprob(spark, sf_dir):
     """(doc_id, n_tokens, avg_logprob) under the corpus unigram LM."""
     from pyspark.sql import functions as F
 
-    from .plans.cache import adopt
-
     docs = _read(spark, sf_dir, "documents")
-    # persisted split arrays: the count aggregation and the scoring
+    # checkpointed split arrays: the count aggregation and the scoring
     # join both explode them; one narrow materialization, one split
-    toks_arr = docs.select("doc_id", F.split("text", " ", -1).alias("_ws")).persist()
+    toks_arr = docs.select(
+        "doc_id", F.split("text", " ", -1).alias("_ws")
+    ).localCheckpoint(eager=False)
     tok = toks_arr.select("doc_id", F.explode("_ws").alias("token"))
-    # persisted: the total-count scalar and the vocab TakeOrdered both
-    # consume the (vocab-sized) count table — without the persist each
+    # checkpointed: the total-count scalar and the vocab TakeOrdered both
+    # consume the (vocab-sized) count table — without the checkpoint each
     # re-ran the corpus explode+groupBy.  No arithmetic changes: counts
     # are exact integers and the downstream expressions are untouched.
-    counts = tok.groupBy("token").agg(F.count("*").alias("cnt")).persist()
+    counts = (
+        tok.groupBy("token")
+        .agg(F.count("*").alias("cnt"))
+        .localCheckpoint(eager=False)
+    )
     total = counts.agg(F.sum("cnt")).collect()[0][0]  # scalar, driver-side
     vocab = (
         counts.orderBy(F.col("cnt").desc(), F.col("token").asc())
@@ -2848,7 +2846,7 @@ def q_unigram_logprob(spark, sf_dir):
         .select("token", F.log10(F.col("cnt").cast("double") / total).alias("logp"))
     )
     floor = F.lit(float(__import__("math").log10(0.5 / total)))
-    result = (
+    return (
         tok.join(F.broadcast(vocab), "token", "left")
         .groupBy("doc_id")
         .agg(
@@ -2856,7 +2854,6 @@ def q_unigram_logprob(spark, sf_dir):
             F.round(F.avg(F.coalesce(F.col("logp"), floor)), 4).alias("avg_logprob"),
         )
     )
-    return adopt(result, counts, toks_arr)
 
 
 _register(
@@ -3636,15 +3633,13 @@ def q_pagerank(spark, sf_dir):
 
     from .operators.dedup import simhash_candidates, simhash_column
     from .operators.graph import pagerank
-    from .plans.cache import adopt, cached_inputs
 
     docs = _read(spark, sf_dir, "documents")
     cand = simhash_candidates(simhash_column(docs))
     edges = cand.where(F.col("hamming") <= 3)
-    ranks = pagerank(
+    return pagerank(
         edges, src="id_a", dst="id_b", iterations=_PR_ITER, damping=_PR_DAMP
     ).select("id", F.round("r", 10).alias("rank"))
-    return adopt(ranks, *cached_inputs(cand))
 
 
 def _pagerank_oracle_sql() -> str:
@@ -3707,6 +3702,7 @@ def q_bpe_merges(spark, sf_dir):
     cost proportionate (each round re-scans the shard)."""
     from pyspark.sql import functions as F
 
+    from .functions.local import local_frame
     from .operators.bpe import bpe_merge_rounds, char_tokens
 
     # byte-proportional widening: the per-round split+explode passes
@@ -3725,7 +3721,8 @@ def q_bpe_merges(spark, sf_dir):
         char_tokens(ascii_docs).select("doc_id", "toks"),
         rounds=_BPE_MERGE_ROUNDS,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(m["merge_round"], m["lft"], m["rgt"], m["merged"], m["cnt"]) for m in merges],
         "merge_round long, lft string, rgt string, merged string, cnt long",
     )
@@ -3902,7 +3899,7 @@ _register("bpe_encode", q_bpe_encode, _bpe_encode_oracle_sql())
 # independent values (input size) plus invariants computed GENUINELY
 # in-plan: the output partitions the input, every kept pair within a
 # cluster is below the threshold (re-scored INDEPENDENTLY from the
-# persisted cluster table, not derived from the drop set), every drop
+# checkpointed cluster table, not derived from the drop set), every drop
 # has a smaller-id witness, and the pass is non-vacuous (some rows
 # actually dropped at every sf tier — verified 0.001/0.01/0.1).
 # ---------------------------------------------------------------------------
@@ -3921,7 +3918,6 @@ def q_semantic_dedup(spark, sf_dir):
         round6_half_away,
         semantic_dedup,
     )
-    from .plans.cache import adopt, cached_inputs
 
     emb = _read(spark, sf_dir, "embeddings")
     # cluster count scales with the corpus (the SemDeDup recipe: more
@@ -3930,7 +3926,7 @@ def q_semantic_dedup(spark, sf_dir):
     n_lists = max(8, emb.count() // 256)
     res = semantic_dedup(
         emb, threshold=_SEMDEDUP_TAU, n_lists=n_lists, seed=7
-    ).persist()
+    ).localCheckpoint(eager=False)
 
     stats = res.agg(
         F.count("*").alias("n_rows"),
@@ -3940,7 +3936,7 @@ def q_semantic_dedup(spark, sf_dir):
 
     # independent re-check: join ALL rows back to their RAW vectors,
     # re-normalize, and re-score within-cluster pairs from scratch;
-    # persisted: both the scoring pass and the stats leg consume it
+    # checkpointed: both the scoring pass and the stats leg consume it
     allv = (
         normalize_column(
             res.join(emb, res["id"] == emb["vec_id"]).select(
@@ -3950,7 +3946,7 @@ def q_semantic_dedup(spark, sf_dir):
             out_col="nv",
         )
         .select("id", "cluster", "kept", "capped", "nv")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     # mirror the operator's max_cluster_rows guard (r4 advice low #2):
     # capped clusters are excluded from pair scoring by design, so the
@@ -3999,7 +3995,7 @@ def q_semantic_dedup(spark, sf_dir):
         )
     )
     n_input = emb.agg(F.count("*").alias("n_input"))
-    verdict = (
+    return (
         n_input.crossJoin(stats)
         .crossJoin(checks)
         .select(
@@ -4011,7 +4007,6 @@ def q_semantic_dedup(spark, sf_dir):
             (F.col("n_dropped") > 0).alias("some_dropped"),
         )
     )
-    return adopt(verdict, res, allv, *cached_inputs(res))
 
 
 _register(
@@ -4179,7 +4174,6 @@ def q_cluster_split(spark, sf_dir):
 
     from .operators.dedup import simhash_candidates, simhash_column
     from .operators.graph import dedup_groups
-    from .plans.cache import adopt, cached_inputs
 
     from .functions.sampling import holdout_split
 
@@ -4187,10 +4181,9 @@ def q_cluster_split(spark, sf_dir):
     cand = simhash_candidates(simhash_column(docs))
     edges = cand.where(F.col("hamming") <= 3)
     groups = dedup_groups(docs, edges, id_col="doc_id")
-    result = groups.select(
+    return groups.select(
         "doc_id", "group_id", holdout_split("group_id").alias("split")
     )
-    return adopt(result, *cached_inputs(cand), *cached_inputs(groups))
 
 
 _register(
@@ -4371,15 +4364,15 @@ def q_ccnet_buckets(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from .plans.cache import adopt, cached_inputs
+    from .functions.local import local_frame
 
     docs = _read(spark, sf_dir, "documents").select("doc_id", "lang")
-    unigram = q_unigram_logprob(spark, sf_dir)  # owns a persisted frame
+    unigram = q_unigram_logprob(spark, sf_dir)
     scored = (
         unigram.join(docs, "doc_id")
         .withColumn("s_int", F.round(F.col("avg_logprob") * 10000).cast("long"))
         .select("doc_id", "lang", "s_int")
-        .persist()
+        .localCheckpoint(eager=False)
     )
     hist = scored.groupBy("lang", "s_int").count().collect()
     by_lang = defaultdict(list)
@@ -4399,10 +4392,8 @@ def q_ccnet_buckets(spark, sf_dir):
             return vc[-1][0]
 
         rows.append((lang, value_at(math.ceil(n / 3)), value_at(math.ceil(2 * n / 3))))
-    th = F.broadcast(
-        spark.createDataFrame(rows, "lang string, v1 long, v2 long")
-    )
-    result = scored.join(th, "lang").select(
+    th = F.broadcast(local_frame(spark, rows, "lang string, v1 long, v2 long"))
+    return scored.join(th, "lang").select(
         "doc_id",
         "lang",
         "s_int",
@@ -4411,7 +4402,6 @@ def q_ccnet_buckets(spark, sf_dir):
         .otherwise(F.lit("tail"))
         .alias("bucket"),
     )
-    return adopt(result, scored, *cached_inputs(unigram))
 
 
 _register(
@@ -4595,17 +4585,14 @@ def q_dedup_substrings(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from .operators.contamination import strip_duplicated_substrings
-    from .plans.cache import adopt, cached_inputs
 
     docs = _read(spark, sf_dir, "documents")
-    stripped = strip_duplicated_substrings(docs, n=_SUBDUP_N)
-    result = stripped.select(
+    return strip_duplicated_substrings(docs, n=_SUBDUP_N).select(
         "doc_id",
         F.col("n_tokens_pre").alias("n_tokens"),
         F.col("n_sub_removed").alias("n_removed"),
         F.md5("text").alias("kept_md5"),
     )
-    return adopt(result, *cached_inputs(stripped))
 
 
 _register(
@@ -4891,7 +4878,6 @@ def q_contrastive_triplets(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from .operators.dedup import simhash_candidates, simhash_column
-    from .plans.cache import adopt, cached_inputs
 
     docs = _read(spark, sf_dir, "documents")
     cand = simhash_candidates(simhash_column(docs))
@@ -4951,12 +4937,11 @@ def q_contrastive_triplets(spark, sf_dir):
     # per-anchor argmin by (u32, neg_id): struct-min aggregation ==
     # the previous row_number window ordering (pos_id is functionally
     # dependent on anchor_id, so grouping by both is grouping by anchor)
-    trip = (
+    return (
         cand2.groupBy("anchor_id", "pos_id")
         .agg(F.min(F.struct("u32", "neg_id")).alias("s"))
         .select("anchor_id", "pos_id", F.col("s.neg_id").alias("neg_id"))
     )
-    return adopt(trip, *cached_inputs(cand))
 
 
 _register(
@@ -5034,10 +5019,14 @@ def q_tfidf_keywords(spark, sf_dir):
     words = docs.select(
         "doc_id", F.explode(F.split("text", " ", -1)).alias("term")
     )
-    # persisted: the doc-frequency aggregation and the scored join both
-    # consume the per-doc term counts; without it each re-ran the
+    # checkpointed: the doc-frequency aggregation and the scored join
+    # both consume the per-doc term counts; without it each re-ran the
     # corpus explode+groupBy
-    tf = words.groupBy("doc_id", "term").agg(F.count("*").alias("tf")).persist()
+    tf = (
+        words.groupBy("doc_id", "term")
+        .agg(F.count("*").alias("tf"))
+        .localCheckpoint(eager=False)
+    )
     df_tbl = tf.groupBy("term").agg(F.count("*").alias("df"))
     idf_int = F.round(
         F.log(F.lit(float(n_docs)) / F.col("df")) * 1_000_000
@@ -5045,16 +5034,14 @@ def q_tfidf_keywords(spark, sf_dir):
     scored = tf.join(df_tbl, "term").select(
         "doc_id", "term", (F.col("tf") * idf_int).alias("score_int")
     )
-    from .plans.cache import adopt
 
     w = Window.partitionBy("doc_id").orderBy(
         F.col("score_int").desc(), F.col("term").asc()
     )
-    return adopt(
+    return (
         scored.withColumn("rank", F.row_number().over(w).cast("long"))
         .where(F.col("rank") <= _TFIDF_K)
-        .select("doc_id", "term", "rank", "score_int"),
-        tf,
+        .select("doc_id", "term", "rank", "score_int")
     )
 
 
@@ -5554,7 +5541,6 @@ def q_edit_distance_pairs(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from .operators.dedup import simhash_candidates, simhash_column
-    from .plans.cache import adopt, cached_inputs
 
     docs = _read(spark, sf_dir, "documents")
     prefixes = docs.select(
@@ -5581,7 +5567,7 @@ def q_edit_distance_pairs(spark, sf_dir):
     )
     lev = F.levenshtein("pa", "pb")
     max_len = F.greatest(F.length("pa"), F.length("pb"), F.lit(1))
-    out = joined.select(
+    return joined.select(
         "id_a",
         "id_b",
         "hamming",
@@ -5593,7 +5579,6 @@ def q_edit_distance_pairs(spark, sf_dir):
             "long"
         ).alias("sim_permille"),
     )
-    return adopt(out, *cached_inputs(cand))
 
 
 _register(
@@ -5853,10 +5838,8 @@ def q_pmi_collocations(spark, sf_dir):
     collocations."""
     from pyspark.sql import functions as F
 
-    from .plans.cache import adopt
-
     docs = _read(spark, sf_dir, "documents")
-    # persisted: the unigram and bigram branches both consume the split
+    # checkpointed: the unigram and bigram branches both consume the split
     # arrays, and the unigram counts feed three consumers (total + two
     # join sides) — each would re-run its upstream otherwise
     words = docs.select(
@@ -5864,12 +5847,12 @@ def q_pmi_collocations(spark, sf_dir):
         F.filter(
             F.split("text", "[\t\n\f\r ]+"), lambda w: w != F.lit("")
         ).alias("ws"),
-    ).persist()
+    ).localCheckpoint(eager=False)
     unigrams = (
         words.select(F.explode("ws").alias("w"))
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("c"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     bigrams = (
         words.select(
@@ -5913,11 +5896,7 @@ def q_pmi_collocations(spark, sf_dir):
             .alias("lift_permille"),
         )
     )
-    return adopt(
-        scored.orderBy(F.desc("lift_permille"), "w1", "w2").limit(_PMI_TOPK),
-        words,
-        unigrams,
-    )
+    return scored.orderBy(F.desc("lift_permille"), "w1", "w2").limit(_PMI_TOPK)
 
 
 _register(
@@ -6449,16 +6428,13 @@ def q_triangle_count(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from .operators.dedup import simhash_candidates, simhash_column
-    from .plans.cache import adopt, cached_inputs
 
     docs = _read(spark, sf_dir, "documents")
     cand = simhash_candidates(simhash_column(docs))
-    # localCheckpoint (not persist): fe references edges three times
-    # and each reference re-inlines the whole simhash/band-join lineage
-    # under the cached scan — the truncated-plan form cuts the query's
-    # plan from 112 Exchange / 137 Python nodes to a flat RDD scan
-    # (measured ~0.6s of planning+reuse overhead at sf0.1); blocks are
-    # reclaimed by the ContextCleaner like the CC loop's checkpoints
+    # checkpointed: fe references edges three times, and the truncated
+    # plan cuts the query's plan from 112 Exchange / 137 Python nodes to
+    # a flat RDD scan (measured ~0.6s of planning+reuse overhead at
+    # sf0.1); blocks are reclaimed by the ContextCleaner
     edges = (
         cand.where(F.col("hamming") <= 3)
         .select("id_a", "id_b")
@@ -6499,7 +6475,7 @@ def q_triangle_count(spark, sf_dir):
         F.lit(0).cast("long").alias("n_triangles"),
         F.lit(True).alias("excluded"),
     )
-    return adopt(per_vertex.unionByName(excluded), *cached_inputs(cand))
+    return per_vertex.unionByName(excluded)
 
 
 _register(
@@ -6553,10 +6529,8 @@ def q_bigram_logprob(spark, sf_dir):
     score in integer micro-nats (higher = more typical of the corpus)."""
     from pyspark.sql import functions as F
 
-    from .plans.cache import adopt
-
     docs = _read(spark, sf_dir, "documents")
-    # persisted: the bigram explode and the unigram count both consume
+    # checkpointed: the bigram explode and the unigram count both consume
     # the split arrays — one narrow materialization, one regex split
     # (the dup_span_stats pattern)
     words = docs.select(
@@ -6564,7 +6538,7 @@ def q_bigram_logprob(spark, sf_dir):
         F.filter(
             F.split("text", "[\t\n\f\r ]+"), lambda w: w != F.lit("")
         ).alias("ws"),
-    ).persist()
+    ).localCheckpoint(eager=False)
     doc_bigrams = (
         words.select(
             "doc_id",
@@ -6579,9 +6553,9 @@ def q_bigram_logprob(spark, sf_dir):
         .select("doc_id", "bg.w1", "bg.w2")
         .groupBy("doc_id", "w1", "w2")
         .agg(F.count("*").cast("long").alias("k"))
-        # persisted: three consumers (c_xy, the quant join, the final
+        # checkpointed: three consumers (c_xy, the quant join, the final
         # per-doc sum) would each re-run the split+zip explode
-        .persist()
+        .localCheckpoint(eager=False)
     )
     c_xy = doc_bigrams.groupBy("w1", "w2").agg(F.sum("k").alias("c_xy"))
     c_x = (
@@ -6596,7 +6570,7 @@ def q_bigram_logprob(spark, sf_dir):
             F.log(F.col("c_xy").cast("double") / F.col("c_x")) * 1e6
         ).cast("long").alias("q_micro"),
     )
-    result = (
+    return (
         doc_bigrams.join(quant, ["w1", "w2"])
         .groupBy("doc_id")
         .agg(
@@ -6606,7 +6580,6 @@ def q_bigram_logprob(spark, sf_dir):
             ),
         )
     )
-    return adopt(result, doc_bigrams, words)
 
 
 _register(
@@ -6662,7 +6635,6 @@ def q_canonical_docs(spark, sf_dir):
 
     from .operators.dedup import simhash_candidates, simhash_column
     from .operators.graph import dedup_groups
-    from .plans.cache import adopt, cached_inputs
 
     docs = _read(spark, sf_dir, "documents")
     cand = simhash_candidates(simhash_column(docs))
@@ -6671,7 +6643,7 @@ def q_canonical_docs(spark, sf_dir):
     win = Window.partitionBy("group_id").orderBy(
         F.desc("n_chars"), F.asc("doc_id")
     )
-    result = (
+    return (
         groups.join(docs.select("doc_id", "n_chars"), "doc_id")
         .withColumn("rn", F.row_number().over(win))
         .select(
@@ -6681,7 +6653,6 @@ def q_canonical_docs(spark, sf_dir):
             (F.col("rn") == 1).alias("keep"),
         )
     )
-    return adopt(result, *cached_inputs(cand), *cached_inputs(groups))
 
 
 _register(
@@ -7138,9 +7109,9 @@ def q_quantile_sketch(spark, sf_dir):
     win = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
     cum = counts.select(
         "cents", F.sum("k").over(win).alias("cum")
-    ).persist()
+    ).localCheckpoint(eager=False)
     # ONE scan for the row count and the sketch (was two), and ONE
-    # aggregation per percentile over the cached cum table instead of
+    # aggregation per percentile over the checkpointed cum table instead of
     # three where+agg branches crossJoined (min(when(cum >= rank)) ==
     # min over the filtered rows; 9 scans + 6 crossJoins -> 3 scans)
     row = orders.agg(
@@ -7172,9 +7143,7 @@ def q_quantile_sketch(spark, sf_dir):
                 ).alias("within_contract"),
             )
         )
-    from .plans.cache import adopt
-
-    return adopt(reduce(lambda a, b: a.unionByName(b), parts), cum)
+    return reduce(lambda a, b: a.unionByName(b), parts)
 
 
 _register(
@@ -7221,6 +7190,7 @@ def q_stream_sessionize(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from .functions.local import local_frame
     from .streaming.sessionize import stream_sessionize
 
     events = _read(spark, sf_dir, "events").select("user_id", "ts")
@@ -7243,8 +7213,8 @@ def q_stream_sessionize(spark, sf_dir):
         f"{in_dir}/b2"
     )
     for i, mult in ((3, 3), (4, 6)):
-        spark.createDataFrame(
-            [(-1, bounds["max_ts"] + mult * gap)], "user_id long, ts timestamp"
+        local_frame(
+            spark, [(-1, bounds["max_ts"] + mult * gap)], "user_id long, ts timestamp"
         ).coalesce(1).write.parquet(f"{in_dir}/b{i}")
 
     stream = (

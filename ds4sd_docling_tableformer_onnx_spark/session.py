@@ -1,8 +1,8 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
 The same configuration is used by tests (small core counts), the
-benchmark (local[8] / local[32] scaling evidence) and — unchanged — a
-real multi-executor cluster via ``spark-submit --py-files``: everything
+benchmarks (perfbench on ``local[<nproc>]``, bench.py's core-scaling
+section) and — unchanged — a real multi-executor cluster via ``spark-submit --py-files``: everything
 here is partition-count / AQE tuning, nothing is local-mode specific.
 
 Two confs start the Python workers from the package's own daemon:

@@ -169,7 +169,6 @@ def curate(
     from ds4sd_docling_tableformer_onnx_spark.operators.similarity import (
         semantic_dedup,
     )
-    from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
 
     live = F.col("drop_stage").isNull()
 
@@ -199,7 +198,6 @@ def curate(
     # duplicated 8-gram spans from the text itself so the near-dup
     # signatures and every token count downstream see the deduplicated
     # corpus; rejected rows rejoin unchanged
-    stripped = None
     if strip_substrings:
         stripped = strip_duplicated_substrings(ledger.where(live))
         ledger = stripped.drop("n_tokens_pre").unionByName(
@@ -256,7 +254,6 @@ def curate(
 
     # 2. hygiene: benchmark decontamination + duplicated-span filter +
     # optional embedding-level (SemDeDup) near-dup drop
-    sem = span_stats = None
     if emb_docs is not None:
         # cluster count scales with the corpus unless pinned (the
         # SemDeDup many-small-clusters recipe, same as the oracle
@@ -274,7 +271,7 @@ def curate(
         hits = decontaminate(survivors, eval_docs)
         ledger = mark_listed(ledger, "contaminated", hits)
     if max_dup_frac is not None:
-        span_stats = duplicated_span_stats(docs)  # owns a persisted frame
+        span_stats = duplicated_span_stats(docs)
         repetitive = span_stats.where(F.col("dup_frac") > max_dup_frac)
         ledger = mark_listed(ledger, "repetitive", repetitive)
 
@@ -311,12 +308,6 @@ def curate(
         "total_tokens": total_tokens,
         "sequences": -(-total_tokens // max_seq_len),
     }
-    # safe: every persisted frame below was last read by one of the
-    # two eager ledger checkpoints, and `packed` reads pack_sequences'
-    # own eager checkpoint
-    for owner in (cand, stripped, sem, span_stats):
-        if owner is not None:
-            release(owner)
     return packed, stats
 
 

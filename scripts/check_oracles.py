@@ -32,19 +32,15 @@ def main(sf_dir="/root/testdata/sf0.01", *names):
             f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{sf_dir}/{table}.parquet')"
         )
 
-    from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
-
     selected = names or [n for n in QUERIES if n in ORACLES]
     failures = 0
     walls: dict[str, float] = {}
     for name in selected:
         import time
 
-        frame = None
         t0 = time.perf_counter()
         try:
-            frame = QUERIES[name](spark, sf_dir)
-            spark_df = frame.toPandas()
+            spark_df = QUERIES[name](spark, sf_dir).toPandas()
             t_spark = time.perf_counter() - t0
             duck_df = con.execute(ORACLES[name]).fetchdf()
             walls[name] = t_spark
@@ -52,12 +48,6 @@ def main(sf_dir="/root/testdata/sf0.01", *names):
             print(f"FAIL {name}: {type(exc).__name__}: {exc}")
             failures += 1
             continue
-        finally:
-            # free operator-internal persisted inputs even when the
-            # query or oracle raised — a leaked cache would pin
-            # storage for the rest of the sweep
-            if frame is not None:
-                release(frame)
         verdicts = []
         if sorted(spark_df.columns) != sorted(duck_df.columns):
             verdicts.append(f"schema {sorted(spark_df.columns)} vs {sorted(duck_df.columns)}")

@@ -1,16 +1,17 @@
-"""Skew guards for the unblocked LSH near-dup path + caller-owned
-persist lifecycle (plans/cache.py)."""
+"""Skew guards for the unblocked LSH near-dup path, and the one way
+operators materialize an intermediate: a local checkpoint, whose blocks
+Spark's ContextCleaner frees once the frame is unreachable.  Nothing
+pins a CacheManager entry (``persist()``/``cache()``) that a caller
+would have to release."""
 
-import pytest
+import ast
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from ds4sd_docling_tableformer_onnx_spark.operators.similarity import (
     auto_n_planes,
     lsh_neardup_pairs,
-)
-from ds4sd_docling_tableformer_onnx_spark.plans.cache import (
-    cached_inputs,
-    release,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -41,13 +42,11 @@ def test_degenerate_corpus_is_capped_not_quadratic(spark):
     )
     pairs = lsh_neardup_pairs(df, n_planes=4, max_bucket_rows=100)
     assert pairs.count() == 0
-    release(pairs)
 
     # the guard is opt-out: a small identical clump below the cap pairs up
     small = df.where("vec_id < 50")
     pairs = lsh_neardup_pairs(small, n_planes=4, max_bucket_rows=100)
     assert pairs.count() == 50 * 49 // 2
-    release(pairs)
 
 
 def test_cap_is_a_noop_on_uniform_corpus(spark):
@@ -59,8 +58,6 @@ def test_cap_is_a_noop_on_uniform_corpus(spark):
     rows_c = sorted(map(str, capped.collect()))
     rows_u = sorted(map(str, uncapped.collect()))
     assert rows_c == rows_u and rows_c
-    release(capped)
-    release(uncapped)
 
 
 def test_auto_planes_path_runs(spark):
@@ -68,51 +65,70 @@ def test_auto_planes_path_runs(spark):
     pairs = lsh_neardup_pairs(emb, n_planes=None)  # 500 rows -> floor (8)
     explicit = lsh_neardup_pairs(emb, n_planes=8)
     assert sorted(map(str, pairs.collect())) == sorted(map(str, explicit.collect()))
-    release(pairs)
-    release(explicit)
 
 
-def test_release_frees_all_operator_caches(spark):
-    """Every operator that persists an intermediate hands it to the
-    caller via plans/cache.adopt; release() returns the session to its
-    prior storage footprint (VERDICT r2 item 3)."""
+def test_operators_leave_no_cached_relation(spark):
+    """Every operator that materializes an intermediate for several
+    consumers does it with a local checkpoint: after an action over
+    each, the session's CacheManager holds nothing."""
+    from ds4sd_docling_tableformer_onnx_spark.operators.contamination import (
+        duplicated_span_stats,
+        strip_duplicated_substrings,
+    )
     from ds4sd_docling_tableformer_onnx_spark.operators.dedup import (
         simhash_candidates,
         simhash_column,
     )
+    from ds4sd_docling_tableformer_onnx_spark.operators.similarity import (
+        semantic_dedup,
+    )
 
+    spark.catalog.clearCache()  # what earlier tests cached themselves
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sims = simhash_candidates(simhash_column(docs, text_col="text"), id_col="doc_id")
-    sims.count()
-    assert cached_inputs(sims)
-
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    pairs = lsh_neardup_pairs(emb, n_planes=8)
-    pairs.count()
-    assert cached_inputs(pairs)
-
-    # Track the exact frames each operator adopted rather than the global
-    # persistent-RDD count: the session-scoped suite runs operators whose
-    # per-iteration localCheckpoint blocks are freed ASYNCHRONOUSLY by the
-    # ContextCleaner when their Python refs are GC'd, so the global count
-    # can shrink underneath this test at any moment (observed flake).
-    def _pinned(frame):
-        lvl = frame.storageLevel
-        return lvl.useMemory or lvl.useDisk
-
-    owned = {
-        id(c): c for f in (sims, pairs) for c in cached_inputs(f)
-    }
-    assert owned and all(_pinned(c) for c in owned.values())  # really pinned
-    for frame in (sims, pairs):
-        release(frame, blocking=True)
-    assert not any(_pinned(c) for c in owned.values())  # really freed
-
-    # double-release is harmless
-    release(sims)
+    frames = [
+        simhash_candidates(simhash_column(docs, text_col="text"), id_col="doc_id"),
+        lsh_neardup_pairs(emb, n_planes=8),
+        strip_duplicated_substrings(docs),
+        duplicated_span_stats(docs),
+        semantic_dedup(emb, n_lists=8, seed=7),
+    ]
+    for frame in frames:
+        assert frame.count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_release_is_noop_on_plain_frames(spark):
-    df = spark.range(3)
-    assert cached_inputs(df) == []
-    assert release(df) is df
+REPO = Path(__file__).resolve().parent.parent
+
+
+def _program_files():
+    """The package, jobs/, scripts/ and the bench*.py harnesses."""
+    for folder in ("ds4sd_docling_tableformer_onnx_spark", "jobs", "scripts"):
+        yield from sorted((REPO / folder).rglob("*.py"))
+    yield from sorted(REPO.glob("bench*.py"))
+
+
+def test_no_persist_cache_or_release_protocol():
+    """No program file calls ``.persist(``/``.cache(`` or imports the
+    deleted ``plans.cache`` release protocol."""
+    found = []
+    for path in _program_files():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("persist", "cache")
+            ):
+                found.append(f"{path.relative_to(REPO)}:{node.lineno} .{node.func.attr}(")
+            if isinstance(node, ast.ImportFrom):
+                modules = [
+                    f"{node.module or ''}.{alias.name}".lstrip(".") for alias in node.names
+                ]
+                modules.append(node.module or "")
+            elif isinstance(node, ast.Import):
+                modules = [alias.name for alias in node.names]
+            else:
+                continue
+            if any(m == "plans.cache" or m.endswith(".plans.cache") for m in modules):
+                found.append(f"{path.relative_to(REPO)}:{node.lineno} imports plans.cache")
+    assert not found, found

@@ -10,7 +10,6 @@ from ds4sd_docling_tableformer_onnx_spark.queries import (
     _DSIR_TOPK,
     QUERIES,
 )
-from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
 
 SF = "/root/testdata/sf0.001"
 
@@ -46,7 +45,6 @@ def test_cluster_split_never_straddles(spark):
     entirely on one side of the split."""
     frame = QUERIES["cluster_split"](spark, SF)
     pdf = frame.toPandas()
-    release(frame)
     assert set(pdf["split"]) == {"train", "holdout"}
     straddle = pdf.groupby("group_id")["split"].nunique()
     assert (straddle == 1).all()
@@ -72,7 +70,6 @@ def test_ccnet_buckets_are_ordered_terciles(spark):
 
     frame = QUERIES["ccnet_buckets"](spark, SF)
     pdf = frame.toPandas()
-    release(frame)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     assert len(pdf) == docs.count()  # every doc bucketed exactly once
     for lang, grp in pdf.groupby("lang"):
@@ -183,7 +180,6 @@ def test_dedup_substrings_removal_semantics(spark):
 
     frame = QUERIES["dedup_substrings"](spark, SF)
     pdf = frame.toPandas()
-    release(frame)
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text").toPandas()
     merged = pdf.merge(docs, on="doc_id")
     assert len(merged) == len(docs)
@@ -217,7 +213,6 @@ def test_scd2_intervals_are_contiguous_and_dense(spark):
 def test_contrastive_triplets_are_well_formed(spark):
     frame = QUERIES["contrastive_triplets"](spark, SF)
     pdf = frame.toPandas()
-    release(frame)
     assert len(pdf) > 0
     assert pdf["anchor_id"].is_unique  # one triplet per anchor
     assert (pdf["pos_id"] != pdf["anchor_id"]).all()

@@ -75,16 +75,21 @@ def test_verification_join_broadcasts_the_pool(spark, transcript_parquet):
     assert "ShuffledHashJoin" not in plan
 
 
-def test_driver_built_frames_are_local_relations(spark):
+def test_driver_built_frames_are_local_relations(spark, monkeypatch):
     """Driver-built frames plan as LocalTableScan (no Python scan tasks)
     with the schema and rows the list-built form had."""
+    import datetime as dt
+
     from ds4sd_docling_tableformer_onnx_spark.functions.local import local_frame
+    from ds4sd_docling_tableformer_onnx_spark.operators.graph import pagerank
+    from ds4sd_docling_tableformer_onnx_spark.queries import QUERIES
 
     plan = _executed_plan(payload_pool_df(spark))
     assert "LocalTableScan" in plan and "ExistingRDD" not in plan
 
-    ddl = "id int, name string, score double, ids array<bigint>"
-    rows = [(1, "a", None, [1, 2]), (2, None, 3.5, None), (None, "c", -0.0, [])]
+    ddl = "id int, name string, score double, ids array<bigint>, ts timestamp"
+    ts = dt.datetime(2024, 1, 1, 12, 30, 0, 250)
+    rows = [(1, "a", None, [1, 2], ts), (2, None, 3.5, None, None), (None, "c", -0.0, [], ts)]
     got = local_frame(spark, rows, ddl)
     listed = spark.createDataFrame(rows, ddl)
     assert got.schema == listed.schema
@@ -92,6 +97,33 @@ def test_driver_built_frames_are_local_relations(spark):
     assert "LocalTableScan" in _executed_plan(got)
     assert local_frame(spark, [], ddl).schema == listed.schema
     assert local_frame(spark, [], ddl).count() == 0
+
+    # every frame these queries build on the driver (language markers,
+    # the BPE merges result, ccnet thresholds, the sessionize sentinel
+    # batches), each checked by itself: a whole query plan also shows
+    # Scan ExistingRDD for a local checkpoint
+    built = []
+    create = spark.createDataFrame
+
+    def recording(*args, **kwargs):
+        built.append(create(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(spark, "createDataFrame", recording)
+    for query in ("curation_pipeline", "bpe_merges", "ccnet_buckets", "stream_sessionize"):
+        QUERIES[query](spark, "/root/testdata/sf0.001")
+        assert built, query
+        for frame in built:
+            plan = _executed_plan(frame)
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, query
+        built.clear()
+    monkeypatch.undo()
+
+    # pagerank over self-loops only: the empty ranks frame
+    loops = spark.createDataFrame([(1, 1), (2, 2)], "src long, dst long")
+    ranks = pagerank(loops, iterations=2)
+    assert ranks.count() == 0 and ranks.columns == ["id", "r"]
+    assert "LocalTableScan" in _executed_plan(ranks)
 
 
 def test_lang_id_is_a_single_map_stage(spark):
@@ -125,13 +157,16 @@ def test_scalar_queries_stay_in_wholestage_codegen(spark):
 
 def test_simhash_pair_output_never_shuffles(spark):
     """Banded candidates: both sides of the one band self-join read ONE
-    persisted band table (InMemoryTableScan) and the (quadratic) pair
+    checkpointed band table (Scan ExistingRDD) and the (quadratic) pair
     output flows to the sink with no distinct/exchange over it."""
     from ds4sd_docling_tableformer_onnx_spark.queries import QUERIES
 
     df = QUERIES["simhash_candidates"](spark, "/root/testdata/sf0.001")
     plan = _executed_plan(df)
-    assert "InMemoryTableScan" in plan  # signatures materialized once
+    # signatures materialized once: both join sides scan the checkpoint
+    # and the signature UDF does not run again under either
+    assert plan.count("Scan ExistingRDD") == 2
+    assert "ArrowEvalPython" not in plan
     # no aggregation/dedup over the pair columns anywhere
     assert "HashAggregate" not in plan
     for line in plan.splitlines():
@@ -544,12 +579,10 @@ def test_bucketed_join_is_shuffle_free(spark):
 def test_triangle_count_never_cartesian(spark):
     """Wedge join + closure join are equi-joins; hub exclusion rides
     anti-joins — no nested-loop anywhere despite the self-joins."""
-    from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
     from ds4sd_docling_tableformer_onnx_spark.queries import QUERIES
 
     df = QUERIES["triangle_count"](spark, "/root/testdata/sf0.001")
     plan = _executed_plan(df)
-    release(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 

@@ -141,7 +141,6 @@ def test_triangle_count_matches_bruteforce(spark):
         simhash_candidates,
         simhash_column,
     )
-    from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
     from ds4sd_docling_tableformer_onnx_spark.queries import (
         _TRI_DEG_CAP,
         QUERIES,
@@ -152,7 +151,6 @@ def test_triangle_count_matches_bruteforce(spark):
         int(r.doc_id): (int(r.n_triangles), bool(r.excluded))
         for r in frame.collect()
     }
-    release(frame)
 
     cand = simhash_candidates(
         simhash_column(spark.read.parquet(f"{SF}/documents.parquet"))
@@ -161,7 +159,6 @@ def test_triangle_count_matches_bruteforce(spark):
         (int(r.id_a), int(r.id_b))
         for r in cand.where(F.col("hamming") <= 3).collect()
     }
-    release(cand)
     deg: dict = {}
     for a, b in edges:
         deg[a] = deg.get(a, 0) + 1
@@ -187,11 +184,9 @@ def test_triangle_count_matches_bruteforce(spark):
 def test_canonical_docs_keep_best_per_group(spark):
     """Exactly one keeper per group; the keeper maximizes n_chars with
     ties to the smallest doc_id; singletons keep themselves."""
-    from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
 
     frame = QUERIES["canonical_docs"](spark, SF)
     pdf = frame.toPandas()
-    release(frame)
     chars = (
         spark.read.parquet(f"{SF}/documents.parquet")
         .select("doc_id", "n_chars")
@@ -313,11 +308,8 @@ def test_quantile_sketch_exact_values_and_contract(spark):
     array (same ceil(p*n) definition); contract verdicts all true."""
     import math
 
-    from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
-
     frame = QUERIES["quantile_sketch"](spark, SF)
     pdf = frame.toPandas().set_index("p_label")
-    release(frame)
     cents = sorted(
         int(round(v * 100))
         for v in spark.read.parquet(f"{SF}/orders.parquet")

@@ -92,7 +92,6 @@ def test_stream_neardup_matches_batch_candidates(spark, tmp_path):
         simhash_candidates,
         simhash_column,
     )
-    from ds4sd_docling_tableformer_onnx_spark.plans.cache import release
     from ds4sd_docling_tableformer_onnx_spark.streaming.neardup import (
         stream_neardup_candidates,
     )
@@ -105,7 +104,6 @@ def test_stream_neardup_matches_batch_candidates(spark, tmp_path):
     expected = {
         (r["id_a"], r["id_b"], r["hamming"]) for r in batch.collect()
     }
-    release(batch)
     assert expected  # the corpus has near-dup clusters; empty would be vacuous
 
     in_dir = tmp_path / "in"

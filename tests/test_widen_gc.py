@@ -1,6 +1,7 @@
 """Focused tests for the r6 second-pass internals: the byte-proportional
 scan widening rule (queries._widen) and the cyclic-GC suspension helper
-(functions/gcctl.suspended_gc)."""
+(functions/gcctl.suspended_gc), on a toy generator and on the real
+extraction row worker."""
 
 import gc
 import inspect
@@ -59,16 +60,40 @@ def test_suspended_gc_restores_state():
         gc.enable()
 
 
-def test_suspended_gc_restores_on_generator_close():
+def _toy_generator():
     def worker(it):
         with suspended_gc():
             yield from it
 
-    g = worker(iter(range(3)))
-    assert next(g) == 0
-    assert not gc.isenabled()  # suspended while the task generator runs
-    g.close()  # Spark closing the iterator mid-stream
-    assert gc.isenabled()
+    return worker(iter(range(3)))
+
+
+def _extract_worker():
+    """The real row worker over two batches of fixture-pool turns."""
+    import pyarrow as pa
+
+    from ds4sd_docling_tableformer_onnx_spark.operators.extract import _extract_batches
+    from ds4sd_docling_tableformer_onnx_spark.sources.fixtures import payload_pool
+
+    pool = payload_pool()[:4]
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "conv_id": [f"c{i}" for i in range(len(pool))],
+            "turn_idx": pa.array(range(len(pool)), pa.int32()),
+            "text": [e["text"] for e in pool],
+            "tool": [e["tool"] for e in pool],
+        }
+    )
+    return _extract_batches(iter([batch.slice(0, 2), batch.slice(2)]), False)
+
+
+def test_suspended_gc_restores_on_generator_close():
+    for make_worker in (_toy_generator, _extract_worker):
+        g = make_worker()
+        next(g)
+        assert not gc.isenabled(), make_worker  # suspended while the task generator runs
+        g.close()  # Spark closing the iterator mid-stream
+        assert gc.isenabled(), make_worker
 
 
 def test_one_file_per_task_restores_conf_when_the_block_raises(spark):
