@@ -8,6 +8,12 @@ checkpoint *tables*: one parquet/Iceberg table per stage keyed by
 checkpoint to process only missing turns — idempotent resume without
 driver-side bookkeeping (north_rule).
 
+A resumed extraction is ONE write action (``run_with_checkpoint``):
+the anti-join, the worker and the append run in the write's job, and
+the skipped-turn count is observed there (``pyspark.sql.Observation``)
+instead of recounted.  A parquet checkpoint is read with its declared
+schema (``checkpoint_schema``), so no read infers it from the files.
+
 Checkpoint targets are EITHER a filesystem path (parquet, append mode —
 the sandbox default) or a catalog table identifier
 (``catalog.db.table``): when the target's catalog is configured in the
@@ -22,6 +28,8 @@ test that executes whenever Iceberg jars are present.
 """
 
 from __future__ import annotations
+
+import functools
 
 CHECKPOINT_KEYS = ("conv_id", "turn_idx", "payload_sha256")
 
@@ -104,54 +112,80 @@ def write_checkpoint(df, path: str, run_id: str, stage: str):
     framed.write.mode("append").parquet(path)
 
 
+@functools.lru_cache(maxsize=1)
+def checkpoint_schema(spark):
+    """The parquet checkpoint's schema, from its declarations: the
+    extraction worker's ``OUTPUT_COLUMNS`` plus ``with_lineage``'s
+    columns, every field nullable as a parquet read reports it.
+    Analysing ``with_lineage`` takes ~60 ms on a 4-core local session,
+    so the schema is kept for the latest session."""
+    from pyspark.sql.types import StructField, StructType
+
+    from ..functions.local import local_frame
+    from ..functions.rows import spark_schema
+    from ..operators.extract import OUTPUT_COLUMNS
+
+    framed = with_lineage(local_frame(spark, [], spark_schema(OUTPUT_COLUMNS)), "", "")
+    return StructType([StructField(f.name, f.dataType) for f in framed.schema])
+
+
 def read_checkpoint(spark, path: str):
-    """The checkpoint table, or ``None`` when nothing is done yet (no
-    path, or a directory with no data files).  Any other read error (an
-    unreadable part file, say) raises: read as "no checkpoint", it would
-    make resume re-extract and append every turn."""
+    """The checkpoint table, or ``None`` when there is no checkpoint
+    yet (no path; no Iceberg table).
+
+    A parquet checkpoint is read with ``checkpoint_schema``, so opening
+    it lists the files but reads none of them: a directory with no data
+    files is an empty frame, and a part file that cannot be read raises
+    (``FAILED_READ_FILE``) in the first action that scans it, which for
+    ``run_with_checkpoint`` is the checkpoint write, before anything is
+    appended."""
     from pyspark.errors import AnalysisException
 
     if is_table_target(path, spark):
         _require_catalog(spark, path)
         return spark.table(path) if spark.catalog.tableExists(path) else None
     try:
-        return spark.read.parquet(path)
+        return spark.read.schema(checkpoint_schema(spark)).parquet(path)
     except AnalysisException as exc:
-        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+        if exc.getCondition() == "PATH_NOT_FOUND":
             return None
         raise
 
 
-def resume_filter(input_df, spark, checkpoint_path: str):
-    """Drop turns already present in the checkpoint (matched on conv_id,
-    turn_idx and the payload hash, so changed payloads re-run).
+def _pending(input_df, done, how: str = "left_anti"):
+    """The resume plan, defined once: ``input_df``'s turns that ``done``
+    does not hold (``how="left_semi"``: the ones it does), matched on
+    conv_id, turn_idx and the payload key, so a changed payload re-runs.
 
-    The anti-join shuffles both sides on the composite key; at 10^12-turn
-    scale the checkpoint side is bucketed on the same key in Iceberg so
-    the join is storage-partitioned (no shuffle of the big side).
+    The key is the shared injective payload key (functions/keys.py) —
+    the same expression the extraction worker stores, so the join never
+    mis-skips a colliding changed payload.  No dedup of ``done``: semi
+    and anti joins ignore duplicate right-side keys, and a
+    ``dropDuplicates`` would cost a shuffle stage.  At 10^12-turn scale
+    the checkpoint side is bucketed on the same key in Iceberg, so the
+    join is storage-partitioned (no shuffle of the big side)."""
+    from ..functions.keys import payload_key_col
+
+    keys = list(CHECKPOINT_KEYS)
+    keyed = input_df.withColumn("payload_sha256", payload_key_col("text", "tool"))
+    return keyed.join(done.select(*keys), keys, how).drop("payload_sha256")
+
+
+def resume_filter(input_df, spark, checkpoint_path: str):
+    """Drop turns already present in the checkpoint: ``(pending, skipped)``.
 
     ``skipped`` is the number of INPUT rows dropped as already done (a
     changed payload hashes differently, so it counts as not-done and
-    re-runs).  Counting it costs one extra pass over the input.
-
-    The key is the shared injective payload key (functions/keys.py) —
-    the same expression the extraction worker stores, so the anti-join
-    never mis-skips a colliding changed payload.  Checkpoints written
-    by rounds 1-2 used the old ``concat_ws`` form and re-run once
-    (see the re-keying note in functions/keys.py).
+    re-runs).  This eager caller counts it with a semi-join, which costs
+    one extra pass over the input; ``run_with_checkpoint`` instead
+    observes it during its write.  Checkpoints written by rounds 1-2
+    used the old ``concat_ws`` key and re-run once (see the re-keying
+    note in functions/keys.py).
     """
-    from ..functions.keys import payload_key_col
-
     done = read_checkpoint(spark, checkpoint_path)
     if done is None:
         return input_df, 0
-    # no dedup: semi/anti joins ignore duplicate right-side keys, and a
-    # dropDuplicates would cost a shuffle stage per join
-    done_keys = done.select(*CHECKPOINT_KEYS)
-    hashed = input_df.withColumn("payload_sha256", payload_key_col("text", "tool"))
-    remaining = hashed.join(done_keys, list(CHECKPOINT_KEYS), "left_anti")
-    skipped = hashed.join(done_keys, list(CHECKPOINT_KEYS), "left_semi").count()
-    return remaining.drop("payload_sha256"), skipped
+    return _pending(input_df, done), _pending(input_df, done, "left_semi").count()
 
 
 def partition_metrics(extracted):
@@ -179,16 +213,28 @@ def run_with_checkpoint(
     run_id: str,
     correct_overlapping_cells: bool = False,
 ):
-    """Extraction with resume: skip checkpointed turns, extract the rest,
-    append to the checkpoint, return (new_rows_df, skipped_count)."""
+    """Extraction with resume as ONE write action: skip checkpointed
+    turns, extract the rest, append them to the checkpoint, and return
+    ``(new_rows_df, skipped)``.
+
+    ``skipped`` is not recounted: the write observes the rows entering
+    the resume anti-join and the rows leaving the worker (one row per
+    turn), and ``skipped`` is their difference.  A checkpoint that
+    cannot be read fails the write, so nothing is appended."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from ..operators.extract import extract_transcripts
 
-    remaining, skipped = resume_filter(transcripts_df, spark, checkpoint_path)
+    done = read_checkpoint(spark, checkpoint_path)
+    seen, new = Observation(), Observation()
+    pending = transcripts_df.observe(seen, F.count(F.lit(1)).alias("rows"))
+    if done is not None:
+        pending = _pending(pending, done)
     extracted = extract_transcripts(
-        remaining, correct_overlapping_cells=correct_overlapping_cells
-    )
+        pending, correct_overlapping_cells=correct_overlapping_cells
+    ).observe(new, F.count(F.lit(1)).alias("rows"))
     write_checkpoint(extracted, checkpoint_path, run_id, stage="extract")
+    skipped = seen.get["rows"] - new.get["rows"]
     done = read_checkpoint(spark, checkpoint_path)
     return done.where(F.col("run_id") == run_id), skipped

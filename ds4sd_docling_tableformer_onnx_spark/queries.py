@@ -5550,7 +5550,9 @@ def q_edit_distance_pairs(spark, sf_dir):
         F.octet_length("prefix") == F.length("prefix")  # ASCII-only guard
     )
     cand = simhash_candidates(simhash_column(docs))
-    pairs = cand.where(F.col("hamming") <= _EDIT_HAMMING_MAX)
+    # both prefix joins are broadcast, so the quadratic per-pair
+    # levenshtein keeps the candidates' partitioning: widen it first
+    pairs = _widen(cand.where(F.col("hamming") <= _EDIT_HAMMING_MAX))
     joined = (
         pairs.join(
             prefixes.select(

@@ -509,6 +509,39 @@ def test_quality_classifier_generalizes_vocab(spark):
     assert got[1000] > 0 and got[1001] < 0
 
 
+def test_quality_weights_ship_as_one_folded_literal(spark):
+    """The 1,024 weights enter the plan as one JSON string literal,
+    which Spark folds into an array literal: every score on the sf0.01
+    documents equals the integer sum computed in Python, and the
+    optimized plan holds no ``from_json``."""
+    import hashlib
+
+    from ds4sd_docling_tableformer_onnx_spark.operators.classifier import (
+        quality_scores,
+        train_quality_weights,
+    )
+    from tests.test_widen_gc import SF as SF001
+
+    docs = spark.read.parquet(f"{SF001}/documents.parquet").where(
+        F.col("text").isNotNull()
+    )
+    weights = train_quality_weights(
+        docs.withColumn("label", F.col("doc_id") % 2 == 0), n_buckets=1024
+    )
+    scored = quality_scores(docs, weights)
+
+    def py_score(text):
+        return sum(
+            weights[int(hashlib.md5(w.encode("utf-8")).hexdigest()[:8], 16) % 1024]
+            for w in text.split(" ")
+        )
+
+    rows = scored.select("text", "q_score").collect()
+    assert rows and all(r["q_score"] == py_score(r["text"]) for r in rows)
+    plan = scored._jdf.queryExecution().optimizedPlan().toString()
+    assert "from_json" not in plan
+
+
 def test_bloom_prefilter_guarantees(spark):
     """No false negatives ever; false positives bounded well below the
     worst case on novel keys."""

@@ -77,3 +77,12 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.limit(5).collect()
     assert rows and set(df.columns) >= {"conv_id", "turn_idx", "html_match"}
+
+
+def test_edit_distance_pairs_spreads_the_per_pair_work(spark):
+    """The quadratic per-pair ``levenshtein`` stage runs on more than
+    one partition even though the sf0.01 documents scan is one file."""
+    from tests.test_widen_gc import SF as SF001
+
+    df = entry_mod.queries()["edit_distance_pairs"](spark, SF001)
+    assert df.rdd.getNumPartitions() > 1

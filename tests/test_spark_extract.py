@@ -150,6 +150,45 @@ def test_empty_checkpoint_directory_reads_as_no_checkpoint(spark, tmp_path):
     assert new_rows.count() == 20
 
 
+def test_declared_checkpoint_schema_is_the_written_one(spark, tmp_path):
+    """The schema a parquet checkpoint is read with is built from the
+    worker's and the lineage declarations; it must be exactly what a
+    written checkpoint holds, so the declarations cannot drift from
+    the reader."""
+    from ds4sd_docling_tableformer_onnx_spark.plans.checkpoint import (
+        checkpoint_schema,
+        write_checkpoint,
+    )
+
+    path = str(tmp_path / "ckpt")
+    df = generate_transcripts(spark, n_turns=10, n_convs=2, seed=2)
+    write_checkpoint(extract_transcripts(df), path, run_id="r0", stage="extract")
+    assert checkpoint_schema(spark) == spark.read.parquet(path).schema
+
+
+def test_resumed_run_is_one_write_action(spark, tmp_path):
+    """A resumed ``run_with_checkpoint`` and the count of its new rows
+    run 4 Spark jobs: the checkpoint-key broadcast, the write (anti-join,
+    worker and append in one job) and the count's two stages.  Neither
+    ``skipped`` nor the checkpoint schema costs a job of its own."""
+    source = str(tmp_path / "in")
+    generate_transcripts(spark, n_turns=40, n_convs=4, seed=5).write.parquet(source)
+    df = spark.read.parquet(source)
+    path = str(tmp_path / "ckpt")
+    first, _ = run_with_checkpoint(spark, df.where("turn_idx % 2 = 0"), path, run_id="r1")
+    n_first = first.count()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("resumed-run", "resumed run_with_checkpoint")
+    try:
+        new_rows, skipped = run_with_checkpoint(spark, df, path, run_id="r2")
+        n_new = new_rows.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert (skipped, n_new) == (n_first, 40 - n_first)
+    assert len(sc.statusTracker().getJobIdsForGroup("resumed-run")) == 4
+
+
 def test_run_id_with_quote_returns_its_own_rows(spark, tmp_path):
     path = str(tmp_path / "ckpt")
     df = generate_transcripts(spark, n_turns=40, n_convs=4, seed=11)
