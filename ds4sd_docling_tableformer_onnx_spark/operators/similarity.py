@@ -24,10 +24,14 @@ def _dot(a, b):
 
 
 def cosine_topk(emb_df, query_vec, k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding"):
-    """Exact top-k by cosine similarity against a literal query vector."""
+    """Exact top-k by cosine similarity against a literal query vector.
+    The vector ships as one JSON string literal that Spark folds into an
+    array literal: one py4j call, not one per component."""
+    import json
+
     from pyspark.sql import functions as F
 
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
+    q = F.from_json(F.lit(json.dumps([float(v) for v in query_vec])), "array<double>")
     e = F.col(vec_col).cast("array<double>")
     sim = _dot(e, q) / (F.sqrt(_dot(e, e)) * F.sqrt(_dot(q, q)))
     return (

@@ -4230,6 +4230,7 @@ def q_dsir_resample(spark, sf_dir):
     """Top-500 raw-pool docs by hashed-unigram importance weight toward
     the deterministic target slice (doc_id % 43 == 0, the eval-slice
     convention shared with decontaminate)."""
+    import json
     import math
 
     from pyspark.sql import functions as F
@@ -4279,7 +4280,9 @@ def q_dsir_resample(spark, sf_dir):
         )
         for b in range(B)
     ]
-    score_arr = F.lit(scores).cast("array<long>")
+    # one JSON string literal that Spark folds into the array literal
+    # (one py4j call instead of one per score; operators/classifier.py)
+    score_arr = F.from_json(F.lit(json.dumps(scores)), "array<bigint>")
     weight = F.aggregate(
         F.transform(
             F.split("text", " ", -1),

@@ -542,6 +542,27 @@ def test_quality_weights_ship_as_one_folded_literal(spark):
     assert "from_json" not in plan
 
 
+def test_query_literals_ship_as_one_folded_literal(spark):
+    """``q_dsir_resample``'s 1,024 scores and ``cosine_topk``'s query
+    vector enter the plan as one JSON string literal each, which Spark
+    folds: neither optimized plan holds a ``from_json``."""
+    from ds4sd_docling_tableformer_onnx_spark.operators.similarity import cosine_topk
+    from ds4sd_docling_tableformer_onnx_spark.queries import q_dsir_resample
+    from tests.test_widen_gc import SF as SF001
+
+    def optimized(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 1.0])],
+        "vec_id int, embedding array<float>",
+    )
+    top = cosine_topk(emb, [0.2, 0.9], k=2)
+    assert [r["vec_id"] for r in top.collect()] == [3, 2]
+    assert "from_json" not in optimized(top)
+    assert "from_json" not in optimized(q_dsir_resample(spark, SF001))
+
+
 def test_bloom_prefilter_guarantees(spark):
     """No false negatives ever; false positives bounded well below the
     worst case on novel keys."""

@@ -39,6 +39,21 @@ def test_contract_shape():
         assert name in oracles
 
 
+# SHA-256 of repr(sorted(oracle_sql().items())): a change to any oracle,
+# or an oracle added or removed, must change this literal on purpose.
+ORACLE_KEYS = 114
+ORACLE_SHA256 = "4a7171120ee9eeed0fb4a2286b3acd846d536125abaf90b2ba00532302dfe274"
+
+
+def test_oracle_sql_is_pinned():
+    import hashlib
+
+    oracles = entry_mod.oracle_sql()
+    assert len(oracles) == ORACLE_KEYS
+    digest = hashlib.sha256(repr(sorted(oracles.items())).encode("utf-8")).hexdigest()
+    assert digest == ORACLE_SHA256
+
+
 def test_every_oracle_parses_and_binds(duck):
     """Regression guard (VERDICT r2 item 8): every oracle's SQL must
     PLAN against the sf0.001 fixture schemas (EXPLAIN parses, binds

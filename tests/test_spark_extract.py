@@ -75,6 +75,38 @@ def test_malformed_payload_is_isolated(spark):
     assert out[1]["ok"] is True and out[1]["num_rows"] == 1
 
 
+def test_repeated_payloads_match_the_per_row_worker(spark):
+    """The Spark path runs the worker once per distinct payload in each
+    Arrow batch; on repeated, null and malformed payloads every one of
+    the 17 output columns equals the per-row worker's, row for row."""
+    import pyarrow as pa
+
+    from ds4sd_docling_tableformer_onnx_spark.operators.extract import (
+        OUTPUT_COLUMNS,
+        _extract_batches,
+    )
+    from ds4sd_docling_tableformer_onnx_spark.sources.fixtures import payload_pool
+
+    pool = payload_pool()
+    pairs = [(e["text"], e["tool"]) for e in pool[:6]] + [
+        (None, "{}"), ('{"broken', "{}"), ("{}", None), ("{}", "{}"), (None, None),
+    ]
+    rows = [(f"c{i % 5}", i, *pairs[(i * 7) % len(pairs)]) for i in range(220)]
+    rows += [(f"u{i}", i, e["text"], e["tool"]) for i, e in enumerate(pool[6:])]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string, tool string")
+
+    got = [r.asDict() for r in extract_transcripts(df).orderBy("conv_id", "turn_idx").collect()]
+    schema = pa.schema(
+        [("conv_id", pa.string()), ("turn_idx", pa.int32()), ("text", pa.string()), ("tool", pa.string())]
+    )
+    batch = pa.RecordBatch.from_pylist([dict(zip(schema.names, row)) for row in rows], schema)
+    (out,) = _extract_batches(iter([batch]), False)
+    want = sorted(out.to_pylist(), key=lambda r: (r["conv_id"], r["turn_idx"]))
+    names = [name for name, _, _ in OUTPUT_COLUMNS]
+    assert len(got) == len(rows) and all(list(r) == names for r in got)
+    assert got == want
+
+
 # The worker's output contract, written out literally so that a change
 # to the column table in operators/extract.py cannot pass unnoticed.
 OUTPUT_DDL = (

@@ -68,14 +68,13 @@ def _toy_generator():
     return worker(iter(range(3)))
 
 
-def _extract_worker():
-    """The real row worker over two batches of fixture-pool turns."""
+def _pool_batches():
+    """Two batches of fixture-pool turns, each repeating one payload."""
     import pyarrow as pa
 
-    from ds4sd_docling_tableformer_onnx_spark.operators.extract import _extract_batches
     from ds4sd_docling_tableformer_onnx_spark.sources.fixtures import payload_pool
 
-    pool = payload_pool()[:4]
+    pool = [e for e in payload_pool()[:2] for _ in range(2)]
     batch = pa.RecordBatch.from_pydict(
         {
             "conv_id": [f"c{i}" for i in range(len(pool))],
@@ -84,11 +83,26 @@ def _extract_worker():
             "tool": [e["tool"] for e in pool],
         }
     )
-    return _extract_batches(iter([batch.slice(0, 2), batch.slice(2)]), False)
+    return iter([batch.slice(0, 2), batch.slice(2)])
+
+
+def _extract_worker():
+    """The real row worker over two batches of fixture-pool turns."""
+    from ds4sd_docling_tableformer_onnx_spark.operators.extract import _extract_batches
+
+    return _extract_batches(_pool_batches(), False)
+
+
+def _distinct_worker():
+    """The Spark path's wrapper, which runs the row worker once per
+    distinct payload in each batch and must close it when closed."""
+    from ds4sd_docling_tableformer_onnx_spark.operators.extract import _distinct_payloads
+
+    return _distinct_payloads(_pool_batches(), False)
 
 
 def test_suspended_gc_restores_on_generator_close():
-    for make_worker in (_toy_generator, _extract_worker):
+    for make_worker in (_toy_generator, _extract_worker, _distinct_worker):
         g = make_worker()
         next(g)
         assert not gc.isenabled(), make_worker  # suspended while the task generator runs
