@@ -32,7 +32,9 @@ from __future__ import annotations
 
 import hashlib
 import json
+import math
 from collections import deque
+from itertools import chain
 from typing import Iterator
 
 import pyarrow as pa
@@ -85,6 +87,19 @@ def _non_finite(constant):
     raise ValueError(f"non-finite number in payload: {constant}")
 
 
+def _check_finite_bboxes(payload):
+    """Raise unless every coordinate of the table bbox, the cell bboxes
+    and the PDF cells' bboxes is a finite number.  Strict parsing
+    rejects ``NaN``/``Infinity`` tokens, but an overflowing literal such
+    as ``1e999`` still parses to ``inf``."""
+    boxes = [payload.get("table_bbox") or (), *(payload.get("bboxes") or ())]
+    for cell in payload.get("pdf_cells") or ():
+        bbox = cell["bbox"]
+        boxes.append(bbox.values() if isinstance(bbox, dict) else bbox)
+    if not all(map(math.isfinite, chain.from_iterable(boxes))):
+        raise ValueError("non-finite bbox coordinate in payload")
+
+
 def _extract_batches(batches: Iterator, correct_overlapping_cells: bool):
     """Arrow-batch worker: consumes pyarrow RecordBatches, yields
     RecordBatches of ``OUTPUT_COLUMNS`` through the row worker
@@ -94,13 +109,15 @@ def _extract_batches(batches: Iterator, correct_overlapping_cells: bool):
 
     Payloads and ``tf_responses_json`` are strict JSON: a ``NaN`` or
     ``Infinity`` in the payload, or a non-finite number reaching the
-    responses, makes the turn an error row."""
+    responses, makes the turn an error row, and so does a bbox
+    coordinate that parses to a non-finite number."""
     from ..core.pipeline import extract_turn
 
     def turn(text, tool):
         payload = json.loads(text, parse_constant=_non_finite)
         context = json.loads(tool, parse_constant=_non_finite)
         payload.update(context)
+        _check_finite_bboxes(payload)
         result = extract_turn(payload, correct_overlapping_cells=correct_overlapping_cells)
         return (
             context.get("payload_id", -1),

@@ -58,13 +58,15 @@ def _work_dir(prefix):
 def _widen(df, bytes_per_part: int = 56 << 10):
     """Scale-adaptive scan widening for queries whose map side does
     heavy per-row expression work (gram hashing, fingerprinting, text
-    shingling): when the scan produced fewer partitions than the
-    session's parallelism (bench-scale tables are single-row-group
-    parquet files, so the whole map stage would run on ONE core), pay
-    one tiny round-robin shuffle to spread it.  At corpus scale the
-    scan already has >= parallelism splits and this is a no-op — the
-    guide's rule that partitioning must derive from input size, not a
-    constant.  Only used by queries whose aggregates are exact-integer
+    shingling).  For plain scans only: it reads
+    ``df.rdd.getNumPartitions()``, which under AQE runs every shuffle
+    stage below a frame that has an exchange.  When the scan produced
+    fewer partitions than the session's parallelism (bench-scale tables
+    are single-row-group parquet files, so the whole map stage would run
+    on ONE core), pay one tiny round-robin shuffle to spread it.  At
+    corpus scale the scan already has >= parallelism splits and this is
+    a no-op — the guide's rule that partitioning must derive from input
+    size, not a constant.  Only used by queries whose aggregates are exact-integer
     or per-row (partition order never reaches a float sum).
 
     ``bytes_per_part``: widen PROPORTIONALLY to the scan's bytes (one
@@ -5554,8 +5556,11 @@ def q_edit_distance_pairs(spark, sf_dir):
     )
     cand = simhash_candidates(simhash_column(docs))
     # both prefix joins are broadcast, so the quadratic per-pair
-    # levenshtein keeps the candidates' partitioning: widen it first
-    pairs = _widen(cand.where(F.col("hamming") <= _EDIT_HAMMING_MAX))
+    # levenshtein keeps the candidates' partitioning: spread it first
+    # (a shuffled frame, so not _widen: that would run its stages)
+    pairs = cand.where(F.col("hamming") <= _EDIT_HAMMING_MAX).repartition(
+        spark.sparkContext.defaultParallelism
+    )
     joined = (
         pairs.join(
             prefixes.select(

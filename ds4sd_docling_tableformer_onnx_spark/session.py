@@ -1,9 +1,11 @@
 """SparkSession factory with the engine's scale-oriented defaults.
 
 The same configuration is used by tests (small core counts), the
-benchmarks (perfbench on ``local[<nproc>]``, bench.py's core-scaling
-section) and — unchanged — a real multi-executor cluster via ``spark-submit --py-files``: everything
-here is partition-count / AQE tuning, nothing is local-mode specific.
+benchmarks (perfbench on ``local[<nproc>]``; bench.py on this default
+core count, and on a quarter of it for its scaling evidence) and —
+unchanged — a real multi-executor cluster via ``spark-submit
+--py-files``: everything here is partition-count / AQE tuning, nothing
+is local-mode specific.
 
 Two confs start the Python workers from the package's own daemon:
 

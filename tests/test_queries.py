@@ -1,29 +1,22 @@
-"""Driver-contract sanity + spot oracle checks at sf0.001.
+"""The ``__spark_entry__`` contract and oracle equivalence at sf0.001.
 
-The full 26-query oracle sweep runs via ``scripts/check_oracles.py``
-(driver-style: row count + schema + order-insensitive values); here we
-keep the suite fast with a representative spot check per family.
+Every registered query is checked against its DuckDB oracle through
+``scripts/check_oracles.oracle_mismatches``, the comparator the
+standalone sweep uses (column names, pandas dtypes, row count and
+order-insensitive values).
 """
 
-import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
+from scripts.check_oracles import duck_views, oracle_mismatches
 
 SF = "/root/testdata/sf0.001"
-TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-SPOT = ["dense_rank_reindex", "exact_median_per_group", "band_join", "minhash_lsh_pairs", "simhash_candidates", "lang_id", "pack_sequences", "cluster_split"]
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for table in TABLES:
-        con.execute(
-            f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{SF}/{table}.parquet')"
-        )
-    return con
+    return duck_views(SF)
 
 
 def test_contract_shape():
@@ -69,23 +62,12 @@ def test_every_oracle_parses_and_binds(duck):
             raise AssertionError(f"oracle {name!r} does not bind: {exc}") from exc
 
 
-@pytest.mark.parametrize("name", SPOT)
+@pytest.mark.parametrize("name", sorted(entry_mod.oracle_sql()))
 def test_spot_oracle_equivalence(spark, duck, name):
-    import pandas as pd
-
+    """The query's result equals its oracle's."""
     spark_df = entry_mod.queries()[name](spark, SF).toPandas()
     duck_df = duck.execute(entry_mod.oracle_sql()[name]).fetchdf()
-    cols = sorted(spark_df.columns)
-    assert cols == sorted(duck_df.columns)
-    a = spark_df[cols].sort_values(cols).reset_index(drop=True)
-    b = duck_df[cols].sort_values(cols).reset_index(drop=True)
-    assert len(a) == len(b)
-    for col in cols:
-        av, bv = a[col], b[col]
-        if av.dtype.kind == "f":
-            assert (av.astype(float).to_numpy() == bv.astype(float).to_numpy()).all(), col
-        else:
-            assert (av.astype(str).to_numpy() == bv.astype(str).to_numpy()).all(), col
+    assert oracle_mismatches(spark_df, duck_df) == []
 
 
 def test_entry_smoke(spark):
@@ -101,3 +83,29 @@ def test_edit_distance_pairs_spreads_the_per_pair_work(spark):
 
     df = entry_mod.queries()["edit_distance_pairs"](spark, SF001)
     assert df.rdd.getNumPartitions() > 1
+
+
+def test_edit_distance_pairs_runs_no_stage_while_building(spark):
+    """Building the frame runs no job beyond the documents scan's
+    parquet schema read: the band-join stages run only at the action."""
+    from ds4sd_docling_tableformer_onnx_spark.queries import _read
+    from tests.test_widen_gc import SF as SF001
+
+    sc = spark.sparkContext
+
+    def jobs_run_by(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+
+    schema_read = jobs_run_by("documents-read", lambda: _read(spark, SF001, "documents"))
+    built = jobs_run_by(
+        "edit-distance-build",
+        lambda: entry_mod.queries()["edit_distance_pairs"](spark, SF001),
+    )
+    assert schema_read >= 1
+    assert built == schema_read

@@ -7,8 +7,6 @@ import gc
 import inspect
 import os
 
-import pytest
-
 from ds4sd_docling_tableformer_onnx_spark.functions.gcctl import suspended_gc
 from ds4sd_docling_tableformer_onnx_spark.queries import _read, _widen
 
@@ -109,14 +107,3 @@ def test_suspended_gc_restores_on_generator_close():
         g.close()  # Spark closing the iterator mid-stream
         assert gc.isenabled(), make_worker
 
-
-def test_one_file_per_task_restores_conf_when_the_block_raises(spark):
-    import bench
-
-    before = {k: spark.conf.get(k) for k in bench.ONE_FILE_PER_TASK}
-    with pytest.raises(RuntimeError):
-        with bench.one_file_per_task(spark):
-            for k, v in bench.ONE_FILE_PER_TASK.items():
-                assert spark.conf.get(k) == v
-            raise RuntimeError("extraction failed")
-    assert {k: spark.conf.get(k) for k in bench.ONE_FILE_PER_TASK} == before

@@ -94,13 +94,48 @@ def non_finite_bbox(draw):
     return json.dumps(text), e["tool"]
 
 
+# a placeholder coordinate that _dumps writes as an overflowing literal
+OVERFLOW = "overflow"
+
+
+def _boxes(text, tool):
+    """A payload's bboxes by field, as the lists the parsed JSON holds."""
+    return {
+        "table_bbox": [tool["table_bbox"]],
+        "bboxes": text["bboxes"],
+        "pdf_cells": [cell["bbox"] for cell in tool["pdf_cells"]],
+    }
+
+
+def _dumps(text, tool, literal):
+    return tuple(json.dumps(part).replace(f'"{OVERFLOW}"', literal) for part in (text, tool))
+
+
+@st.composite
+def overflowing_bbox(draw):
+    """A bbox coordinate written as a literal that parses to an infinity
+    past strict parsing, which only rejects NaN/Infinity tokens."""
+    e = draw(entries)
+    text, tool = json.loads(e["text"]), json.loads(e["tool"])
+    box = draw(st.sampled_from([box for boxes in _boxes(text, tool).values() for box in boxes]))
+    box[draw(st.integers(0, len(box) - 1))] = OVERFLOW
+    return _dumps(text, tool, draw(st.sampled_from(["1e999", "-1e999"])))
+
+
 @st.composite
 def null_part(draw):
     e = draw(entries)
     return draw(st.sampled_from([(None, e["tool"]), (e["text"], None), (None, None)]))
 
 
-BAD = st.one_of(non_json(), not_an_object(), wrong_field_type(), non_finite_bbox(), null_part())
+BAD = st.one_of(
+    non_json(),
+    not_an_object(),
+    wrong_field_type(),
+    non_finite_bbox(),
+    overflowing_bbox(),
+    null_part(),
+)
 PAYLOAD = st.one_of(good(), empty_tags(), BAD.map(lambda pair: (*pair, "bad")))
 
 
@@ -158,6 +193,36 @@ def test_malformed_payloads_give_one_error_row_each(drawn):
         if expect == "empty":
             assert (row["num_rows"], row["num_cols"], row["tf_responses_json"]) == (0, 0, "[]")
     assert pa.Table.from_batches(distinct).to_pylist() == rows
+
+
+def test_an_overflowing_bbox_literal_is_an_error_row_on_both_paths():
+    """``1e999`` in the table bbox, the first cell bbox or the first PDF
+    cell's bbox of the pool's first payload of each kind gives an error
+    row, on the dummy path (no PDF cells) as on the matched path."""
+    pairs, matched = [], []
+    for kind in sorted({e["kind"] for e in POOL}):
+        e = next(e for e in POOL if e["kind"] == kind)
+        for field in ("table_bbox", "bboxes", "pdf_cells"):
+            text, tool = json.loads(e["text"]), json.loads(e["tool"])
+            boxes = _boxes(text, tool)[field]
+            if boxes:
+                boxes[0][0] = OVERFLOW
+                pairs.append(_dumps(text, tool, "1e999"))
+                matched.append(bool(tool["pdf_cells"]))
+    assert set(matched) == {False, True}
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "conv_id": [f"c{i}" for i in range(len(pairs))],
+            "turn_idx": pa.array(range(len(pairs)), pa.int32()),
+            "text": [text for text, _ in pairs],
+            "tool": [tool for _, tool in pairs],
+        }
+    )
+    for worker in (_extract_batches, _distinct_payloads):
+        rows = pa.Table.from_batches(worker(iter([batch]), False)).to_pylist()
+        assert len(rows) == len(pairs)
+        for row in rows:
+            assert row["ok"] is False and "non-finite" in row["err"], row
 
 
 def _repeating_batches():
