@@ -29,13 +29,8 @@ WORD_MAP_TAG = {
 }
 TAG_BY_ID = {v: k for k, v in WORD_MAP_TAG.items()}
 
-# predict-time defaults (reference tm_config predict.*)
-PDF_CELL_IOU_THRES = 0.05
+# the decoder's step limit (reference tm_config predict.max_steps)
 MAX_STEPS = 1024
-
-# cost guards (matching_post_processor.py:1306-1313, 1328-1331)
-MAX_PDF_CELLS_FOR_REALIGN = 300
-MAX_TABLE_CELLS_FOR_OVERLAP_FIX = 300
 
 
 def decode_tag_sequence(tag_seq):

@@ -99,9 +99,9 @@ def ring_sql(count_sql: str, expect: int) -> str:
 _QUOTA_SALTS = 8
 
 
-def quota_rank_per_group(df, group_col: str, *, n: int, id_col: str = "doc_id"):
+def quota_rank_per_group(df, group_col: str, *, n: int):
     """Skew-safe keep-at-most-``n``-rows-per-group: rows ranked by
-    (u32_md5(id), id), smallest first, annotated with ``quota_rank``
+    (u32_md5(doc_id), doc_id), smallest first, annotated with ``quota_rank``
     (1..n) and filtered to the survivors.
 
     A single ``row_number() OVER (PARTITION BY group)`` funnels every
@@ -117,13 +117,13 @@ def quota_rank_per_group(df, group_col: str, *, n: int, id_col: str = "doc_id"):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    h = u32_md5(id_col)
+    h = u32_md5("doc_id")
     ranked = df.withColumn("_h", h).withColumn("_salt", h % _QUOTA_SALTS)
-    local = Window.partitionBy(group_col, "_salt").orderBy("_h", id_col)
+    local = Window.partitionBy(group_col, "_salt").orderBy("_h", "doc_id")
     survivors = ranked.withColumn("_lr", F.row_number().over(local)).where(
         F.col("_lr") <= n
     )
-    final = Window.partitionBy(group_col).orderBy("_h", id_col)
+    final = Window.partitionBy(group_col).orderBy("_h", "doc_id")
     return (
         survivors.withColumn("quota_rank", F.row_number().over(final).cast("long"))
         .where(F.col("quota_rank") <= n)

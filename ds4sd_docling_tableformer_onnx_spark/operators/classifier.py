@@ -34,25 +34,19 @@ from __future__ import annotations
 import json
 
 
-def train_quality_weights(
-    docs,
-    label_col: str = "label",
-    text_col: str = "text",
-    n_buckets: int = 1024,
-    scale: int = 1_000_000,
-) -> list[int]:
-    """Integer log-odds weight per hash bucket, trained from boolean
-    ``label_col``.  Driver traffic is bounded by 2*``n_buckets`` rows
-    regardless of corpus size."""
+def train_quality_weights(docs, n_buckets: int = 1024) -> list[int]:
+    """Integer log-odds weight per hash bucket of ``text``'s words,
+    trained from boolean ``label``.  Driver traffic is bounded by
+    2*``n_buckets`` rows regardless of corpus size."""
     import math
 
     from pyspark.sql import functions as F
 
     from ..functions.sampling import half_away, u32_md5
 
-    words = docs.where(F.col(text_col).isNotNull()).select(
-        F.col(label_col).alias("_lbl"),
-        F.explode(F.split(text_col, " ", -1)).alias("w"),
+    words = docs.where(F.col("text").isNotNull()).select(
+        F.col("label").alias("_lbl"),
+        F.explode(F.split("text", " ", -1)).alias("w"),
     )
     rows = (
         words.groupBy("_lbl", (u32_md5(F.col("w")) % n_buckets).alias("b"))
@@ -70,20 +64,15 @@ def train_quality_weights(
                 math.log((good.get(b, 0) + 1) * (b_tot + n_buckets))
                 - math.log((bad.get(b, 0) + 1) * (g_tot + n_buckets))
             )
-            * scale
+            * 1_000_000
         )
         for b in range(n_buckets)
     ]
 
 
-def quality_scores(
-    docs,
-    weights: list[int],
-    text_col: str = "text",
-    score_col: str = "q_score",
-):
+def quality_scores(docs, weights: list[int]):
     """Add ``(n_words, q_score)`` columns: the integer sum of bucket
-    weights over the document's words — one shuffle-free codegen pass,
+    weights over the words of ``text`` — one shuffle-free codegen pass,
     the DSIR scoring shape."""
     from pyspark.sql import functions as F
 
@@ -94,7 +83,7 @@ def quality_scores(
     # literal: F.lit(list) makes one py4j call per weight (0.4-0.6 s for
     # 1,024 weights on a 4-core local session)
     weight_arr = F.from_json(F.lit(json.dumps(weights)), "array<bigint>")
-    ws = F.split(text_col, " ", -1)
+    ws = F.split("text", " ", -1)
     score = F.aggregate(
         F.transform(
             ws,
@@ -105,6 +94,4 @@ def quality_scores(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-    return docs.withColumn("n_words", F.size(ws).cast("long")).withColumn(
-        score_col, score
-    )
+    return docs.withColumn("n_words", F.size(ws).cast("long")).withColumn("q_score", score)

@@ -63,28 +63,26 @@ def decontaminate(
     docs: DataFrame,
     eval_docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 8,
 ) -> DataFrame:
-    """(id, n_overlap_grams) for every training doc sharing >= 1 word
+    """(doc_id, n_overlap_grams) for every training doc sharing >= 1 word
     n-gram with ``eval_docs``; n_overlap_grams counts the doc's
     DISTINCT contaminated grams."""
     eval_grams = (
         eval_docs.select(
-            F.explode(_word_gram_hashes(F.col(text_col), n)).alias("gram_h")
+            F.explode(_word_gram_hashes(F.col("text"), n)).alias("gram_h")
         )
         .distinct()
     )
     doc_grams = docs.select(
-        id_col,
-        F.explode(F.array_distinct(_word_gram_hashes(F.col(text_col), n))).alias(
+        "doc_id",
+        F.explode(F.array_distinct(_word_gram_hashes(F.col("text"), n))).alias(
             "gram_h"
         ),
     )
     return (
         doc_grams.join(F.broadcast(eval_grams), "gram_h")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count("*").cast("long").alias("n_overlap_grams"))
     )
 
@@ -92,12 +90,10 @@ def decontaminate(
 def duplicated_span_stats(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 8,
     min_df: int = 4,
 ) -> DataFrame:
-    """(id, n_positions, n_dup_positions, dup_frac) per document with
+    """(doc_id, n_positions, n_dup_positions, dup_frac) per document with
     >= 1 gram position; dup_frac rounded to 6 dp on both engine and
     oracle sides.
 
@@ -107,12 +103,12 @@ def duplicated_span_stats(
     construction (split + n-word joins + xxhash64 per position — the
     operator's dominant map cost) for each phase."""
     grams = docs.select(
-        id_col, _word_gram_hashes(F.col(text_col), n).alias("grams")
+        "doc_id", _word_gram_hashes(F.col("text"), n).alias("grams")
     ).localCheckpoint(eager=False)
 
     # phase 1: doc frequency over per-doc DISTINCT gram hashes -> hot set
     hot = (
-        grams.select(id_col, F.explode(F.array_distinct("grams")).alias("gram_h"))
+        grams.select("doc_id", F.explode(F.array_distinct("grams")).alias("gram_h"))
         .groupBy("gram_h")
         .agg(F.count("*").alias("df"))
         .where(F.col("df") >= min_df)
@@ -122,10 +118,10 @@ def duplicated_span_stats(
     # phase 2: the position stream (non-distinct) joins the hot set;
     # left join keeps docs with zero duplicated positions
     positions = grams.where(F.size("grams") >= 1).select(
-        id_col, F.explode("grams").alias("gram_h")
+        "doc_id", F.explode("grams").alias("gram_h")
     )
     flagged = positions.join(hot.withColumn("is_dup", F.lit(1)), "gram_h", "left")
-    return flagged.groupBy(id_col).agg(
+    return flagged.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_positions"),
         F.coalesce(F.sum("is_dup"), F.lit(0)).cast("long").alias("n_dup_positions"),
         F.round(
@@ -137,12 +133,10 @@ def duplicated_span_stats(
 def strip_duplicated_substrings(
     docs: DataFrame,
     n: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Exact substring dedup (Lee et al. 2021 shape): remove every token
     span covered by a word ``n``-gram occurring more than once in the
-    corpus (self-repetition included); ``text_col`` is REPLACED by the
+    corpus (self-repetition included); ``text`` is REPLACED by the
     re-joined remainder.  Adds ``n_tokens_pre`` / ``n_sub_removed``.
 
     Scale shape: gram hashes are built pre-explode in one array
@@ -159,19 +153,19 @@ def strip_duplicated_substrings(
     # 0-based array index + 1
     grams = (
         docs.select(
-            id_col, F.posexplode(_word_gram_hashes(F.col(text_col), n)).alias("i", "g")
+            "doc_id", F.posexplode(_word_gram_hashes(F.col("text"), n)).alias("i", "g")
         )
-        .select(id_col, (F.col("i") + 1).alias("pos"), "g")
+        .select("doc_id", (F.col("i") + 1).alias("pos"), "g")
         .localCheckpoint(eager=False)
     )
     hot = grams.groupBy("g").agg(F.count("*").alias("cnt")).where("cnt >= 2")
     starts = (
         grams.join(hot.select("g"), "g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("pos").alias("_starts"))
     )
-    joined = docs.withColumn("_ws", F.split(text_col, " ", -1)).join(
-        starts, id_col, "left"
+    joined = docs.withColumn("_ws", F.split("text", " ", -1)).join(
+        starts, "doc_id", "left"
     )
     covered = F.array_distinct(
         F.flatten(
@@ -187,6 +181,6 @@ def strip_duplicated_substrings(
     return (
         joined.withColumn("n_tokens_pre", F.size("_ws").cast("long"))
         .withColumn("n_sub_removed", F.size(covered).cast("long"))
-        .withColumn(text_col, F.array_join(kept, " "))
+        .withColumn("text", F.array_join(kept, " "))
         .drop("_ws", "_starts")
     )

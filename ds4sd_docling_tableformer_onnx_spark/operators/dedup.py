@@ -25,8 +25,12 @@ BAND_BITS = 16
 N_BANDS = 4
 BAND_MASK = (1 << BAND_BITS) - 1
 
+# bloom prefilter sizing: ~0.8% false positives at 7 hashes, 10 bits/key
+BLOOM_N_HASHES = 7
+BLOOM_BITS_PER_KEY = 10
 
-def simhash_column(df, text_col: str = "text", bits: int = 64):
+
+def simhash_column(df):
     """Add a ``simhash`` long column: weighted-bit signature over word
     hashes (md5-derived), Arrow-batched.
 
@@ -108,22 +112,22 @@ def simhash_column(df, text_col: str = "text", bits: int = 64):
                     hashes.append(int.from_bytes(digest[:8], "big"))
                 word_id[j] = wid
             hvals = np.array(hashes, dtype=np.uint64)
-            # (n_unique, bits) in {-1, +1}
+            # (n_unique, 64) in {-1, +1}
             bit_mat = (
-                ((hvals[:, None] >> np.arange(bits, dtype=np.uint64)) & 1)
+                ((hvals[:, None] >> np.arange(64, dtype=np.uint64)) & 1)
                 .astype(np.int64)
                 * 2
                 - 1
             )
-            acc = np.zeros((len(texts), bits), dtype=np.int64)
+            acc = np.zeros((len(texts), 64), dtype=np.int64)
             np.add.at(acc, np.asarray(row_idx, dtype=np.int64), bit_mat[word_id])
             # empty rows have an all-zero acc row -> sig 0, same as before
-            out = ((acc > 0).astype(np.uint64) << np.arange(bits, dtype=np.uint64)).sum(
+            out = ((acc > 0).astype(np.uint64) << np.arange(64, dtype=np.uint64)).sum(
                 axis=1, dtype=np.uint64
             )
         return pd.Series(out.view(np.int64))  # fold into signed 64-bit
 
-    return df.withColumn("simhash", _simhash(F.col(text_col)))
+    return df.withColumn("simhash", _simhash(F.col("text")))
 
 
 def simhash_bands(sig):
@@ -203,8 +207,8 @@ def simhash_candidates(df, id_col: str = "doc_id"):
     )
 
 
-def bloom_key_positions(key_col, m: int, n_hashes: int = 7):
-    """Array column of ``n_hashes`` bloom bit positions for a key:
+def bloom_key_positions(key_col, m: int):
+    """Array column of ``BLOOM_N_HASHES`` bloom bit positions for a key:
     position_j = u32(md5(j || '#' || key)) mod m.
 
     Hash-derived (md5, not an RNG or an engine-private hash) for the
@@ -219,7 +223,7 @@ def bloom_key_positions(key_col, m: int, n_hashes: int = 7):
     from pyspark.sql import functions as F
 
     return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
+        F.sequence(F.lit(0), F.lit(BLOOM_N_HASHES - 1)),
         lambda j: F.pmod(
             F.conv(
                 F.substring(F.md5(F.concat(j.cast("string"), F.lit("#"), key_col)), 1, 8),
@@ -235,8 +239,6 @@ def bloom_prefilter(
     build_df,
     probe_df,
     key_col: str = "text",
-    bits_per_key: int = 10,
-    n_hashes: int = 7,
 ):
     """Cross-shard exact-dedup prefilter: a bloom filter built over one
     corpus slice's keys, probed by another — the cheap pre-join that
@@ -245,14 +247,14 @@ def bloom_prefilter(
 
     Returns ``probe_df`` plus a ``maybe_dup`` boolean.  Bloom
     guarantees: no false negatives (every true duplicate is flagged);
-    false-positive rate ~ (1 - e^(-k/b))^k — ~0.8% at the default
-    k=7 hashes, b=10 bits/key.  Only ``maybe_dup`` rows proceed to the
+    false-positive rate ~ (1 - e^(-k/b))^k — ~0.8% at k=7 hashes,
+    b=10 bits/key.  Only ``maybe_dup`` rows proceed to the
     exact anti-join; the rest short-circuit.
 
     Implementation is the *relational* form of the bitmap: the filter
     is the DISTINCT set of build-side bit positions (``m`` rows max,
-    here m = bits_per_key * n_build), and a probe key "might be
-    contained" iff ALL its ``n_hashes`` positions hit that set — a
+    here m = BLOOM_BITS_PER_KEY * n_build), and a probe key "might be
+    contained" iff ALL its ``BLOOM_N_HASHES`` positions hit that set — a
     semi-join + count instead of testing a byte-array literal.
     Identical membership semantics (the set IS the bitmap's set bits),
     same FPR math, and exactly one shuffle on 8-byte position keys.
@@ -264,11 +266,11 @@ def bloom_prefilter(
     from pyspark.sql import functions as F
 
     n_build = build_df.count()
-    m = max(64, n_build * bits_per_key)
+    m = max(64, n_build * BLOOM_BITS_PER_KEY)
 
     build_positions = (
         build_df.select(
-            F.explode(bloom_key_positions(F.col(key_col), m, n_hashes)).alias("pos")
+            F.explode(bloom_key_positions(F.col(key_col), m)).alias("pos")
         )
         .distinct()
     )
@@ -284,13 +286,13 @@ def bloom_prefilter(
         .distinct()
         .select(
             key_col,
-            F.explode(bloom_key_positions(F.col(key_col), m, n_hashes)).alias("pos"),
+            F.explode(bloom_key_positions(F.col(key_col), m)).alias("pos"),
         )
     )
     key_hits = (
         key_positions.join(build_positions, "pos", "left_semi")
         .groupBy(key_col)
-        .agg((F.count("*") == n_hashes).alias("maybe_dup"))
+        .agg((F.count("*") == BLOOM_N_HASHES).alias("maybe_dup"))
     )
     return probe_df.join(key_hits, key_col, "left").withColumn(
         "maybe_dup", F.coalesce(F.col("maybe_dup"), F.lit(False))
@@ -302,8 +304,6 @@ def winnow_fingerprints(
     *,
     k: int = 4,
     w: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ):
     """Winnowing document fingerprints (Schleimer, Wilkerson, Aiken
     2003 — the MOSS algorithm): hash every word ``k``-gram, slide a
@@ -327,11 +327,11 @@ def winnow_fingerprints(
     """
     from pyspark.sql import functions as F
 
-    ws = F.split(F.col(text_col), " ", -1)
+    ws = F.split(F.col("text"), " ", -1)
     # docs shorter than one full window cannot emit a fingerprint
     base = df.where(
-        F.col(text_col).isNotNull() & (F.size(ws) >= k + w - 1)
-    ).select(id_col, ws.alias("ws"))
+        F.col("text").isNotNull() & (F.size(ws) >= k + w - 1)
+    ).select("doc_id", ws.alias("ws"))
 
     gram_hash = lambda i: F.conv(  # noqa: E731 — readability inside transform
         F.substring(F.md5(F.concat_ws(" ", F.slice(F.col("ws"), i, k))), 1, 15),
@@ -339,7 +339,7 @@ def winnow_fingerprints(
         10,
     ).cast("long")
     hashed = base.select(
-        id_col,
+        "doc_id",
         F.transform(
             F.sequence(F.lit(1), F.size("ws") - (k - 1)), gram_hash
         ).alias("h"),
@@ -356,6 +356,6 @@ def winnow_fingerprints(
         ),
     )
     return (
-        hashed.select(id_col, F.explode(F.array_distinct(sel)).alias("s"))
-        .select(id_col, F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
+        hashed.select("doc_id", F.explode(F.array_distinct(sel)).alias("s"))
+        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
     )

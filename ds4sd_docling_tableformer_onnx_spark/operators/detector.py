@@ -36,7 +36,7 @@ DETECTION_SCHEMA = (
 )
 
 
-def detr_postprocess(logits, pred_boxes, width, height, score_min: float = SCORE_MIN):
+def detr_postprocess(logits, pred_boxes, width, height):
     """(queries, n_classes+1) logits + (queries, 4) normalized cxcywh
     boxes -> thresholded, score-descending detections in page pixels.
 
@@ -57,7 +57,7 @@ def detr_postprocess(logits, pred_boxes, width, height, score_min: float = SCORE
     scores = class_probs.max(axis=-1)
     labels = class_probs.argmax(axis=-1)
 
-    keep = scores > score_min
+    keep = scores > SCORE_MIN
     scores, labels, boxes = scores[keep], labels[keep], pred_boxes[keep]
     order = np.argsort(-scores, kind="stable")
     scores, labels, boxes = scores[order], labels[order], boxes[order]
@@ -75,7 +75,7 @@ def detr_postprocess(logits, pred_boxes, width, height, score_min: float = SCORE
     return labels.astype(int), scores, xyxy
 
 
-def load_onnx_layout_detector(model_path: str | None = None, score_min: float = SCORE_MIN):
+def load_onnx_layout_detector(model_path: str | None = None):
     """Config-gated onnxruntime binding (single graph:
     ``pixel_values f32[1,3,H,W] -> logits, pred_boxes``; the
     convert_to_onnx.py export shape).  Gate order matches
@@ -108,7 +108,7 @@ def load_onnx_layout_detector(model_path: str | None = None, score_min: float = 
         # (labels, scores, boxes) tuples, ONE session.run per stack
         logits, pred_boxes = session.run(None, {"pixel_values": pixels})
         return [
-            detr_postprocess(logits[i], pred_boxes[i], width, height, score_min)
+            detr_postprocess(logits[i], pred_boxes[i], width, height)
             for i in range(len(pixels))
         ]
 

@@ -19,8 +19,7 @@ Scale design (the part that must survive 10^12 turns / 1000 executors):
   with no repeated payload passes through untouched.
 - **Stable turn ordering** is an output-side concern: per-conversation
   views order by ``turn_idx`` under a window partitioned by conv_id —
-  one shuffle, AQE skew-splitting enabled for mega-conversations, plus
-  explicit salting in ``conversation_summaries`` (two-phase agg).
+  one shuffle, AQE skew-splitting enabled for mega-conversations.
 - **Lineage**: every output row carries payload_sha256 +
   spark_partition_id for the checkpoint/metrics tables (plans/checkpoint).
 
@@ -34,11 +33,13 @@ import hashlib
 import json
 import math
 from collections import deque
+from collections.abc import Sized
 from itertools import chain
 from typing import Iterator
 
 import pyarrow as pa
 
+from ..config import MAX_STEPS
 from ..functions.keys import payload_key_py
 from ..functions.rows import row_batches, spark_schema
 
@@ -66,6 +67,10 @@ OUTPUT_COLUMNS = (
     ("payload_sha256", pa.string(), None),
 )
 _KEEP = ("conv_id", "turn_idx", "payload_sha256")
+
+# the longest tag stream the reference decoder emits: MAX_STEPS tags
+# plus the <start>/<end> sentinels (reference tm_config predict.max_steps)
+MAX_TAGS = MAX_STEPS + 2
 
 
 def _keyed(batches):
@@ -100,6 +105,18 @@ def _check_finite_bboxes(payload):
         raise ValueError("non-finite bbox coordinate in payload")
 
 
+def _check_tag_stream(payload):
+    """Raise when ``tag_seq``, ``otsl`` or ``raw_tags`` holds more than
+    ``MAX_TAGS`` tags: no reference decode emits such a stream, and the
+    per-turn algebra is superlinear in its length, so one such turn
+    would stall its task.  ``pdf_cells`` stays unbounded, as in the
+    reference, which bounds no page's tokens."""
+    for key in ("tag_seq", "otsl", "raw_tags"):
+        tags = payload.get(key)
+        if isinstance(tags, Sized) and len(tags) > MAX_TAGS:
+            raise ValueError(f"{key} holds {len(tags)} tags; the decoder emits at most {MAX_TAGS}")
+
+
 def _extract_batches(batches: Iterator, correct_overlapping_cells: bool):
     """Arrow-batch worker: consumes pyarrow RecordBatches, yields
     RecordBatches of ``OUTPUT_COLUMNS`` through the row worker
@@ -110,7 +127,8 @@ def _extract_batches(batches: Iterator, correct_overlapping_cells: bool):
     Payloads and ``tf_responses_json`` are strict JSON: a ``NaN`` or
     ``Infinity`` in the payload, or a non-finite number reaching the
     responses, makes the turn an error row, and so does a bbox
-    coordinate that parses to a non-finite number."""
+    coordinate that parses to a non-finite number or a tag stream longer
+    than the decoder can emit (``_check_tag_stream``)."""
     from ..core.pipeline import extract_turn
 
     def turn(text, tool):
@@ -118,6 +136,7 @@ def _extract_batches(batches: Iterator, correct_overlapping_cells: bool):
         context = json.loads(tool, parse_constant=_non_finite)
         payload.update(context)
         _check_finite_bboxes(payload)
+        _check_tag_stream(payload)
         result = extract_turn(payload, correct_overlapping_cells=correct_overlapping_cells)
         return (
             context.get("payload_id", -1),
@@ -158,7 +177,7 @@ def _first_rows(batch):
     return pa.array(rows), pa.array(take)
 
 
-def _distinct_payloads(batches: Iterator, correct_overlapping_cells: bool):
+def _distinct_payloads(batches: Iterator):
     """``_extract_batches`` run once per distinct payload in each batch:
     the worker sees only each pair's first row, and its output row is
     taken back to every input row under that row's own conv_id and
@@ -172,7 +191,7 @@ def _distinct_payloads(batches: Iterator, correct_overlapping_cells: bool):
             plans.append((batch, plan))
             yield batch if plan is None else batch.take(plan[0])
 
-    worker = _extract_batches(firsts(), correct_overlapping_cells)
+    worker = _extract_batches(firsts(), False)
     try:
         for out in worker:
             batch, plan = plans.popleft()
@@ -189,7 +208,7 @@ def _distinct_payloads(batches: Iterator, correct_overlapping_cells: bool):
         worker.close()
 
 
-def extract_transcripts(df, correct_overlapping_cells: bool = False):
+def extract_transcripts(df):
     """transcripts (conv_id, turn_idx, role, text, tool, ts[, payload_id])
     -> per-turn extraction output.  Narrow transformation: column-pruned
     scan feeding one mapInArrow stage, one output row per input turn.
@@ -202,7 +221,7 @@ def extract_transcripts(df, correct_overlapping_cells: bool = False):
     imbalance it would fix.
     """
     return df.select("conv_id", "turn_idx", "text", "tool").mapInArrow(
-        lambda it: _distinct_payloads(it, correct_overlapping_cells),
+        _distinct_payloads,
         schema=spark_schema(OUTPUT_COLUMNS),
     )
 
@@ -215,35 +234,6 @@ def ordered_conversation_view(extracted):
 
     win = Window.partitionBy("conv_id").orderBy("turn_idx")
     return extracted.withColumn("turn_rank", F.row_number().over(win))
-
-
-def conversation_summaries(extracted, salt_buckets: int = 16):
-    """Conversation-level rollup with explicit skew salting: a two-phase
-    aggregation (partial per (conv_id, salt), then final per conv_id) so a
-    mega-conversation cannot pin one reducer.  AQE would also split the
-    skewed partition; the salt makes the plan robust even with AQE off.
-    """
-    from pyspark.sql import functions as F
-
-    salted = extracted.withColumn(
-        "salt", F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets))
-    )
-    partial = salted.groupBy("conv_id", "salt").agg(
-        F.count("*").alias("turns"),
-        F.sum(F.col("n_cells").cast("long")).alias("cells"),
-        F.sum(F.col("n_matches").cast("long")).alias("matches"),
-        F.sum(F.when(F.col("ok"), 1).otherwise(0)).alias("ok_turns"),
-        F.max("num_cols").alias("max_cols"),
-        F.max("num_rows").alias("max_rows"),
-    )
-    return partial.groupBy("conv_id").agg(
-        F.sum("turns").alias("turns"),
-        F.sum("cells").alias("cells"),
-        F.sum("matches").alias("matches"),
-        F.sum("ok_turns").alias("ok_turns"),
-        F.max("max_cols").alias("max_cols"),
-        F.max("max_rows").alias("max_rows"),
-    )
 
 
 def verify_against_pool(extracted, pool_df):

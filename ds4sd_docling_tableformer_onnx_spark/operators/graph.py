@@ -221,30 +221,30 @@ def connected_components(
     )
 
 
-def dedup_groups(ids_df, edges_df, id_col: str = "doc_id", src: str = "id_a", dst: str = "id_b"):
+def dedup_groups(ids_df, edges_df):
     """Every id in ``ids_df`` labeled with its near-dup group: the
     component minimum for ids touched by an edge, the id itself for
     isolated ids — plus the group population.  Output
-    (id_col, group_id, group_size).
+    (doc_id, group_id, group_size).
 
     One broadcast-or-shuffle left join of the (small) component table
     back to the id universe, then one aggregation for sizes.
     """
     from pyspark.sql import functions as F
 
-    comps = connected_components(edges_df, src=src, dst=dst)
+    comps = connected_components(edges_df, src="id_a", dst="id_b")
     labeled = (
-        ids_df.select(id_col)
-        .join(comps.withColumnRenamed("id", id_col), id_col, "left")
+        ids_df.select("doc_id")
+        .join(comps.withColumnRenamed("id", "doc_id"), "doc_id", "left")
         .select(
-            id_col,
-            F.coalesce("comp", F.col(id_col)).alias("group_id"),
+            "doc_id",
+            F.coalesce("comp", F.col("doc_id")).alias("group_id"),
         )
     )
     sizes = labeled.groupBy("group_id").agg(
         F.count("*").cast("long").alias("group_size")
     )
-    return labeled.join(sizes, "group_id").select(id_col, "group_id", "group_size")
+    return labeled.join(sizes, "group_id").select("doc_id", "group_id", "group_size")
 
 
 def pagerank(edges_df, src: str = "src", dst: str = "dst",

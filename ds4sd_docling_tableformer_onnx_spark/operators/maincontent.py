@@ -67,21 +67,15 @@ def _spans_row(tokens_json):
     return spans(json.loads(tokens_json) if tokens_json else [])
 
 
-def strip_boilerplate_column(df, id_col: str = "doc_id", html_col: str = "html"):
-    """(id, html) -> (id, main_text, block counts, content hash)."""
-    from pyspark.sql import functions as F
-
-    pruned = df.select(F.col(id_col).alias("doc_id"), F.col(html_col).alias("html"))
+def strip_boilerplate_column(df):
+    """(doc_id, html) -> (doc_id, main_text, block counts, content hash)."""
+    pruned = df.select("doc_id", "html")
     return map_rows(pruned, ("doc_id",), ("html",), STRIP_COLUMNS, _strip_row)
 
 
-def reading_order_spans(df, id_col: str = "doc_id", tokens_col: str = "tokens_json"):
-    """(id, tokens_json) -> (id, reading-order text, token/line counts)."""
-    from pyspark.sql import functions as F
-
-    pruned = df.select(
-        F.col(id_col).alias("doc_id"), F.col(tokens_col).alias("tokens_json")
-    )
+def reading_order_spans(df):
+    """(doc_id, tokens_json) -> (doc_id, reading-order text, token/line counts)."""
+    pruned = df.select("doc_id", "tokens_json")
     return map_rows(pruned, ("doc_id",), ("tokens_json",), SPANS_COLUMNS, _spans_row)
 
 
@@ -127,7 +121,7 @@ def synthesize_page(doc_id: int, text: str) -> str:
     )
 
 
-def synthesize_pages(docs_df, id_col: str = "doc_id", text_col: str = "text"):
+def synthesize_pages(docs_df):
     """documents -> (doc_id, html) via a vectorized pandas UDF."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
@@ -141,18 +135,16 @@ def synthesize_pages(docs_df, id_col: str = "doc_id", text_col: str = "text"):
         )
 
     return docs_df.select(
-        F.col(id_col).alias("doc_id"),
-        _page(F.col(id_col), F.col(text_col)).alias("html"),
+        "doc_id",
+        _page(F.col("doc_id"), F.col("text")).alias("html"),
     )
 
 
-def strip_transcript_turns(df, text_col: str = "text"):
+def strip_transcript_turns(df):
     """Transcript-shaped wrapper: per-turn boilerplate strip over
     (conv_id, turn_idx, text-as-HTML) keeping turn lineage — the same
     narrow mapInArrow shape as extract_transcripts, so an HTML-payload
     corpus runs the main-content path with identical partitioning,
     checkpointing and skew behavior."""
-    from pyspark.sql import functions as F
-
-    pruned = df.select("conv_id", "turn_idx", F.col(text_col).alias("text"))
+    pruned = df.select("conv_id", "turn_idx", "text")
     return map_rows(pruned, ("conv_id", "turn_idx"), ("text",), TURN_STRIP_COLUMNS, _strip_row)

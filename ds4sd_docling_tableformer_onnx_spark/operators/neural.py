@@ -156,13 +156,13 @@ def decode_tables(df, predict_fn=None):
     )
 
 
-def read_image_directory(spark, path: str, glob: str = "*.png"):
-    """S1: directory scan of images as binary payloads
-    (run_tableformer_docling.py:42-48 re-expressed on the binaryFile
-    source; decode happens inside the row worker)."""
+def read_image_directory(spark, path: str):
+    """S1: directory scan of the ``*.png`` images under ``path`` as
+    binary payloads (run_tableformer_docling.py:42-48 re-expressed on
+    the binaryFile source; decode happens inside the row worker)."""
     return (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
+        .option("pathGlobFilter", "*.png")
         .load(path)
         .select("path", "content", "length")
     )

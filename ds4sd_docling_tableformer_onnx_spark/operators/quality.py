@@ -19,6 +19,8 @@ from __future__ import annotations
 IOU50_MIN = 0.995
 MEAN_IOU_MIN = 0.99
 DELTA_BOX_MAX_PCT = 1.0
+# a baseline box claims no variant box below this IoU (validate_quality.py:70-88)
+MATCH_IOU_MIN = 0.1
 
 
 def box_iou(a, b):
@@ -33,9 +35,9 @@ def box_iou(a, b):
     return inter / union if union > 0 else 0.0
 
 
-def greedy_label_match(base, variant, min_iou: float = 0.1):
+def greedy_label_match(base, variant):
     """Per label: each baseline box greedily claims the unclaimed variant
-    box with the highest IoU (>= ``min_iou``); returns the matched IoUs
+    box with the highest IoU (>= ``MATCH_IOU_MIN``); returns the matched IoUs
     (validate_quality.py:70-88).
 
     parity: labels iterate in the union-set order is irrelevant to the
@@ -56,7 +58,7 @@ def greedy_label_match(base, variant, min_iou: float = 0.1):
                 iou = box_iou(b["bbox"], v["bbox"])
                 if iou > best_iou:
                     best_iou, best_j = iou, j
-            if best_iou >= min_iou and best_j >= 0:
+            if best_iou >= MATCH_IOU_MIN and best_j >= 0:
                 used[best_j] = True
                 ious.append(best_iou)
     return ious
@@ -69,8 +71,10 @@ def image_quality(base, variant):
     return ious, delta_pct
 
 
-def acceptance(mean_iou, iou50, delta_box_pct, speedup_ok=True, size_ok=False):
-    """The reference's quality gate (validate_quality.py:199-208)."""
+def acceptance(mean_iou, iou50, delta_box_pct, speedup_ok, size_ok):
+    """The reference's quality gate (validate_quality.py:199-208): the
+    KPI thresholds plus its speedup-or-size clause, which the KPIs
+    themselves cannot show."""
     return (
         iou50 >= IOU50_MIN
         and mean_iou >= MEAN_IOU_MIN

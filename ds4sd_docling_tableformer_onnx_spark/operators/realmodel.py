@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import os
 
-from ..config import WORD_MAP_TAG
+from ..config import MAX_STEPS, WORD_MAP_TAG
 from ..core.decoder import decode_tag_stream, merge_span_bboxes, cxcywh_to_xyxy
 
 # Three-graph ONNX export contract (file names inside SPARK_GRAFT_ONNX_DIR).
@@ -50,7 +50,7 @@ _FCEL = WORD_MAP_TAG["fcel"]
 _UCEL = WORD_MAP_TAG["ucel"]
 
 
-def greedy_decode(encoder_fn, step_fn, bbox_fn, tensor, max_steps: int = 1024):
+def greedy_decode(encoder_fn, step_fn, bbox_fn, tensor, max_steps: int = MAX_STEPS):
     """Live autoregressive decode with in-loop grammar corrections.
 
     Unlike the surrogate (which corrects a *given* stream post-hoc), a
@@ -102,7 +102,7 @@ def greedy_decode(encoder_fn, step_fn, bbox_fn, tensor, max_steps: int = 1024):
     }
 
 
-def load_onnx_decoder(model_dir: str | None = None, max_steps: int = 1024):
+def load_onnx_decoder(model_dir: str | None = None):
     """Bind the greedy loop to onnxruntime sessions (the config gate).
 
     ``model_dir`` defaults to ``$SPARK_GRAFT_ONNX_DIR``.  Missing
@@ -156,6 +156,6 @@ def load_onnx_decoder(model_dir: str | None = None, max_steps: int = 1024):
         return boxes, class_logits
 
     def predict(tensor):
-        return greedy_decode(encoder_fn, step_fn, bbox_fn, tensor, max_steps)
+        return greedy_decode(encoder_fn, step_fn, bbox_fn, tensor)
 
     return predict

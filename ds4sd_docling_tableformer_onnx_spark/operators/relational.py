@@ -13,6 +13,9 @@ from __future__ import annotations
 
 TURN_KEYS = ("conv_id", "turn_idx")
 
+# conversation_documents hashes at most this many turns per conversation
+MAX_TURNS_PER_DOC = 10_000
+
 
 def explode_response_cells(extracted):
     """Extraction output -> one row per response cell, typed columns.
@@ -71,14 +74,14 @@ def grid_dimensions(cells_df):
     )
 
 
-def conversation_documents(extracted, max_turns_per_doc: int = 10_000):
+def conversation_documents(extracted):
     """Assemble per-conversation 'documents': the ordered concatenation
     of each turn's HTML-structure hash chain (W2 at conversation level).
 
     One shuffle on conv_id; `sort_array(collect_list(struct(...)))` keeps
     the aggregation combiner-friendly (no window needed).  The per-doc
     hash commits to content *and* order, so it is the conversation-level
-    equality fingerprint.  ``max_turns_per_doc`` caps pathological
+    equality fingerprint.  ``MAX_TURNS_PER_DOC`` caps pathological
     conversations (cost guard in the spirit of the reference's >300-cell
     skips).
     """
@@ -98,7 +101,7 @@ def conversation_documents(extracted, max_turns_per_doc: int = 10_000):
                 F.concat_ws(
                     "|",
                     F.transform(
-                        F.slice("turns", 1, max_turns_per_doc),
+                        F.slice("turns", 1, MAX_TURNS_PER_DOC),
                         lambda s: s["html_sha256"],
                     ),
                 ),

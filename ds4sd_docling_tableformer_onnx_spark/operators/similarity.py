@@ -16,6 +16,14 @@ plan stays one shuffle (group by bucket).
 
 from __future__ import annotations
 
+# auto_n_planes clamps its plane count to [LSH_MIN_PLANES, LSH_MAX_PLANES]
+LSH_MIN_PLANES = 8
+LSH_MAX_PLANES = 24
+# rows of the ordered sample the IVF quantizer trains on
+IVF_TRAIN_LIMIT = 4096
+# rows per block of scored_smaller_id_mask's blocked matmul
+SCORE_BLOCK_ROWS = 256
+
 
 def _dot(a, b):
     from pyspark.sql import functions as F
@@ -23,7 +31,7 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, v: s + v)
 
 
-def cosine_topk(emb_df, query_vec, k: int = 10, id_col: str = "vec_id", vec_col: str = "embedding"):
+def cosine_topk(emb_df, query_vec, k: int = 10):
     """Exact top-k by cosine similarity against a literal query vector.
     The vector ships as one JSON string literal that Spark folds into an
     array literal: one py4j call, not one per component."""
@@ -32,11 +40,11 @@ def cosine_topk(emb_df, query_vec, k: int = 10, id_col: str = "vec_id", vec_col:
     from pyspark.sql import functions as F
 
     q = F.from_json(F.lit(json.dumps([float(v) for v in query_vec])), "array<double>")
-    e = F.col(vec_col).cast("array<double>")
+    e = F.col("embedding").cast("array<double>")
     sim = _dot(e, q) / (F.sqrt(_dot(e, e)) * F.sqrt(_dot(q, q)))
     return (
-        emb_df.select(id_col, F.round(sim, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
+        emb_df.select("vec_id", F.round(sim, 6).alias("cosine"))
+        .orderBy(F.desc("cosine"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -63,7 +71,7 @@ def hash_planes(dim: int, n_planes: int = 8, seed: int = 42):
     return w
 
 
-def hyperplane_buckets(emb_df, n_planes: int = 8, seed: int = 42, vec_col: str = "embedding"):
+def hyperplane_buckets(emb_df, n_planes: int = 8, seed: int = 42):
     """Add an LSH ``bucket`` column: sign pattern of dot products with
     ``n_planes`` hash-derived hyperplanes (vectorized numpy per Arrow
     batch; the tiny plane matrix ships in the UDF closure — the
@@ -86,7 +94,7 @@ def hyperplane_buckets(emb_df, n_planes: int = 8, seed: int = 42, vec_col: str =
         keys = (signs * (1 << np.arange(n_planes))).sum(axis=1)
         return pd.Series(keys.astype("int32"))
 
-    return emb_df.withColumn("bucket", _bucket(F.col(vec_col)))
+    return emb_df.withColumn("bucket", _bucket(F.col("embedding")))
 
 
 def lsh_bucketed_topk(
@@ -95,8 +103,6 @@ def lsh_bucketed_topk(
     k: int = 10,
     n_planes: int = 8,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     multiprobe: int = 1,
 ):
     """Approximate top-k: search only buckets within ``multiprobe`` bit
@@ -119,36 +125,36 @@ def lsh_bucketed_topk(
                 key ^= 1 << bit
             probe_keys.add(key)
 
-    bucketed = hyperplane_buckets(emb_df, n_planes=n_planes, seed=seed, vec_col=vec_col)
+    bucketed = hyperplane_buckets(emb_df, n_planes=n_planes, seed=seed)
     candidates = bucketed.where(F.col("bucket").isin(sorted(probe_keys)))
-    return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
+    return cosine_topk(candidates, query_vec, k=k)
 
 
-def _safe_norm(mat, axis=1):
+def _safe_norm(mat):
     """Row norms with zero-vector guard (zero rows normalize to zero,
     not NaN)."""
     import numpy as np
 
-    norm = np.linalg.norm(mat, axis=axis, keepdims=True)
+    norm = np.linalg.norm(mat, axis=1, keepdims=True)
     return np.where(norm > 0, norm, 1.0)
 
 
-def auto_n_planes(
-    n_rows: int, target_bucket_rows: int = 1024, lo: int = 8, hi: int = 24
-) -> int:
+def auto_n_planes(n_rows: int, target_bucket_rows: int = 1024) -> int:
     """Plane count scaled to corpus size: enough sign bits that a
     UNIFORM corpus lands ~``target_bucket_rows`` per bucket
-    (``2^p >= n / target``), clamped to [lo, hi].  At 10^9 rows with the
-    default target this yields 20 planes (~1M buckets, ~1k rows each —
-    ~500k scored pairs per bucket) instead of round 2's fixed 8 planes
+    (``2^p >= n / target``), clamped to [LSH_MIN_PLANES,
+    LSH_MAX_PLANES].  At 10^9 rows with the default target this yields
+    20 planes (~1M buckets, ~1k rows each — ~500k scored pairs per
+    bucket) instead of round 2's fixed 8 planes
     (256 buckets -> ~4M rows and ~10^13 pairs per bucket).  Uniformity
     is an assumption, not a guarantee — the ``max_bucket_rows`` cap in
     :func:`lsh_neardup_pairs` is the hard guard for skewed corpora."""
     import math
 
     if n_rows <= target_bucket_rows:
-        return lo
-    return max(lo, min(hi, math.ceil(math.log2(n_rows / target_bucket_rows))))
+        return LSH_MIN_PLANES
+    planes = math.ceil(math.log2(n_rows / target_bucket_rows))
+    return max(LSH_MIN_PLANES, min(LSH_MAX_PLANES, planes))
 
 
 def lsh_neardup_pairs(
@@ -156,10 +162,7 @@ def lsh_neardup_pairs(
     threshold: float = 0.25,
     n_planes: int | None = 8,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_bucket_rows: int | None = 10_000,
-    target_bucket_rows: int = 1024,
 ):
     """Embedding near-dup candidate pairs WITHOUT blocking labels: rows
     sharing a sign-LSH bucket are scored exactly, pairs above the
@@ -191,10 +194,10 @@ def lsh_neardup_pairs(
     from pyspark.sql import functions as F
 
     if n_planes is None:
-        n_planes = auto_n_planes(emb_df.count(), target_bucket_rows)
+        n_planes = auto_n_planes(emb_df.count())
 
     bucketed = hyperplane_buckets(
-        emb_df.select(id_col, vec_col), n_planes=n_planes, seed=seed, vec_col=vec_col
+        emb_df.select("vec_id", "embedding"), n_planes=n_planes, seed=seed
     ).localCheckpoint(eager=False)
 
     if max_bucket_rows is not None:
@@ -223,107 +226,31 @@ def lsh_neardup_pairs(
             )
 
     a, b = bucketed.alias("a"), bucketed.alias("b")
-    e_a = F.col(f"a.{vec_col}").cast("array<double>")
-    e_b = F.col(f"b.{vec_col}").cast("array<double>")
+    e_a = F.col("a.embedding").cast("array<double>")
+    e_b = F.col("b.embedding").cast("array<double>")
     cos = _dot(e_a, e_b) / (F.sqrt(_dot(e_a, e_a)) * F.sqrt(_dot(e_b, e_b)))
     return (
         a.join(
             b,
             (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
             F.round(cos, 6).alias("cosine"),
         )
         .where(F.col("cosine") > threshold)
     )
 
 
-def batch_topk(
-    emb_df,
-    queries,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    slack: int = 8,
-):
-    """Top-k by cosine for a BATCH of query vectors in one corpus pass —
-    the training-data retrieval shape (q probe queries against 10^9
-    docs) where per-query scans would read the corpus q times.
-
-    Scale plan:
-    - the (small) query matrix ships in the UDF closure (broadcast-
-      weights pattern), one vectorized (batch x dim) @ (dim x q) matmul
-      per Arrow batch — no crossJoin row explosion, no shuffle of
-      n x q scored rows;
-    - each batch emits only its top (k + slack) candidates per query
-      (partial top-k == map-side combine), so the final global window
-      shuffles ~(k + slack) * n_batches * q tiny rows instead of n * q;
-    - the global window orders by JVM-rounded cosine then id —
-      identical semantics to ``cosine_topk``; the ``slack`` margin
-      makes the partial pruning immune to rounding-boundary ties
-      (membership would only diverge with > slack exact 6-dp ties at a
-      batch's k-th boundary).
-
-    ``queries``: list of (query_id, vector).  Equality with the exact
-    crossJoin+window form is pinned by tests and the ``ann_batch_topk``
-    oracle checks that exact form end-to-end.
-    """
-    import numpy as np
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf  # noqa: F401 (doc parity)
-
-    qids = [int(qid) for qid, _ in queries]
-    qmat = np.asarray([v for _, v in queries], dtype=np.float64).T  # (dim, q)
-    qnorm = np.linalg.norm(qmat, axis=0)
-    qnorm = np.where(qnorm > 0, qnorm, 1.0)
-    keep = k + slack
-
-    def _partial(iterator):
-        import pandas as pd
-
-        for pdf in iterator:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            norms = np.where(norms > 0, norms, 1.0)
-            sims = (mat @ qmat) / norms[:, None] / qnorm[None, :]  # (B, q)
-            ids = pdf[id_col].to_numpy()
-            out_q, out_id, out_sim = [], [], []
-            # half-away-from-zero 6-dp rounding (JVM round semantics)
-            r = np.sign(sims) * np.floor(np.abs(sims) * 1e6 + 0.5) / 1e6
-            for j, qid in enumerate(qids):
-                order = np.lexsort((ids, -r[:, j]))[:keep]
-                out_q.extend([qid] * len(order))
-                out_id.extend(ids[order].tolist())
-                out_sim.extend(sims[order, j].tolist())
-            yield pd.DataFrame(
-                {"query_id": out_q, id_col: out_id, "cosine_raw": out_sim}
-            )
-
-    partial = emb_df.select(id_col, vec_col).mapInPandas(
-        _partial, schema=f"query_id long, {id_col} long, cosine_raw double"
-    )
-    win = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc(id_col)
-    )
-    return (
-        partial.withColumn("cosine", F.round("cosine_raw", 6))
-        .withColumn("rn", F.row_number().over(win))
-        .where(F.col("rn") <= k)
-        .select("query_id", id_col, "cosine")
-    )
-
-
-def train_ivf_centroids(emb_df, n_lists: int = 16, seed: int = 42, train_limit: int = 4096, vec_col: str = "embedding", id_col: str = "vec_id"):
+def train_ivf_centroids(emb_df, n_lists: int = 16, seed: int = 42):
     """Driver-side coarse quantizer: k-means (Lloyd, 10 iters) over a
     bounded sample — the standard IVF recipe where the quantizer trains
     on a sample and the full corpus is only ever *assigned* (one
     vectorized pass).  Returns ``np.ndarray (n_lists, dim)``.
 
-    The sample is ordered by ``id_col`` before the limit so the
+    The sample is ordered by ``vec_id`` before the limit so the
     centroids (hence every downstream probe) are deterministic across
     partitionings and reruns; at scale swap the orderBy for a seeded
     ``TABLESAMPLE``/hash filter — determinism comes from the predicate,
@@ -333,9 +260,9 @@ def train_ivf_centroids(emb_df, n_lists: int = 16, seed: int = 42, train_limit: 
     sample = np.asarray(
         [
             r[0]
-            for r in emb_df.select(vec_col, id_col)
-            .orderBy(id_col)
-            .limit(train_limit)
+            for r in emb_df.select("embedding", "vec_id")
+            .orderBy("vec_id")
+            .limit(IVF_TRAIN_LIMIT)
             .collect()
         ],
         dtype=np.float64,
@@ -354,7 +281,7 @@ def train_ivf_centroids(emb_df, n_lists: int = 16, seed: int = 42, train_limit: 
     return centroids
 
 
-def ivf_assign(emb_df, centroids, vec_col: str = "embedding"):
+def ivf_assign(emb_df, centroids):
     """Add an ``ivf_list`` column: nearest-centroid id, computed as one
     vectorized matmul per Arrow batch (no per-row Python)."""
     from pyspark.sql import functions as F
@@ -373,7 +300,7 @@ def ivf_assign(emb_df, centroids, vec_col: str = "embedding"):
         mat = mat / _safe_norm(mat)
         return pd.Series((mat @ cnorm.T).argmax(axis=1).astype("int32"))
 
-    return emb_df.withColumn("ivf_list", _assign(F.col(vec_col)))
+    return emb_df.withColumn("ivf_list", _assign(F.col("embedding")))
 
 
 def ivf_topk(
@@ -383,8 +310,6 @@ def ivf_topk(
     n_lists: int = 16,
     nprobe: int = 4,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids=None,
 ):
     """IVF approximate top-k: assign the corpus to ``n_lists`` inverted
@@ -398,14 +323,14 @@ def ivf_topk(
 
     if centroids is None:
         centroids = train_ivf_centroids(
-            emb_df, n_lists=n_lists, seed=seed, vec_col=vec_col
+            emb_df, n_lists=n_lists, seed=seed
         )
     cmat = np.asarray(centroids, dtype=np.float64)
     probe = probe_lists(cmat, query_vec, nprobe)
 
-    assigned = ivf_assign(emb_df, cmat, vec_col=vec_col)
+    assigned = ivf_assign(emb_df, cmat)
     candidates = assigned.where(F.col("ivf_list").isin(probe))
-    return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
+    return cosine_topk(candidates, query_vec, k=k)
 
 
 def probe_lists(centroids, query_vec, nprobe: int):
@@ -420,7 +345,7 @@ def probe_lists(centroids, query_vec, nprobe: int):
     return np.argsort(-(cnorm @ q))[:nprobe].tolist()
 
 
-def normalize_column(df, vec_col: str = "embedding", out_col: str = "_nvec"):
+def normalize_column(df, out_col: str = "_nvec"):
     """Add a unit-normalized (float64) copy of the vector column, one
     numpy pass per Arrow batch; zero vectors pass through unscaled."""
     from pyspark.sql import functions as F
@@ -435,7 +360,7 @@ def normalize_column(df, vec_col: str = "embedding", out_col: str = "_nvec"):
         mat = mat / _safe_norm(mat)
         return pd.Series(list(mat))
 
-    return df.withColumn(out_col, _normalize(F.col(vec_col)))
+    return df.withColumn(out_col, _normalize(F.col("embedding")))
 
 
 def round6_half_away(x):
@@ -448,20 +373,20 @@ def round6_half_away(x):
     return np.sign(x) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
 
 
-def scored_smaller_id_mask(mat, threshold, block: int = 256):
+def scored_smaller_id_mask(mat, threshold):
     """For rows sorted ascending by id with unit vectors ``mat``
     (n, d): boolean array where entry i is True iff some j < i has
     ``round6(mat[i] . mat[j]) > threshold`` — the SemDeDup drop rule,
-    computed as blocked matmuls (block x n scores at a time, so memory
-    stays bounded for clusters up to ``max_cluster_rows``) instead of
-    a quadratic pair join."""
+    computed as blocked matmuls (SCORE_BLOCK_ROWS x n scores at a
+    time, so memory stays bounded for clusters up to
+    ``max_cluster_rows``) instead of a quadratic pair join."""
     import numpy as np
 
     n = mat.shape[0]
     out = np.zeros(n, dtype=bool)
     cols = np.arange(n)
-    for s in range(0, n, block):
-        e = min(s + block, n)
+    for s in range(0, n, SCORE_BLOCK_ROWS):
+        e = min(s + SCORE_BLOCK_ROWS, n)
         scores = round6_half_away(mat[s:e] @ mat.T)
         valid = cols[None, :] < np.arange(s, e)[:, None]
         out[s:e] = ((scores > threshold) & valid).any(axis=1)
@@ -473,9 +398,6 @@ def semantic_dedup(
     threshold: float = 0.25,
     n_lists: int = 8,
     seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids=None,
     max_cluster_rows: int | None = 100_000,
 ):
     """SemDeDup-style semantic deduplication: cluster embeddings with
@@ -511,10 +433,7 @@ def semantic_dedup(
     """
     from pyspark.sql import functions as F
 
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            emb_df, n_lists=n_lists, seed=seed, vec_col=vec_col, id_col=id_col
-        )
+    centroids = train_ivf_centroids(emb_df, n_lists=n_lists, seed=seed)
     # pre-normalize ONCE into the checkpointed cluster table (vectorized
     # pandas UDF — an expression-tree norm would be re-inlined per
     # array element by CollapseProject): the pair score becomes a
@@ -522,9 +441,7 @@ def semantic_dedup(
     # pair — measured ~3x on the quadratic stage
     assigned = (
         normalize_column(
-            ivf_assign(emb_df.select(id_col, vec_col), centroids, vec_col=vec_col),
-            vec_col=vec_col,
-            out_col="_nvec",
+            ivf_assign(emb_df.select("vec_id", "embedding"), centroids), out_col="_nvec"
         )
         .withColumnRenamed("ivf_list", "cluster")
         .localCheckpoint(eager=False)
@@ -554,11 +471,11 @@ def semantic_dedup(
 
     from pyspark.sql import types as T
 
-    trimmed = scored.select(id_col, "cluster", "_nvec")
+    trimmed = scored.select("vec_id", "cluster", "_nvec")
     fields = {f.name: f.dataType for f in trimmed.schema.fields}
     out_schema = T.StructType(
         [
-            T.StructField("id", fields[id_col]),
+            T.StructField("id", fields["vec_id"]),
             T.StructField("cluster", fields["cluster"]),
             T.StructField("kept", T.BooleanType()),
         ]
@@ -568,11 +485,11 @@ def semantic_dedup(
         import numpy as np
         import pandas as pd
 
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
+        pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
         mat = np.stack(pdf["_nvec"].to_numpy())
         dropped = scored_smaller_id_mask(mat, threshold)
         return pd.DataFrame(
-            {"id": pdf[id_col], "cluster": pdf["cluster"], "kept": ~dropped}
+            {"id": pdf["vec_id"], "cluster": pdf["cluster"], "kept": ~dropped}
         )
 
     result = (
@@ -583,7 +500,7 @@ def semantic_dedup(
     if capped_ids:
         result = result.unionByName(
             assigned.where(F.col("cluster").isin(capped_ids)).select(
-                F.col(id_col).alias("id"),
+                F.col("vec_id").alias("id"),
                 F.col("cluster"),
                 F.lit(True).alias("kept"),
                 F.lit(True).alias("capped"),
@@ -592,18 +509,18 @@ def semantic_dedup(
     return result
 
 
-def write_ivf_store(emb_df, centroids, path: str, vec_col: str = "embedding"):
+def write_ivf_store(emb_df, centroids, path: str):
     """Materialize the corpus partitioned by inverted list — the
     at-scale layout where a probe becomes a partition-pruned scan: the
     query reads ~nprobe/n_lists of the files and the rest never leave
     storage.  (Iceberg equivalent: ``PARTITIONED BY (ivf_list)`` or a
     bucket transform.)"""
-    ivf_assign(emb_df, centroids, vec_col=vec_col).write.mode(
+    ivf_assign(emb_df, centroids).write.mode(
         "overwrite"
     ).partitionBy("ivf_list").parquet(path)
 
 
-def ivf_topk_from_store(spark, path: str, centroids, query_vec, k: int = 10, nprobe: int = 4, id_col: str = "vec_id", vec_col: str = "embedding"):
+def ivf_topk_from_store(spark, path: str, centroids, query_vec, k: int, nprobe: int):
     """IVF top-k over a partitioned store: the ``ivf_list IN (...)``
     predicate prunes to the probed partitions at the source (visible as
     PartitionFilters in the plan — tests/test_plans.py pins it)."""
@@ -611,4 +528,4 @@ def ivf_topk_from_store(spark, path: str, centroids, query_vec, k: int = 10, npr
 
     probe = probe_lists(centroids, query_vec, nprobe)
     candidates = spark.read.parquet(path).where(F.col("ivf_list").isin(probe))
-    return cosine_topk(candidates, query_vec, k=k, id_col=id_col, vec_col=vec_col)
+    return cosine_topk(candidates, query_vec, k=k)

@@ -211,7 +211,6 @@ def run_with_checkpoint(
     transcripts_df,
     checkpoint_path: str,
     run_id: str,
-    correct_overlapping_cells: bool = False,
 ):
     """Extraction with resume as ONE write action: skip checkpointed
     turns, extract the rest, append them to the checkpoint, and return
@@ -231,9 +230,7 @@ def run_with_checkpoint(
     pending = transcripts_df.observe(seen, F.count(F.lit(1)).alias("rows"))
     if done is not None:
         pending = _pending(pending, done)
-    extracted = extract_transcripts(
-        pending, correct_overlapping_cells=correct_overlapping_cells
-    ).observe(new, F.count(F.lit(1)).alias("rows"))
+    extracted = extract_transcripts(pending).observe(new, F.count(F.lit(1)).alias("rows"))
     write_checkpoint(extracted, checkpoint_path, run_id, stage="extract")
     skipped = seen.get["rows"] - new.get["rows"]
     done = read_checkpoint(spark, checkpoint_path)

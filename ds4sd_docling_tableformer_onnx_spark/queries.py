@@ -36,7 +36,21 @@ def _register(name, fn, oracle=None):
 
 
 def _read(spark, sf_dir, table):
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    """One sf table.  A local single-file table (every sf tier) is read
+    with the schema its parquet footer declares, so building a query
+    frame runs no schema-inference job; timestamps without a zone read
+    as TIMESTAMP_NTZ, as Spark infers them.  Any other path (a
+    Spark-written directory, an object store) keeps Spark's inference."""
+    import os
+
+    path = f"{sf_dir}/{table}.parquet"
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    schema = from_arrow_schema(pq.read_schema(path), prefer_timestamp_ntz=True)
+    return spark.read.schema(schema).parquet(path)
 
 
 def _work_dir(prefix):
@@ -2170,7 +2184,7 @@ def q_dedup_groups(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
     cand = simhash_candidates(simhash_column(docs))
     edges = cand.where(F.col("hamming") <= 3)
-    return dedup_groups(docs, edges, id_col="doc_id")
+    return dedup_groups(docs, edges)
 
 
 _CC_ORACLE_ITERS = 25  # == operators/graph.py connected_components max_iter
@@ -2480,10 +2494,8 @@ _register(
 
 # ---------------------------------------------------------------------------
 # Batched ANN top-k — k nearest for EVERY query vector in one corpus
-# pass.  The oracle-checked form is the exact broadcast-crossJoin +
-# window (JVM expression arithmetic, replicable); the scale operator
-# (operators/similarity.py:batch_topk — partial per-batch top-k, tiny
-# final shuffle) is pinned equal to it in tests/test_operators.py.
+# pass: the exact broadcast-crossJoin + window (JVM expression
+# arithmetic, replicable by the oracle).
 # ---------------------------------------------------------------------------
 
 def q_ann_batch(spark, sf_dir):
@@ -3944,7 +3956,6 @@ def q_semantic_dedup(spark, sf_dir):
             res.join(emb, res["id"] == emb["vec_id"]).select(
                 "id", "cluster", "kept", "capped", "embedding"
             ),
-            vec_col="embedding",
             out_col="nv",
         )
         .select("id", "cluster", "kept", "capped", "nv")
@@ -4182,7 +4193,7 @@ def q_cluster_split(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
     cand = simhash_candidates(simhash_column(docs))
     edges = cand.where(F.col("hamming") <= 3)
-    groups = dedup_groups(docs, edges, id_col="doc_id")
+    groups = dedup_groups(docs, edges)
     return groups.select(
         "doc_id", "group_id", holdout_split("group_id").alias("split")
     )
@@ -5724,8 +5735,7 @@ _register(
 
 # ---------------------------------------------------------------------------
 # Skew-salted dimension join — the explicit form of the skew handling
-# the extraction job gets from AQE + the salted two-phase rollup
-# (operators/extract.py:conversation_summaries).  The documents table
+# the extraction job gets from AQE.  The documents table
 # is deliberately source-skewed (web-corpus domains are Zipfian); the
 # per-source dim here is derived in-query (count + language census per
 # source) and joined back WITHOUT broadcast — the merge hint pins the
@@ -6649,7 +6659,7 @@ def q_canonical_docs(spark, sf_dir):
     docs = _read(spark, sf_dir, "documents")
     cand = simhash_candidates(simhash_column(docs))
     edges = cand.where(F.col("hamming") <= 3)
-    groups = dedup_groups(docs, edges, id_col="doc_id")
+    groups = dedup_groups(docs, edges)
     win = Window.partitionBy("group_id").orderBy(
         F.desc("n_chars"), F.asc("doc_id")
     )

@@ -35,17 +35,15 @@ IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def build_session(
     app_name: str = "ds4sd-docling-tableformer-onnx-spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ):
     from pyspark.sql import SparkSession
 
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
-    if shuffle_partitions is None:
-        # one shuffle partition per core by default; a real cluster would
-        # size this to total executor cores (AQE coalesces the excess)
-        shuffle_partitions = max(cores, 8)
+    # one shuffle partition per core, at least 8; a real cluster would
+    # size this to total executor cores (AQE coalesces the excess)
+    shuffle_partitions = max(cores, 8)
 
     builder = (
         SparkSession.builder.master(f"local[{cores}]")

@@ -8,13 +8,16 @@ Schema (BASELINE.json input_hint):
 Generation is fully distributed and deterministic (seeded hash
 functions, no driver-side loops): ``spark.range`` -> column expressions
 -> broadcast join with the tiny payload-pool dimension table.  One
-conversation receives a configurable share of all turns to exercise the
+conversation receives a fixed share of all turns to exercise the
 skew path (FIXTURES.md §1: a "heavy" conversation with >=100x median
 turns).  Row order is emitted shuffled so stable-ordering logic
 downstream is actually exercised.
 """
 
 from __future__ import annotations
+
+# share of all turns that land in the heavy conversation conv-00000
+HEAVY_SHARE = 0.02
 
 
 def payload_pool_df(spark):
@@ -40,13 +43,12 @@ def generate_transcripts(
     spark,
     n_turns: int,
     n_convs: int | None = None,
-    heavy_share: float = 0.02,
     seed: int = 42,
     shuffle: bool = True,
 ):
     """Deterministic transcript table with ``n_turns`` rows.
 
-    - ``heavy_share`` of all turns land in conversation ``conv-00000``
+    - ``HEAVY_SHARE`` of all turns land in conversation ``conv-00000``
       (the skew probe); the rest hash-distribute over ``n_convs - 1``.
     - ``turn_idx`` is the row's rank within its conversation (dense,
       0-based) — computed distributively with one window.
@@ -62,7 +64,7 @@ def generate_transcripts(
 
     base = spark.range(n_turns).withColumnRenamed("id", "row_id")
     h = F.xxhash64(F.col("row_id"), F.lit(seed))
-    heavy = (F.pmod(h, F.lit(10_000)) < F.lit(int(heavy_share * 10_000)))
+    heavy = (F.pmod(h, F.lit(10_000)) < F.lit(int(HEAVY_SHARE * 10_000)))
     conv_num = F.when(heavy, F.lit(0)).otherwise(
         F.pmod(F.xxhash64(F.col("row_id"), F.lit(seed + 1)), F.lit(max(n_convs - 1, 1))) + 1
     )
@@ -92,5 +94,9 @@ def generate_transcripts(
     out = df.join(F.broadcast(pool.select("payload_id", "text", "tool")), "payload_id")
     out = out.select("conv_id", "turn_idx", "role", "text", "tool", "ts", "payload_id")
     if shuffle:
-        out = out.repartition(64, F.xxhash64("conv_id", "turn_idx"))
+        # one shuffle partition per session core: the extraction stage
+        # that reads this runs one Python task per partition
+        out = out.repartition(
+            spark.sparkContext.defaultParallelism, F.xxhash64("conv_id", "turn_idx")
+        )
     return out

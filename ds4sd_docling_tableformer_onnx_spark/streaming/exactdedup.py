@@ -10,28 +10,17 @@ for cross-shard history too large for stream state is the bloom
 prefilter (operators/dedup.py:bloom_prefilter) in front of this
 operator.
 
-TTL (r4 verdict item 3 — implemented, not just documented): pass
-``ttl_minutes`` and the operator switches to
-``GroupStateTimeout.EventTimeTimeout``: each arrival refreshes the
-key's timeout to ``max(event time in batch) + ttl``, and once the
-stream's watermark passes that point the state record is dropped and
-ONE expiry marker row ``(text_md5, keeper_id = EXPIRED_SENTINEL)`` is
-emitted — the visible expiration counter (count the sentinel rows).
-A key arriving again after expiry is re-admitted and claims a fresh
-keeper: the guarantee becomes keep-first *per TTL window*, which is
-the correct semantics when state must not grow with the distinct-key
-universe forever.  ``ttl_minutes=None`` (default) keeps the exact
-keep-first-ever behavior the DuckDB oracle replicates.
-
 Exactly-once: emission happens in the same micro-batch transaction
 that records the claim, so a replayed batch (checkpoint recovery)
 re-emits the same keepers and suppresses the same duplicates.
 
-RocksDB state store (corpus-scale deployment config, in ONE place for
-all streaming operators here — see :func:`rocksdb_state_conf`): the
-default HDFS-backed in-memory provider holds every key's state on the
-executor heap; at 10^9+ distinct keys switch the provider to RocksDB
-so state lives on local SSD with changelog checkpointing.
+At 10^9+ distinct keys the default HDFS-backed provider's on-heap
+state is the limit: set ``spark.sql.streaming.stateStore.providerClass``
+to ``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``
+and ``spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled``
+to ``true`` before starting the query, so state lives on local SSD and
+each commit uploads per-batch deltas rather than full snapshots.  The
+same two keys move streaming/neardup.py's state.
 """
 
 from __future__ import annotations
@@ -39,110 +28,35 @@ from __future__ import annotations
 STATE_SCHEMA = "claimed boolean"
 OUTPUT_SCHEMA = "text_md5 string, keeper_id long"
 
-#: keeper_id emitted on TTL expiry of a state record (doc ids are
-#: non-negative; consumers filter ``keeper_id >= 0`` for keepers and
-#: count ``== EXPIRED_SENTINEL`` rows for the expiration metric)
-EXPIRED_SENTINEL = -1
+
+def _first_keeper(key, pdfs, state):
+    import pandas as pd
+
+    claimed = state.exists
+    best = None
+    for pdf in pdfs:
+        # the min() is only taken for the FIRST claim: an already-claimed
+        # hot duplicate drains at iterator cost, not pandas reductions
+        if not claimed and len(pdf):
+            m = int(pdf["doc_id"].min())
+            best = m if best is None or m < best else best
+    if not claimed:
+        state.update((True,))
+        if best is not None:
+            yield pd.DataFrame({"text_md5": [key[0]], "keeper_id": [best]})
 
 
-def rocksdb_state_conf() -> dict:
-    """The session conf that moves ALL streaming state (this operator
-    and streaming/neardup.py) off-heap onto RocksDB — apply with
-    ``for k, v in rocksdb_state_conf().items(): spark.conf.set(k, v)``
-    before starting the query.  Kept here so the deployment recipe has
-    one source of truth (r4 verdict item 3)."""
-    return {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-        # changelog checkpointing uploads per-batch deltas instead of
-        # full snapshots — the difference between O(state) and
-        # O(changed keys) per commit at large state volumes
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": (
-            "true"
-        ),
-    }
-
-
-def _make_first_keeper(ttl_ms):
-    def _first_keeper(key, pdfs, state):
-        import pandas as pd
-
-        if ttl_ms is not None and state.hasTimedOut:
-            # watermark passed last-seen + ttl: drop the record and
-            # emit the visible expiry marker (countable metric)
-            state.remove()
-            yield pd.DataFrame(
-                {"text_md5": [key[0]], "keeper_id": [EXPIRED_SENTINEL]}
-            )
-            return
-        claimed = state.exists
-        best = None
-        max_ts = None
-        for pdf in pdfs:
-            if len(pdf):
-                # the min() is only consumed on the FIRST claim and the
-                # ts max only in TTL mode: an already-claimed hot
-                # duplicate in NoTimeout mode must drain at iterator
-                # cost, not pay pandas reductions per batch
-                if not claimed:
-                    m = int(pdf["doc_id"].min())
-                    best = m if best is None or m < best else best
-                if ttl_ms is not None:
-                    t = pdf["ts"].max()
-                    max_ts = t if max_ts is None or t > max_ts else t
-        if not claimed:
-            state.update((True,))
-            if best is not None:
-                yield pd.DataFrame({"text_md5": [key[0]], "keeper_id": [best]})
-        # already-claimed arrivals drain with no emission, but still
-        # refresh the TTL: a key must expire ttl after its LAST sight,
-        # not its first, or a hot duplicate would be re-admitted while
-        # still arriving.  Clamp to watermark+1: a LATE batch (max ts
-        # behind the watermark) must refresh to the nearest legal
-        # instant, not crash the query with INVALID_TIMEOUT_TIMESTAMP.
-        if ttl_ms is not None and max_ts is not None:
-            target = int(max_ts.value // 1_000_000) + ttl_ms
-            state.setTimeoutTimestamp(
-                max(target, state.getCurrentWatermarkMs() + 1)
-            )
-
-    return _first_keeper
-
-
-def stream_exact_dedup(
-    doc_stream,
-    *,
-    ttl_minutes: float | None = None,
-    ts_col: str = "ts",
-    watermark_delay: str = "0 seconds",
-):
-    """(doc_id, text[, ts]) append stream -> (text_md5, keeper_id)
-    append stream with one emission per distinct content key — ever
-    (``ttl_minutes=None``) or per TTL window (event-time timeout; see
-    module docstring for the expiry-marker contract)."""
+def stream_exact_dedup(doc_stream):
+    """(doc_id, text) append stream -> (text_md5, keeper_id) append
+    stream with one emission per distinct content key, ever."""
     from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if ttl_minutes is None:
-        keyed = doc_stream.select(F.md5("text").alias("text_md5"), "doc_id")
-        return keyed.groupBy("text_md5").applyInPandasWithState(
-            _make_first_keeper(None),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    keyed = doc_stream.withWatermark(ts_col, watermark_delay).select(
-        F.md5("text").alias("text_md5"),
-        "doc_id",
-        F.col(ts_col).alias("ts"),
-    )
+    keyed = doc_stream.select(F.md5("text").alias("text_md5"), "doc_id")
     return keyed.groupBy("text_md5").applyInPandasWithState(
-        _make_first_keeper(int(ttl_minutes * 60_000)),
+        _first_keeper,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

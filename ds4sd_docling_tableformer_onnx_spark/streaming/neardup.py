@@ -17,7 +17,7 @@ State boundedness (the only shape that survives an unbounded stream):
 - state per bucket is (ids, sigs) arrays — ~16 B per document per
   band, and bucket population is corpus_size / 2^BAND_BITS per band in
   expectation;
-- ``max_state_rows`` caps a bucket's stored population: once full,
+- ``MAX_STATE_ROWS`` caps a bucket's stored population: once full,
   new arrivals still COMPARE against the stored rows (and emit their
   pairs) but are not retained, and the drop is counted in state —
   the same skew discipline as the batch LSH bucket cap (a degenerate
@@ -40,6 +40,9 @@ from ..operators.dedup import BAND_BITS, BAND_MASK, N_BANDS
 
 OUTPUT_SCHEMA = "id_a bigint, id_b bigint, hamming bigint"
 STATE_SCHEMA = "ids array<bigint>, sigs array<bigint>, dropped bigint"
+
+# signatures a (band, key) bucket stores before it stops retaining arrivals
+MAX_STATE_ROWS = 65536
 
 
 def _make_update(max_state_rows: int):
@@ -127,29 +130,22 @@ def _make_update(max_state_rows: int):
     return _update
 
 
-def stream_neardup_candidates(
-    docs_stream,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_state_rows: int = 65536,
-):
-    """Streaming documents (id, text, ...) -> append stream of
+def stream_neardup_candidates(docs_stream):
+    """Streaming documents (doc_id, text, ...) -> append stream of
     (id_a, id_b, hamming) simhash candidate pairs, equal to the batch
     ``simhash_candidates`` output over the same rows."""
-    from pyspark.sql import functions as F
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from ..operators.dedup import band_layout, simhash_bands, simhash_column
 
     banded = band_layout(
-        simhash_column(docs_stream, text_col=text_col),
+        simhash_column(docs_stream),
         simhash_bands("simhash"),
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         "simhash",
     ).drop("bands")
     return banded.groupBy("band", "key").applyInPandasWithState(
-        _make_update(max_state_rows),
+        _make_update(MAX_STATE_ROWS),
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

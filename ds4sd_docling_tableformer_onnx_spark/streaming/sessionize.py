@@ -37,8 +37,8 @@ content comes from state, not from when the flush fires.
 
 Scale shape: one shuffle on user_id (the conversation key the
 extraction pipeline already partitions by), state bounded by OPEN
-sessions (not history), RocksDB swap via
-streaming/exactdedup.rocksdb_state_conf.
+sessions (not history), RocksDB swap via the two state-store conf
+keys streaming/exactdedup.py's docstring names.
 """
 
 from __future__ import annotations

@@ -19,25 +19,25 @@ TRANSCRIPT_SCHEMA = (
 )
 
 
-def stream_extract(spark, input_dir: str, schema: str = TRANSCRIPT_SCHEMA):
+def stream_extract(spark, input_dir: str):
     """File-source streaming extraction (on a cluster: Iceberg/Kafka
     source; identical transformation graph)."""
     from ..operators.extract import extract_transcripts
 
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", 8)
         .parquet(input_dir)
     )
     return extract_transcripts(stream)
 
 
-def run_to_completion(stream_df, output_dir: str, checkpoint_dir: str, mode: str = "append"):
+def run_to_completion(stream_df, output_dir: str, checkpoint_dir: str):
     """Drain all currently-available input (Trigger.AvailableNow) into a
     parquet sink with an exactly-once checkpoint; returns the query."""
     query = (
         stream_df.writeStream.format("parquet")
-        .outputMode(mode)
+        .outputMode("append")
         .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

@@ -237,7 +237,7 @@ def curate(
     # 1. near-dup groups -> canonical survivor per group
     cand = simhash_candidates(simhash_column(docs), id_col="doc_id")
     edges = cand.where(F.col("hamming") <= hamming)
-    groups = dedup_groups(docs, edges, id_col="doc_id")
+    groups = dedup_groups(docs, edges)
     joined = docs.join(groups, "doc_id")
     if keep_best:
         # canonical_docs policy: longest live text wins, ties to the

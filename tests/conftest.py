@@ -29,6 +29,6 @@ def fixture_pool():
 def spark():
     from ds4sd_docling_tableformer_onnx_spark.session import build_session
 
-    spark = build_session(app_name="tests", cores=4, shuffle_partitions=8)
+    spark = build_session(app_name="tests", cores=4)
     yield spark
     spark.stop()

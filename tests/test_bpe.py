@@ -106,7 +106,7 @@ def test_bpe_encode_replays_training(spark):
         char_tokens(df).select("doc_id", "toks"), rounds=6
     )
     trainer_streams = {r["doc_id"]: r["toks"] for r in final.collect()}
-    encoded = bpe_encode(df, merges, text_col="text", out_col="tokens")
+    encoded = bpe_encode(df, merges)
     got = {r["doc_id"]: r["tokens"] for r in encoded.collect()}
     assert got == trainer_streams
     _, exp_streams = ref_bpe(DOCS, 6)

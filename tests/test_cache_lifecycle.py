@@ -87,7 +87,7 @@ def test_operators_leave_no_cached_relation(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     frames = [
-        simhash_candidates(simhash_column(docs, text_col="text"), id_col="doc_id"),
+        simhash_candidates(simhash_column(docs), id_col="doc_id"),
         lsh_neardup_pairs(emb, n_planes=8),
         strip_duplicated_substrings(docs),
         duplicated_span_stats(docs),

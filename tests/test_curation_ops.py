@@ -106,72 +106,6 @@ def test_stream_exact_dedup_suppresses_cross_batch_dups(spark):
     assert len(evens) == n_docs // 2
 
 
-def test_stream_exact_dedup_ttl_expires_and_readmits(spark, tmp_path):
-    """Event-time TTL (r4 verdict item 3): a claimed key whose state
-    outlives ``ttl`` past its LAST sighting is expired — visibly, via
-    one EXPIRED_SENTINEL marker row — and a later arrival of the same
-    content is re-admitted with a fresh keeper.  Batches are one file
-    each (maxFilesPerTrigger=1) so the watermark advances
-    deterministically between them."""
-    import datetime as dt
-
-    from ds4sd_docling_tableformer_onnx_spark.streaming.exactdedup import (
-        EXPIRED_SENTINEL,
-        stream_exact_dedup,
-    )
-
-    def ts(minute):
-        return dt.datetime(2026, 1, 1, 10, 0) + dt.timedelta(minutes=minute)
-
-    in_dir = tmp_path / "in"
-    batches = [
-        [(1, "dup text", ts(0))],                       # A claims (keeper 1)
-        [(2, "dup text", ts(5))],                       # A suppressed, TTL -> 10:15
-        [(10, "other b", ts(60))],                      # watermark -> 11:00
-        [(20, "other c", ts(70))],                      # A's timeout fires here
-        [(99, "dup text", ts(90))],                     # A re-admitted (keeper 99)
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(
-            rows, "doc_id long, text string, ts timestamp"
-        ).coalesce(1).write.parquet(str(in_dir / f"b{i}"))
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir / "*"))
-    )
-    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    query = (
-        stream_exact_dedup(stream, ttl_minutes=10)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    pdf = spark.read.parquet(out_dir).toPandas()
-
-    import hashlib
-
-    a_md5 = hashlib.md5(b"dup text").hexdigest()
-    a_rows = pdf[pdf["text_md5"] == a_md5].sort_values("keeper_id")
-    # one expiry marker (the countable drop metric), two keeper claims
-    assert list(a_rows["keeper_id"]) == [EXPIRED_SENTINEL, 1, 99]
-    # doc 2 (within-TTL duplicate) never surfaced
-    assert 2 not in set(pdf["keeper_id"])
-    # the filler keys each claim exactly one keeper; the final
-    # watermark (11:30, from the last batch) passes BOTH their
-    # timeouts (11:10 / 11:20), so each also expires with one marker
-    # in the end-of-stream timeout batch — deterministic here, and
-    # exactly the "state does not outlive ttl" guarantee under test
-    others = pdf[pdf["text_md5"] != a_md5]
-    assert sorted(others[others["keeper_id"] >= 0]["keeper_id"]) == [10, 20]
-    assert (others["keeper_id"] == EXPIRED_SENTINEL).sum() == 2
-
-
 def test_dedup_substrings_removal_semantics(spark):
     """Untouched docs hash to their original single-space re-join;
     touched docs hash to something else; removal counts are bounded by

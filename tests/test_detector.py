@@ -138,7 +138,7 @@ def test_detections_feed_quality_gates(spark):
     matched_ious, delta_pct = image_quality(dets, dets)
     mean_iou = sum(matched_ious) / len(matched_ious)
     iou50 = sum(1 for i in matched_ious if i >= 0.5) / len(matched_ious)
-    assert acceptance(mean_iou, iou50, delta_pct)
+    assert acceptance(mean_iou, iou50, delta_pct, speedup_ok=True, size_ok=False)
 
 
 def _batch_echo_predict(pixels, width, height):

@@ -350,51 +350,6 @@ def test_dedup_groups_covers_isolated_ids(spark):
     assert len(rows) == 8
 
 
-# ---------------------------------------------------------------------------
-# Batched ANN top-k: the partial-topk scale operator must equal the
-# exact broadcast-crossJoin+window form (whose own oracle is
-# ann_batch_topk)
-# ---------------------------------------------------------------------------
-
-def test_batch_topk_equals_exact(spark):
-    from ds4sd_docling_tableformer_onnx_spark.operators.similarity import (
-        batch_topk,
-    )
-    from ds4sd_docling_tableformer_onnx_spark.queries import QUERIES
-
-    sf = "/root/testdata/sf0.001"
-    exact = [
-        (r["query_id"], r["vec_id"], r["cosine"])
-        for r in QUERIES["ann_batch_topk"](spark, sf)
-        .orderBy("query_id", "vec_id")
-        .collect()
-    ]
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    qs = [
-        (r["vec_id"], list(r["embedding"]))
-        for r in emb.where("vec_id < 5").orderBy("vec_id").collect()
-    ]
-    approx_df = batch_topk(emb.where("vec_id >= 5"), qs, k=10)
-    approx = [
-        (r["query_id"], r["vec_id"], r["cosine"])
-        for r in approx_df.orderBy("query_id", "vec_id").collect()
-    ]
-    assert approx == exact
-
-    # many tiny Arrow batches (forces real partial-topk merging)
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "32")
-    try:
-        again = [
-            (r["query_id"], r["vec_id"], r["cosine"])
-            for r in batch_topk(emb.where("vec_id >= 5"), qs, k=10)
-            .orderBy("query_id", "vec_id")
-            .collect()
-        ]
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-    assert again == exact
-
-
 def test_pagerank_matches_python_reference(spark):
     """pagerank on a small asymmetric graph equals a plain-Python
     implementation of the same fixed-iteration update, and the total

@@ -54,10 +54,11 @@ def test_greedy_match_claims_best_first():
 
 
 def test_acceptance_thresholds():
-    assert acceptance(0.995, 1.0, 0.5)
-    assert not acceptance(0.98, 1.0, 0.5)       # mean IoU too low
-    assert not acceptance(0.995, 0.99, 0.5)     # IoU@0.5 too low
-    assert not acceptance(0.995, 1.0, 1.5)      # box delta too large
+    assert acceptance(0.995, 1.0, 0.5, speedup_ok=True, size_ok=False)
+    assert acceptance(0.995, 1.0, 0.5, speedup_ok=False, size_ok=True)
+    assert not acceptance(0.98, 1.0, 0.5, True, False)     # mean IoU too low
+    assert not acceptance(0.995, 0.99, 0.5, True, False)   # IoU@0.5 too low
+    assert not acceptance(0.995, 1.0, 1.5, True, False)    # box delta too large
     assert not acceptance(0.995, 1.0, 0.5, speedup_ok=False, size_ok=False)
 
 

@@ -430,52 +430,6 @@ def test_stream_sessionize_planted_cross_batch(spark, tmp_path):
     assert any(u == 2 and n == 2 for u, _s, _e, n in got)
 
 
-def test_stream_exact_dedup_ttl_survives_late_batch(spark, tmp_path):
-    """Self-review regression (r5): a LATE batch (its max ts behind the
-    already-advanced watermark) used to set a timeout below the
-    watermark and crash the query with INVALID_TIMEOUT_TIMESTAMP; the
-    refresh is now clamped to watermark+1 and the stream completes with
-    keep-first semantics intact."""
-    import datetime as dt
-
-    from ds4sd_docling_tableformer_onnx_spark.streaming.exactdedup import (
-        stream_exact_dedup,
-    )
-
-    def ts(minute):
-        return dt.datetime(2026, 3, 1, 9, 0) + dt.timedelta(minutes=minute)
-
-    in_dir = tmp_path / "in"
-    batches = [
-        [(1, "k", ts(0)), (5, "w", ts(120))],  # watermark -> 11:00
-        [(2, "k", ts(1))],  # LATE duplicate: 9:01 + ttl << watermark
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(
-            rows, "doc_id long, text string, ts timestamp"
-        ).coalesce(1).write.parquet(str(in_dir / f"b{i}"))
-    stream = (
-        spark.readStream.schema("doc_id long, text string, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(in_dir / "*"))
-    )
-    query = (
-        stream_exact_dedup(stream, ttl_minutes=10)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()  # the pre-fix operator raises here
-    pdf = spark.read.parquet(str(tmp_path / "out"))
-    keepers = {
-        r.keeper_id for r in pdf.where("keeper_id >= 0").collect()
-    }
-    assert keepers == {1, 5}  # late duplicate suppressed, no crash
-
-
 def test_stream_sessionize_drops_late_rows(spark, tmp_path):
     """Self-review regression (r5): a cross-batch LATE event (behind
     the watermark) used to rewind the open session's end and split a

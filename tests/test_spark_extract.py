@@ -1,11 +1,10 @@
 """Spark-level extraction: end-to-end per-turn equality, stable
-ordering, conversation rollups, checkpoint resume."""
+ordering, checkpoint resume."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from ds4sd_docling_tableformer_onnx_spark.operators.extract import (
-    conversation_summaries,
     extract_transcripts,
     ordered_conversation_view,
     verify_against_pool,
@@ -45,14 +44,6 @@ def test_stable_turn_ordering(extracted):
     view = ordered_conversation_view(extracted)
     bad = view.where(F.col("turn_rank") != F.col("turn_idx") + 1).count()
     assert bad == 0  # rank under the window == generated turn order
-
-
-def test_conversation_summaries_cover_all_turns(extracted, spark):
-    summaries = conversation_summaries(extracted)
-    total = summaries.agg(F.sum("turns")).first()[0]
-    assert total == N_TURNS
-    heavy = summaries.where(F.col("conv_id") == "conv-00000").first()
-    assert heavy is not None  # skewed conversation exists
 
 
 def test_partition_metrics(extracted):

@@ -96,7 +96,7 @@ def _distinct_worker():
     distinct payload in each batch and must close it when closed."""
     from ds4sd_docling_tableformer_onnx_spark.operators.extract import _distinct_payloads
 
-    return _distinct_payloads(_pool_batches(), False)
+    return _distinct_payloads(_pool_batches())
 
 
 def test_suspended_gc_restores_on_generator_close():

@@ -18,6 +18,7 @@ from hypothesis import strategies as st
 
 from ds4sd_docling_tableformer_onnx_spark.core import pipeline
 from ds4sd_docling_tableformer_onnx_spark.operators.extract import (
+    MAX_TAGS,
     OUTPUT_COLUMNS,
     _distinct_payloads,
     _extract_batches,
@@ -122,6 +123,24 @@ def overflowing_bbox(draw):
     return _dumps(text, tool, draw(st.sampled_from(["1e999", "-1e999"])))
 
 
+def _long_stream(text, key, n):
+    """``text`` with its ``key`` field set to its own tag stream
+    repeated to ``n`` tags."""
+    stream = text[_tag_key(text)]
+    text[key] = (stream * (n // len(stream) + 1))[:n]
+    return json.dumps(text)
+
+
+@st.composite
+def huge_tags(draw):
+    """A tag stream of 10^4 or more tags, far past what the decoder
+    emits, in any of the three tag fields."""
+    e = draw(entries)
+    text = json.loads(e["text"])
+    key = draw(st.sampled_from([_tag_key(text), "raw_tags"]))
+    return _long_stream(text, key, draw(st.integers(10_000, 30_000))), e["tool"]
+
+
 @st.composite
 def null_part(draw):
     e = draw(entries)
@@ -134,6 +153,7 @@ BAD = st.one_of(
     wrong_field_type(),
     non_finite_bbox(),
     overflowing_bbox(),
+    huge_tags(),
     null_part(),
 )
 PAYLOAD = st.one_of(good(), empty_tags(), BAD.map(lambda pair: (*pair, "bad")))
@@ -180,7 +200,7 @@ def _check_rows(batches, outs):
 def test_malformed_payloads_give_one_error_row_each(drawn):
     batches, expected = drawn
     per_row = list(_extract_batches(iter(batches), False))
-    distinct = list(_distinct_payloads(iter(batches), False))
+    distinct = list(_distinct_payloads(iter(batches)))
     _check_rows(batches, per_row)
     _check_rows(batches, distinct)
 
@@ -218,11 +238,45 @@ def test_an_overflowing_bbox_literal_is_an_error_row_on_both_paths():
             "tool": [tool for _, tool in pairs],
         }
     )
-    for worker in (_extract_batches, _distinct_payloads):
-        rows = pa.Table.from_batches(worker(iter([batch]), False)).to_pylist()
+    for rows in _both_workers(batch):
         assert len(rows) == len(pairs)
         for row in rows:
             assert row["ok"] is False and "non-finite" in row["err"], row
+
+
+def _both_workers(batch):
+    """The rows the per-row worker and the distinct-payload wrapper give
+    for one batch."""
+    return [
+        pa.Table.from_batches(out).to_pylist()
+        for out in (_extract_batches(iter([batch]), False), _distinct_payloads(iter([batch])))
+    ]
+
+
+def test_a_tag_stream_past_the_decoder_limit_is_an_error_row_on_both_paths():
+    """One tag more than ``MAX_TAGS`` in ``tag_seq``, ``otsl`` or
+    ``raw_tags`` of the pool's first payload of each kind gives an error
+    row; no pool payload comes near the limit."""
+    assert max(len(json.loads(e["text"])[_tag_key(json.loads(e["text"]))]) for e in POOL) < MAX_TAGS
+    texts, tools = [], []
+    for kind in sorted({e["kind"] for e in POOL}):
+        e = next(e for e in POOL if e["kind"] == kind)
+        text = json.loads(e["text"])
+        for key in (_tag_key(text), "raw_tags"):
+            texts.append(_long_stream(json.loads(e["text"]), key, MAX_TAGS + 1))
+            tools.append(e["tool"])
+    batch = pa.RecordBatch.from_pydict(
+        {
+            "conv_id": [f"c{i}" for i in range(len(texts))],
+            "turn_idx": pa.array(range(len(texts)), pa.int32()),
+            "text": texts,
+            "tool": tools,
+        }
+    )
+    for rows in _both_workers(batch):
+        assert len(rows) == len(texts)
+        for row in rows:
+            assert row["ok"] is False and f"at most {MAX_TAGS}" in row["err"], row
 
 
 def _repeating_batches():
@@ -251,7 +305,9 @@ def _parses(text, tool):
         return False
 
 
-@pytest.mark.parametrize("correct_overlapping_cells", [False, True])
+# the Spark path runs the worker with the overlap fix off; the per-row
+# worker's True path is pinned by test_row_contracts
+@pytest.mark.parametrize("correct_overlapping_cells", [False])
 def test_worker_runs_once_per_distinct_payload_per_batch(monkeypatch, correct_overlapping_cells):
     """``extract_turn`` runs once per distinct payload that reaches it in
     each batch, and every output row equals the per-row worker's."""
@@ -267,7 +323,7 @@ def test_worker_runs_once_per_distinct_payload_per_batch(monkeypatch, correct_ov
 
     per_row = pa.Table.from_batches(_extract_batches(iter(batches), correct_overlapping_cells))
     per_row_calls, calls[:] = len(calls), []
-    outs = list(_distinct_payloads(iter(batches), correct_overlapping_cells))
+    outs = list(_distinct_payloads(iter(batches)))
 
     pairs = [
         list(zip(b.column("text").to_pylist(), b.column("tool").to_pylist())) for b in batches
